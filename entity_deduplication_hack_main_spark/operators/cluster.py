@@ -18,6 +18,7 @@ pathological inputs.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,11 +33,12 @@ def _checksum(labels: DataFrame) -> int:
     return hash((str(row["c"]), row["n"]))
 
 
-def _local_union_find(edge_rows) -> list[tuple]:
+def _local_union_find(edge_rows) -> tuple[list, list]:
     """Driver-side union-find with path compression over EDGE ENDPOINTS
-    ONLY; labels = min member. Identical labels to the distributed loop for
-    every edge-touched node — isolated vertices never reach the driver
-    (they are attached distributedly as singletons by the caller)."""
+    ONLY; returns the (nodes, labels) columns, label = min member.
+    Identical labels to the distributed loop for every edge-touched node —
+    isolated vertices never reach the driver (they are attached
+    distributedly as singletons by the caller)."""
     parent: dict = {}
 
     def find(x):
@@ -61,7 +63,8 @@ def _local_union_find(edge_rows) -> list[tuple]:
         union(r[0], r[1])
         nodes.add(r[0])
         nodes.add(r[1])
-    return [(n, find(n)) for n in nodes]
+    nodes = list(nodes)
+    return nodes, [find(n) for n in nodes]
 
 
 def connected_components(
@@ -121,12 +124,12 @@ def _connected_components_impl(
     if head is not None and len(head) <= local_threshold:
         spark = edges.sparkSession
         t = edges.schema["id1"].dataType.simpleString()
-        schema = f"node {t}, cluster_id {t}"
-        rows = _local_union_find(head)
-        labels = (
-            spark.createDataFrame(rows, schema)
-            if rows
-            else spark.createDataFrame([], schema)
+        nodes, roots = _local_union_find(head)
+        # Arrow columns, not pickled rows: the JVM reads the batches
+        # directly, no Python-worker job (empty columns cast to `t` too)
+        labels = spark.createDataFrame(
+            pa.table({"node": nodes, "cluster_id": roots}),
+            f"node {t}, cluster_id {t}",
         )
         if vertices is None:
             return labels
@@ -254,9 +257,16 @@ def cluster_representatives(
     # lowest id on ties — instead of negating the id, which crashed under
     # ANSI for string ids (streaming uses URLs as ids; run_dedup exposes
     # --id-col). Identical pick to the previous max(struct(ord, -id)).
+    # The leading isNull flag makes a NULL order value lose (min puts NULL
+    # first), as in the oracle's ORDER BY n_chars DESC (NULLS LAST);
+    # pii_redact orders by length(text), NULL for NULL text.
     grp = j.groupBy("cluster_id").agg(
         F.min(
-            F.struct((-F.col("_ord")).alias("_no"), F.col("_rid").alias("_rid"))
+            F.struct(
+                F.col("_ord").isNull().alias("_null"),
+                (-F.col("_ord")).alias("_no"),
+                F.col("_rid").alias("_rid"),
+            )
         ).alias("_best"),
         F.count("*").alias("n_members"),
     )

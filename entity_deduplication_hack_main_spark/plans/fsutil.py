@@ -7,7 +7,7 @@ quietly restart from scratch on exactly the deployments ``run_dedup.py``
 advertises. Every existence/listing check now goes through
 ``Path.getFileSystem`` with the live Hadoop configuration, so ``file:``,
 ``s3a://``, ``hdfs://`` (any scheme with a registered FS) behave
-identically. All calls are metadata-only.
+identically. All calls but ``write_atomic`` are metadata-only.
 """
 
 from __future__ import annotations
@@ -41,3 +41,25 @@ def list_files(
         if st.isFile() and name.endswith(suffix):
             out.append((name, int(st.getLen())))
     return sorted(out)
+
+
+def write_atomic(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` as the file ``path``: the bytes go to a hidden sibling
+    (``.<name>.tmp``) that is renamed into place once closed, so a crash
+    leaves at most a dot-file, which Spark's file listing skips, never a
+    torn file under the final name."""
+    fs, p = _fs_path(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(
+        p.getParent(), f".{p.getName()}.tmp"
+    )
+    try:
+        out = fs.create(tmp, True)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+        if not fs.rename(tmp, p):
+            raise OSError(f"rename to {path} failed")
+    except BaseException:
+        fs.delete(tmp, False)
+        raise

@@ -11,8 +11,12 @@ Iceberg writer can be slotted in behind ``StageCommitter`` unchanged):
 - each stage writes its output DataFrame to ``<workdir>/<stage>/`` via
   Spark's committed parquet write (the ``_SUCCESS`` marker IS the atomic
   commit record);
-- after commit, per-output-file row counts (the written partition layout)
-  plus wall time land in ``<workdir>/_lineage/`` as append-only parquet;
+- after commit, per-output-file byte counts (the written partition
+  layout), the stage's observed row counts and its wall time land in
+  ``<workdir>/_lineage/`` as append-only parquet. The driver serializes
+  those few rows with ``pyarrow`` and writes one file per stage through
+  the Hadoop FileSystem (temp name, then rename) — no Spark job, and the
+  same ``s3a://``/``hdfs://`` workdirs as the stage outputs;
 - on re-run, a stage whose ``_SUCCESS`` exists is *skipped* and its output
   read back — resume from last committed checkpoint for free.
 
@@ -22,20 +26,47 @@ The reference's analog is the append-only ``runtimes.txt`` log
 
 from __future__ import annotations
 
+import io
 import os
 import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-LINEAGE_SCHEMA = (
-    "run_id string, stage string, file string, input_rows bigint, "
-    "rows bigint, bytes bigint, wall_ms bigint, resumed boolean, "
-    "committed_at timestamp"
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
 )
-# Existence/listing checks go through the Hadoop FileSystem (plans/fsutil)
-# so resume works on s3a://-style workdirs, not just local paths
-# (metadata-only either way).
+
+from entity_deduplication_hack_main_spark.plans import fsutil
+
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("stage", StringType()),
+        StructField("file", StringType()),
+        StructField("input_rows", LongType()),
+        StructField("rows", LongType()),
+        StructField("bytes", LongType()),
+        StructField("wall_ms", LongType()),
+        StructField("resumed", BooleanType()),
+        StructField("committed_at", TimestampType()),
+    ]
+)
+# committed_at becomes a UTC-adjusted timestamp, which Spark reads back as
+# `timestamp` (older, Spark-written files hold INT96; both read the same)
+_ARROW_LINEAGE_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
+# Existence/listing checks and lineage writes go through the Hadoop
+# FileSystem (plans/fsutil) so resume works on s3a://-style workdirs, not
+# just local paths.
 
 
 class StageCommitter:
@@ -60,8 +91,6 @@ class StageCommitter:
         return os.path.join(self.workdir, stage)
 
     def _committed(self, stage: str) -> bool:
-        from entity_deduplication_hack_main_spark.plans import fsutil
-
         return fsutil.exists(
             self.spark, os.path.join(self._path(stage), "_SUCCESS")
         )
@@ -98,16 +127,15 @@ class StageCommitter:
         return out
 
     def _list_files(self, stage: str) -> list[tuple[str, int]]:
-        from entity_deduplication_hack_main_spark.plans import fsutil
-
         return fsutil.list_files(self.spark, self._path(stage), ".parquet")
 
     def _write_lineage(
         self, stage: str, rows: int | None, wall_ms: int, resumed: bool
     ) -> None:
         files = self._list_files(stage)
+        now = datetime.now(timezone.utc)
         recs = [
-            (self.run_id, stage, f, None, None, int(sz), wall_ms, resumed)
+            (self.run_id, stage, f, None, None, int(sz), wall_ms, resumed, now)
             for f, sz in files
         ]
         # `_total` row carries observed input/output row counts (None on
@@ -122,26 +150,29 @@ class StageCommitter:
                 sum(sz for _, sz in files),
                 wall_ms,
                 resumed,
+                now,
             )
         )
-        df = self.spark.createDataFrame(
-            recs,
-            "run_id string, stage string, file string, input_rows bigint, "
-            "rows bigint, bytes bigint, wall_ms bigint, resumed boolean",
-        ).withColumn("committed_at", F.current_timestamp())
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.workdir, "_lineage")
+        table = pa.Table.from_arrays(
+            [list(col) for col in zip(*recs)], schema=_ARROW_LINEAGE_SCHEMA
+        )
+        buf = io.BytesIO()
+        pq.write_table(table, buf)
+        fsutil.write_atomic(
+            self.spark,
+            os.path.join(
+                self.workdir, "_lineage", f"part-{uuid.uuid4().hex}.parquet"
+            ),
+            buf.getvalue(),
         )
         self.events.append(
             {"stage": stage, "rows": rows, "wall_ms": wall_ms, "resumed": resumed}
         )
 
     def lineage(self) -> DataFrame | None:
-        from entity_deduplication_hack_main_spark.plans import fsutil
-
         if self.workdir is None:
             return None
         path = os.path.join(self.workdir, "_lineage")
         if not fsutil.exists(self.spark, path):
             return None
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(path)

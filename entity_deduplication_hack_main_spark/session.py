@@ -12,6 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g, as a JVM size string. A fixed
+    24g heap overcommits smaller hosts: the kernel OOM-kills the driver
+    JVM once the heap grows past RAM. Falls back to the cap where the
+    platform does not report its RAM."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return f"{_MAX_DRIVER_MB}m"
+    return f"{min(_MAX_DRIVER_MB, ram_mb // 2)}m"
+
 
 def get_spark(
     parallelism: int | None = None,
@@ -22,6 +36,7 @@ def get_spark(
     """Build (or fetch) a local SparkSession.
 
     parallelism: local[N] cores; default $SPARK_GRAFT_CPUS or 32.
+    Driver heap: $SPARK_DRIVER_MEM, else ``default_driver_memory()``.
     shuffle_partitions: default = 3x parallelism — over-partitioning cuts
         the straggler tail of compute-skewed stages (with exactly N
         partitions on N cores one slow partition idles N-1 cores), and
@@ -39,6 +54,7 @@ def get_spark(
         (warm 5k pipeline ~3.9s either way, r02 judge: 3.8 vs 3.1s) is
         accepted.
     """
+    heap = os.environ.get("SPARK_DRIVER_MEM", default_driver_memory())
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sp = shuffle_partitions or (3 * cpus)
     builder = (
@@ -53,7 +69,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -3,6 +3,8 @@ evaluation metrics, similarity scalar functions."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,12 +43,46 @@ def test_connected_components_long_chain_converges(spark):
     assert out.count() == n + 1
 
 
+def _labels(df):
+    return Counter((r["node"], r["cluster_id"]) for r in df.collect())
+
+
 def test_connected_components_string_ids(spark):
     edges = spark.createDataFrame(
-        [("url:b", "url:a"), ("url:b", "url:c")], "id1 string, id2 string"
+        [("url:b", "url:a"), ("url:b", "url:c"), ("url:x", "url:y")],
+        "id1 string, id2 string",
     )
-    out = {r["node"]: r["cluster_id"] for r in cluster.connected_components(edges).collect()}
-    assert set(out.values()) == {"url:a"}
+    out = cluster.connected_components(edges)
+    assert out.schema.simpleString() == "struct<node:string,cluster_id:string>"
+    assert _labels(out) == Counter(
+        {("url:a", "url:a"): 1, ("url:b", "url:a"): 1, ("url:c", "url:a"): 1,
+         ("url:x", "url:x"): 1, ("url:y", "url:x"): 1}
+    )
+
+
+def test_connected_components_string_ids_with_universe(spark):
+    edges = spark.createDataFrame(
+        [("url:b", "url:a"), ("url:c", "url:b")], "id1 string, id2 string"
+    )
+    verts = spark.createDataFrame(
+        [("url:a",), ("url:b",), ("url:c",), ("url:z",), ("url:z",)], "id string"
+    )
+    out = cluster.connected_components(edges, verts)
+    assert _labels(out) == Counter(
+        {("url:a", "url:a"): 1, ("url:b", "url:a"): 1, ("url:c", "url:a"): 1,
+         ("url:z", "url:z"): 1}
+    )
+
+
+def test_connected_components_string_ids_no_edges(spark):
+    edges = spark.createDataFrame([], "id1 string, id2 string")
+    out = cluster.connected_components(edges)
+    assert out.schema.simpleString() == "struct<node:string,cluster_id:string>"
+    assert out.count() == 0
+    verts = spark.createDataFrame([("u1",), ("u2",)], "id string")
+    assert _labels(cluster.connected_components(edges, verts)) == Counter(
+        {("u1", "u1"): 1, ("u2", "u2"): 1}
+    )
 
 
 def test_salted_pairs_equal_unsalted(spark):
@@ -1084,6 +1120,23 @@ def test_cluster_representatives_matches_window_rule(spark):
         map(tuple, want.collect())
     )
     assert got.count() == 37
+
+
+def test_cluster_representatives_null_order_loses(spark):
+    """A member whose order value is NULL (pii_redact orders by
+    length(text), NULL for NULL text) never beats a non-NULL member; a
+    cluster of NULLs only still gets its lowest id."""
+    from entity_deduplication_hack_main_spark.operators import cluster as cc
+
+    asn = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)], "node long, cluster_id long"
+    )
+    docs = spark.createDataFrame(
+        [(1, None), (2, 3), (3, 8), (4, None), (5, None)],
+        "doc_id long, n_chars int",
+    )
+    got = Counter(map(tuple, cc.cluster_representatives(asn, docs).collect()))
+    assert got == Counter({(3, 1, 3): 1, (4, 4, 2): 1})
 
 
 def test_cluster_sample_weights_unit_mass_per_cluster(spark):

@@ -132,6 +132,102 @@ def test_resume_skips_committed_stages(spark, docs, tmp_path):
     lineage = r2.committer.lineage()
     stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
     assert stages == {"payload", "candidates", "verified", "edges", "assignments"}
+    # `_total` rows carry the observed counts: each stage's input is the
+    # previous stage's output; a resumed stage observed nothing
+    totals = {
+        (r["run_id"], r["stage"]): (r["input_rows"], r["rows"])
+        for r in lineage.where(F.col("file") == "_total").collect()
+    }
+    assert len(totals) == 10
+    prev = None
+    for e in r1.committer.events:
+        assert totals[("a", e["stage"])] == (prev, e["rows"])
+        prev = e["rows"]
+    assert totals[("a", "assignments")][1] == n
+    assert all(
+        totals[("b", e["stage"])] == (None, None) for e in r2.committer.events
+    )
+
+
+def _lineage_rows(com):
+    return sorted(
+        (tuple(r) for r in com.lineage().drop("committed_at").collect()),
+        key=lambda t: (t[0], t[1], t[2]),
+    )
+
+
+def test_lineage_write_starts_no_spark_job(spark, tmp_path):
+    """A lineage record is serialized on the driver and written through the
+    Hadoop FileSystem: committing it runs no Spark job."""
+    from entity_deduplication_hack_main_spark.plans.lineage import StageCommitter
+
+    wd = str(tmp_path / "wd")
+    StageCommitter(spark, wd).stage("s", lambda: spark.range(10).repartition(2))
+    com = StageCommitter(spark, wd, run_id="w")
+    com._prev_rows = 10
+    files = com._list_files("s")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        # control: the group does see a job run under it
+        sc.setJobGroup("lineage-control", "control")
+        spark.range(3).count()
+        assert tracker.getJobIdsForGroup("lineage-control")
+        sc.setJobGroup("lineage-write", "one lineage record")
+        com._write_lineage("s", 10, 12, False)
+        assert tracker.getJobIdsForGroup("lineage-write") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    rows = [r for r in _lineage_rows(com) if r[0] == "w"]
+    total = sum(sz for _, sz in files)
+    assert rows == [("w", "s", "_total", 10, 10, total, 12, False)] + [
+        ("w", "s", f, None, None, sz, 12, False) for f, sz in files
+    ]
+
+
+def test_lineage_reads_legacy_spark_written_files(spark, tmp_path):
+    """A workdir committed by the older Spark-job writer (INT96
+    `committed_at`) resumes next to driver-written files: every row reads
+    back with LINEAGE_SCHEMA's types."""
+    import datetime
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from entity_deduplication_hack_main_spark.plans.lineage import (
+        LINEAGE_SCHEMA,
+        StageCommitter,
+    )
+
+    wd = tmp_path / "wd"
+    legacy = [
+        ("old", "payload", "part-0.parquet", None, None, 100, 5, False),
+        ("old", "payload", "_total", None, 3, 100, 5, False),
+    ]
+    spark.createDataFrame(
+        legacy,
+        "run_id string, stage string, file string, input_rows bigint, "
+        "rows bigint, bytes bigint, wall_ms bigint, resumed boolean",
+    ).withColumn("committed_at", F.current_timestamp()).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(wd / "_lineage"))
+    (old_file,) = glob.glob(str(wd / "_lineage" / "*.parquet"))
+    ts = pq.ParquetFile(old_file).schema.column(8)
+    assert ts.physical_type == "INT96"
+
+    com = StageCommitter(spark, str(wd), run_id="new")
+    com._prev_rows = 3
+    com._write_lineage("candidates", 4, 6, True)
+    df = com.lineage()
+    assert df.schema == LINEAGE_SCHEMA
+    assert _lineage_rows(com) == [
+        ("new", "candidates", "_total", 3, 4, 0, 6, True),
+        ("old", "payload", "_total", None, 3, 100, 5, False),
+        ("old", "payload", "part-0.parquet", None, None, 100, 5, False),
+    ]
+    stamps = [r["committed_at"] for r in df.collect()]
+    assert all(isinstance(t, datetime.datetime) for t in stamps)
 
 
 def test_pipeline_substring_span_stage(spark):
