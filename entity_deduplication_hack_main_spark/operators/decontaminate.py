@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.operators import lsh as lsh_op
+from entity_deduplication_hack_main_spark.operators import verify as verify_op
 
 
 def decontaminate(
@@ -85,12 +86,17 @@ def decontaminate(
     s_r = ref_payload.select(
         F.col("id").alias("rid"), F.col("shingle_set").alias("_s2")
     )
-    common = F.size(F.array_intersect("_s1", "_s2")).cast("double")
-    union = (F.size("_s1") + F.size("_s2")).cast("double") - common
+    common = F.col("_inter").cast("double")
+    union = (F.col("_n1") + F.col("_n2")).cast("double") - common
     near = (
-        pairs.join(s_t, "id")
-        .join(_b(s_r), "rid")
-        .where(common >= F.lit(t) * union)
+        verify_op.overlap_sizes(
+            pairs.join(s_t, "id").join(_b(s_r), "rid"), "_s1", "_s2"
+        )
+        .select(
+            "id",
+            verify_op.emit_where(common >= F.lit(t) * union, F.col("rid"))
+            .alias("rid"),
+        )
         .groupBy("id")
         .agg(F.min("rid").alias("near_ref"))
     )

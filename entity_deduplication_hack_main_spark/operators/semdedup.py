@@ -182,14 +182,16 @@ def semantic_dup_pairs_matmul(
     def block(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["side"] == 0]
         b = pdf[pdf["side"] == 1]
+        diagonal = pdf["ci"].iat[0] == pdf["cj"].iat[0]
         # a hash chunk index can be unpopulated — its blocks have no pairs
-        if len(a) == 0 or len(a) + len(b) < 2:
+        # (a cross block's side 1 can be empty too: not a diagonal block)
+        if len(a) == 0 or (len(a) < 2 if diagonal else len(b) == 0):
             return _empty()
         ids_a = a["id"].to_numpy()
         vecs_a = list(a["v"])
         xa = np.array(vecs_a, dtype=np.float64)
         xa /= np.maximum(np.linalg.norm(xa, axis=1, keepdims=True), 1e-300)
-        if len(b) == 0:  # diagonal block: intra-chunk upper triangle
+        if diagonal:  # intra-chunk upper triangle
             sims = xa @ xa.T
             iu, ju = np.triu_indices(len(ids_a), k=1)
             keep = sims[iu, ju] >= guard

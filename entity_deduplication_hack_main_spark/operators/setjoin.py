@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
+from entity_deduplication_hack_main_spark.operators import verify as verify_op
 
 
 def shingle_sets(
@@ -155,26 +156,21 @@ def ngram_jaccard_pairs(
         .distinct()
     )
 
-    sets = payload.select(
-        F.col(id_col).alias("id"),
-        F.col(set_col).alias("ss"),
-        F.size(set_col).alias("n"),
-    )
-    s1 = sets.alias("s1")
-    s2 = sets.alias("s2")
-    common = F.size(F.array_intersect(F.col("s1.ss"), F.col("s2.ss")))
-    union = F.col("s1.n") + F.col("s2.n") - common
-    return (
-        cand.join(s1, F.col("id1") == F.col("s1.id"))
-        .join(s2, F.col("id2") == F.col("s2.id"))
-        .where(common.cast("double") >= F.lit(t) * union.cast("double"))
-        .select(
-            "id1",
-            "id2",
-            F.round(common.cast("double") / union.cast("double"), 6).alias(
-                "jaccard"
-            ),
+    a_set, b_set = (
+        payload.select(
+            F.col(id_col).alias(f"id{k}"), F.col(set_col).alias(f"s{k}")
         )
+        for k in (1, 2)
+    )
+    j = verify_op.overlap_sizes(cand.join(a_set, "id1").join(b_set, "id2"))
+    common = F.col("_inter").cast("double")
+    union = (F.col("_n1") + F.col("_n2") - F.col("_inter")).cast("double")
+    return j.select(
+        "id1",
+        "id2",
+        verify_op.emit_where(
+            common >= F.lit(t) * union, F.round(common / union, 6)
+        ).alias("jaccard"),
     )
 
 

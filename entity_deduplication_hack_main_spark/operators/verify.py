@@ -4,7 +4,8 @@ Reference parity:
 - J3 verification join (``similarity_utils.py:58-104`` Levenshtein_filter):
   candidates are re-checked with an *exact* expensive measure — for webtext
   that is exact Jaccard over the full shingle sets (not the MinHash
-  estimate), computed JVM-side with array_intersect/array_union.
+  estimate), computed JVM-side from ONE array_intersect per pair
+  (:func:`overlap_sizes`; union = |S1| + |S2| - |S1 ∩ S2|).
 - C1 exact detection (``similarity_utils.py:87-92``): byte-equal normalized
   text (md5 fingerprint equality) → 'exact'.
 - C2 taxonomy (``output_utils.py:60-73``): exact / near-exact / similar /
@@ -18,7 +19,7 @@ reference hand-codes at ``dedup_pipeline.py:56-60``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
@@ -42,51 +43,78 @@ def doc_payload(
     ).select("id", "shingle_set", "fp")
 
 
-def verify_pairs(
-    pairs: DataFrame,
-    payload: DataFrame,
-    config: DedupConfig,
-    semi_reduce: bool = True,
+def overlap_sizes(df: DataFrame, s1: str = "s1", s2: str = "s2") -> DataFrame:
+    """``df`` plus ``_inter`` = |S1 ∩ S2|, ``_n1`` = |S1|, ``_n2`` = |S2|,
+    projected once so every exact-set measure derives from plain ints.
+
+    Why a separate projection: Catalyst shares no subexpression across
+    CASE WHEN branches, so a Jaccard referenced by the score, taxonomy,
+    status and containment columns re-ran ``array_intersect`` 5x and
+    ``array_union`` 8x per pair in ``verify_pairs_full`` (2.2-2.6 s vs
+    0.7-0.9 s warm for the 11.9k pairs of perfbench's ``batch_hot`` on a
+    4-core VM). CollapseProject
+    keeps this projection apart from the consumer's because ``_inter`` is
+    not cheap and is referenced more than once.
+
+    Precondition: S1 and S2 are DISTINCT sets (the representation kernel's
+    ``shingle_set``), so |S1 ∪ S2| = _n1 + _n2 - _inter and no
+    ``array_union`` is needed."""
+    return df.select(
+        "*",
+        F.size(F.array_intersect(s1, s2)).alias("_inter"),
+        F.size(s1).alias("_n1"),
+        F.size(s2).alias("_n2"),
+    )
+
+
+def emit_where(cond: Column, value: Column) -> Column:
+    """Generator column: ``value`` on rows where ``cond`` holds, no row
+    otherwise — the row filter for thresholds on :func:`overlap_sizes`
+    measures. A ``where`` there is pushed through the overlap projection
+    into the join condition with ``_inter`` inlined, so the plan runs
+    ``array_intersect`` once per reference again; the optimizer pushes
+    no filter below a generator's output."""
+    return F.explode(F.when(cond, F.array(value)))
+
+
+def _paired_payloads(
+    pairs: DataFrame, payload: DataFrame, cols: dict[str, str]
 ) -> DataFrame:
-    """(id1, id2, jaccard, dup_type, status) for candidate pairs.
+    """(id1, id2, <alias>1, <alias>2 for each payload col → alias in
+    ``cols``, plus :func:`overlap_sizes`): one payload projection joined
+    onto both pair sides.
 
-    jaccard = |S1 ∩ S2| / |S1 ∪ S2| on exact shingle sets.
-    dup_type: exact | near_exact | similar | conflict  (C2)
-    status:   pass iff jaccard >= config.jaccard_candidate (C3)
-
-    semi_reduce: BROADCAST-semi-filter the payload to candidate-pair
-    members before the heavy joins, so only matched ids ship their shingle
-    sets through the shuffle (the reference's matched-ids-only payload
-    fetch, dedup_pipeline.py:56-60). The hint is explicit because the
-    filter subtree appears in BOTH join branches — left to AQE it can
-    become two extra full-payload sort-merge shuffles (measured 27s → 87s
-    at 100k docs). The broadcast is bounded by the distinct candidate id
-    count; pass False for pair-heavy workloads where that outgrows
-    executor memory."""
-    if semi_reduce:
-        ids = (
-            pairs.select(F.col("id1").alias("id"))
-            .unionByName(pairs.select(F.col("id2").alias("id")))
-            .distinct()
+    The payload is first BROADCAST-semi-filtered to candidate-pair
+    members, so only matched ids ship their shingle sets through the
+    shuffle (the reference's matched-ids-only payload fetch,
+    dedup_pipeline.py:56-60). The hint is explicit because the filter
+    subtree appears in BOTH join branches — left to AQE it can become two
+    extra full-payload sort-merge shuffles (measured 27s → 87s at 100k
+    docs). The broadcast is bounded by the distinct candidate id count."""
+    ids = (
+        pairs.select(F.col("id1").alias("id"))
+        .unionByName(pairs.select(F.col("id2").alias("id")))
+        .distinct()
+    )
+    p = payload.select("id", *cols).join(F.broadcast(ids), "id", "left_semi")
+    a, b = (
+        p.select(
+            F.col("id").alias(f"id{k}"),
+            *(F.col(c).alias(f"{al}{k}") for c, al in cols.items()),
         )
-        payload = payload.join(F.broadcast(ids), "id", "left_semi")
-    a = payload.select(
-        F.col("id").alias("id1"),
-        F.col("shingle_set").alias("s1"),
-        F.col("fp").alias("fp1"),
+        for k in (1, 2)
     )
-    b = payload.select(
-        F.col("id").alias("id2"),
-        F.col("shingle_set").alias("s2"),
-        F.col("fp").alias("fp2"),
+    return overlap_sizes(
+        pairs.select("id1", "id2").join(a, "id1").join(b, "id2")
     )
-    j = pairs.join(a, "id1").join(b, "id2")
-    inter = F.size(F.array_intersect("s1", "s2"))
-    union = F.size(F.array_union("s1", "s2"))
+
+
+def _jaccard_columns(config: DedupConfig) -> list:
+    """jaccard, dup_type (C2), status (C3) from :func:`overlap_sizes`."""
+    inter = F.col("_inter")
+    union = F.col("_n1") + F.col("_n2") - inter
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    out = j.select(
-        "id1",
-        "id2",
+    return [
         F.round(jac, 9).alias("jaccard"),
         F.when(F.col("fp1") == F.col("fp2"), "exact")
         .when(jac >= config.jaccard_near_exact, "near_exact")
@@ -96,8 +124,23 @@ def verify_pairs(
         F.when(jac >= config.jaccard_candidate, "pass")
         .otherwise("fail")
         .alias("status"),
-    )
-    return out
+    ]
+
+
+def verify_pairs(
+    pairs: DataFrame,
+    payload: DataFrame,
+    config: DedupConfig,
+) -> DataFrame:
+    """(id1, id2, jaccard, dup_type, status) for candidate pairs.
+
+    jaccard = |S1 ∩ S2| / |S1 ∪ S2| on exact shingle sets.
+    dup_type: exact | near_exact | similar | conflict  (C2)
+    status:   pass iff jaccard >= config.jaccard_candidate (C3)
+
+    Payload fetch and semi-join reduction: :func:`_paired_payloads`."""
+    j = _paired_payloads(pairs, payload, {"shingle_set": "s", "fp": "fp"})
+    return j.select("id1", "id2", *_jaccard_columns(config))
 
 
 def duplicate_edges(verified: DataFrame) -> DataFrame:
@@ -117,52 +160,21 @@ def verify_pairs_full(
     the payload six times = four extra ~600 MB array shuffles at 100k
     heavy docs; this halved pipeline wall time).
 
-    payload: (id, shingle_set, fp, simhash). Semi-join reduction first:
-    only candidate-pair members ship their shingle sets. The broadcast
-    hint is load-bearing — see :func:`verify_pairs` (plan-chosen SMJ here
-    doubles payload shuffles instead of eliminating them). Shared by the
+    payload: (id, shingle_set, fp, simhash), semi-join reduced to the
+    candidate-pair members first (:func:`_paired_payloads`). Shared by the
     batch pipeline and the streaming in-batch channel so both apply
     IDENTICAL semantics (r03 verdict #3)."""
-    ids = (
-        pairs.select(F.col("id1").alias("id"))
-        .unionByName(pairs.select(F.col("id2").alias("id")))
-        .distinct()
+    j = _paired_payloads(
+        pairs, payload, {"shingle_set": "s", "fp": "fp", "simhash": "sh"}
     )
-    p = payload.select("id", "shingle_set", "fp", "simhash").join(
-        F.broadcast(ids), "id", "left_semi"
-    )
-    a = p.select(
-        F.col("id").alias("id1"),
-        F.col("shingle_set").alias("s1"),
-        F.col("fp").alias("fp1"),
-        F.col("simhash").alias("sh1"),
-    )
-    b = p.select(
-        F.col("id").alias("id2"),
-        F.col("shingle_set").alias("s2"),
-        F.col("fp").alias("fp2"),
-        F.col("simhash").alias("sh2"),
-    )
-    j = pairs.select("id1", "id2").join(a, "id1").join(b, "id2")
-    inter = F.size(F.array_intersect("s1", "s2"))
-    union = F.size(F.array_union("s1", "s2"))
-    smaller = F.least(F.size("s1"), F.size("s2"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    smaller = F.least("_n1", "_n2")
     return j.select(
         "id1",
         "id2",
-        F.round(jac, 9).alias("jaccard"),
-        F.when(F.col("fp1") == F.col("fp2"), "exact")
-        .when(jac >= config.jaccard_near_exact, "near_exact")
-        .when(jac >= config.jaccard_similar, "similar")
-        .otherwise("conflict")
-        .alias("dup_type"),
-        F.when(jac >= config.jaccard_candidate, "pass")
-        .otherwise("fail")
-        .alias("status"),
+        *_jaccard_columns(config),
         F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).alias("hamming"),
         F.round(
-            F.when(smaller > 0, inter / smaller).otherwise(0.0), 9
+            F.when(smaller > 0, F.col("_inter") / smaller).otherwise(0.0), 9
         ).alias("containment"),
     )
 

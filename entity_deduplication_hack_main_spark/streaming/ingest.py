@@ -932,7 +932,10 @@ class StreamingDedup:
         """pairs (id, old_id, shingle_set, *extras) → the same rows with
         EXACT ``ex_jaccard`` and ``ex_containment`` against the committed
         partner doc: fetch the committed text from the deduped output
-        table, re-shingle it, intersect/union shingle sets.
+        table, re-shingle it, intersect the shingle sets once
+        (:func:`operators.verify.overlap_sizes`). ``ex_jaccard`` is 1.0
+        when both sets are empty and ``ex_containment`` when either is
+        (batch verify says 0.0 there).
 
         Bounded: only borderline MinHash candidates (the ±2.5σ
         est_margin band — a few % of candidates) and >=2-shared-fp winnow
@@ -953,17 +956,18 @@ class StreamingDedup:
             F.col("id").alias("old_id"),
             F.col("shingle_set").alias("old_shingles"),
         )
-        union_sz = F.size(F.array_union("shingle_set", "old_shingles"))
-        inter = F.size(F.array_intersect("shingle_set", "old_shingles"))
-        smaller = F.least(F.size("shingle_set"), F.size("old_shingles"))
+        inter = F.col("_inter")
+        union_sz = F.col("_n1") + F.col("_n2") - inter
+        smaller = F.least("_n1", "_n2")
         jaccard = F.when(union_sz == 0, F.lit(1.0)).otherwise(inter / union_sz)
         containment = F.when(smaller == 0, F.lit(1.0)).otherwise(inter / smaller)
         keep_cols = [c for c in pairs.columns if c != "shingle_set"]
-        return (
-            pairs.join(old_repr, "old_id")
-            .withColumn("ex_jaccard", jaccard)
-            .withColumn("ex_containment", containment)
-            .select(*keep_cols, "ex_jaccard", "ex_containment")
+        return verify_op.overlap_sizes(
+            pairs.join(old_repr, "old_id"), "shingle_set", "old_shingles"
+        ).select(
+            *keep_cols,
+            jaccard.alias("ex_jaccard"),
+            containment.alias("ex_containment"),
         )
 
     def span_cut_compaction(

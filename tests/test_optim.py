@@ -17,6 +17,8 @@ operator's internals):
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,29 +79,30 @@ def test_semdedup_matmul_pairs_equal_expression(spark, sf001, chunk):
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     cells = semdedup.assign_cells(emb, knn.ivf_anchors(64, 16, 69))
     cfg = DedupConfig()
-    exact = {
-        tuple(r)
-        for r in semdedup.semantic_dup_pairs(cells, cfg, 0.35).collect()
-    }
-    fast = {
-        tuple(r)
-        for r in semdedup.semantic_dup_pairs_matmul(
-            cells, cfg, 0.35, chunk=chunk
-        ).collect()
-    }
+    # Counters, not sets: a block emitting a pair twice must fail
+    exact = Counter(
+        map(tuple, semdedup.semantic_dup_pairs(cells, cfg, 0.35).collect())
+    )
+    fast = Counter(
+        map(
+            tuple,
+            semdedup.semantic_dup_pairs_matmul(
+                cells, cfg, 0.35, chunk=chunk
+            ).collect(),
+        )
+    )
     assert exact == fast and len(exact) > 0
 
 
 def test_ivf_knn_matmul_equals_expression(spark, sf001):
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") % 10 == 0)
-    exact = {
-        tuple(r) for r in knn.ivf_knn(probes, emb, dim=64, k=5).collect()
-    }
-    fast = {
-        tuple(r)
-        for r in knn.ivf_knn_matmul(probes, emb, dim=64, k=5).collect()
-    }
+    exact = Counter(
+        map(tuple, knn.ivf_knn(probes, emb, dim=64, k=5).collect())
+    )
+    fast = Counter(
+        map(tuple, knn.ivf_knn_matmul(probes, emb, dim=64, k=5).collect())
+    )
     assert exact == fast and len(exact) > 0
 
 
