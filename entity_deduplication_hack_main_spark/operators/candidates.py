@@ -1,0 +1,226 @@
+"""Candidate pairs for every recall channel: one posting table, one salted
+bucket self-join.
+
+All three recall channels are "docs that share a bucket":
+
+- MinHash-LSH: a band of the signature (``kid`` = band id, ``key`` = the
+  band key);
+- SimHash: a 16-bit block of the fingerprint (pigeonhole: Hamming
+  distance <= blocks-1 shares a block), verified with ``bit_count(xor)``;
+- winnowing: a winnowed substring fingerprint (``kid`` = 0), kept when the
+  pair shares at least two.
+
+So one projection and one ``explode`` over the payload give a posting
+table ``(id, simhash, chan, kid, key)``, and :func:`bucket_pairs` turns
+any posting table into pairs:
+
+- bucket sizes come from ONE partial-aggregating ``groupBy(chan, kid,
+  key).count()`` joined back (r05 verdict #1: a count-window shuffled
+  every member of a hot bucket to one reducer before counting; the
+  groupBy collapses hot keys map-side). Singleton buckets and buckets over
+  a channel's cap drop out in the join-back;
+- one self-join on ``(chan, kid, key, ci, cj)``. A bucket of at most
+  ``config.max_bucket_size`` members is one chunk (``ci = cj = 0``). A
+  larger one is split into ``ceil(n / salt_chunk)`` chunks by a hash of
+  the id, and every chunk pair ``ci <= cj`` is its own join key (blocked
+  cartesian; the skew split of *DS2*, ICDE 2021), so no task compares more
+  than ~salt_chunk² members. The filter ``(ci < cj) OR (id < rid)`` emits
+  each unordered pair exactly once per shared posting pair, so the winnow
+  channel can count shared fingerprints under salting.
+
+:func:`channel_candidates` is the pipeline's candidate stage: the
+three-channel posting table through one :func:`bucket_pairs`, then one
+``groupBy(id1, id2)`` derives the channel flags. Nothing is pinned: the
+pair plan reads the (committed) payload three times — sizing and both
+join sides — which is cheaper than a ``localCheckpoint`` job and leaves no
+storage behind. ``lsh.candidate_pairs``, ``hamming.hamming_candidate_pairs``
+and ``suffix.winnow_pairs_from_payload`` are :func:`bucket_pairs` over a
+one-channel posting table.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+from entity_deduplication_hack_main_spark.config import DedupConfig
+from entity_deduplication_hack_main_spark.functions import simhash as shash
+
+LSH, SIMHASH, WINNOW = 0, 1, 2
+#: channel names in ``channels`` order
+CHANNELS = ("minhash_lsh", "simhash", "winnow")
+BUCKET = ["chan", "kid", "key"]
+#: SimHash buckets larger than this (degenerate fingerprints, e.g. empty
+#: docs) are dropped — a documented coverage cap
+SIMHASH_MAX_BUCKET = 10000
+#: a winnow pair needs this many shared fingerprints: one is weak evidence
+#: (runs of a common token hash identically across unrelated docs)
+WINNOW_MIN_SHARED = 2
+_POSTING = "array<struct<chan:int,kid:int,key:bigint>>"
+
+
+def band_key(sig: Column, band: Column, rows: int, hash_fn: str = "xxhash64") -> Column:
+    """The bucket key of LSH band *band*: a hash of its *rows* signature
+    values. 'xxhash64' gives BIGINT keys (production), 'md5' 32-char hex
+    strings (DuckDB-reproducible)."""
+    text = F.array_join(
+        F.transform(
+            F.slice(sig, band * F.lit(rows) + F.lit(1), rows),
+            lambda x: x.cast("string"),
+        ),
+        ",",
+    )
+    return F.xxhash64(text) if hash_fn == "xxhash64" else F.md5(text)
+
+
+def one_channel(df: DataFrame, kid: str, key: str, *carry: str) -> DataFrame:
+    """A one-channel posting table ``(id, chan, kid, key, *carry)``."""
+    return df.select(
+        "id",
+        F.lit(0).alias("chan"),
+        F.col(kid).alias("kid"),
+        F.col(key).alias("key"),
+        *carry,
+    )
+
+
+def bucket_pairs(
+    postings: DataFrame,
+    config: DedupConfig,
+    keep: Column | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """``(id1, id2, chan, <c>1, <c>2 for c in carry)`` with id1 < id2: one
+    row per unordered pair of postings that share a bucket (module
+    docstring).
+
+    postings: ``(id, chan, kid, key, *carry)``; a doc posted twice to one
+    bucket pairs twice with each partner, as the plain self-join would.
+    keep: an extra predicate on the bucket size ``n`` (and ``chan``);
+    buckets with ``n < 2`` always drop."""
+    n = F.col("n")
+    sized = n >= 2 if keep is None else (n >= 2) & keep
+    sizes = postings.groupBy(*BUCKET).agg(F.count("*").alias("n")).where(sized)
+    nch = (
+        F.when(n > config.max_bucket_size, F.ceil(n / F.lit(config.salt_chunk)))
+        .otherwise(1)
+        .cast("int")
+    )
+    members = (
+        postings.join(sizes, BUCKET)
+        .withColumn("nch", nch)
+        .withColumn("c", F.pmod(F.xxhash64("id"), F.col("nch")).cast("int"))
+    )
+    # member in chunk c plays ci = c against every cj in [c, nch) on the
+    # left and cj = c against every ci in [0, c] on the right
+    left = members.select(
+        *BUCKET, "id", *carry, F.col("c").alias("ci"),
+        F.explode(F.sequence(F.col("c"), F.col("nch") - 1)).alias("cj"),
+    )
+    right = members.select(
+        *BUCKET,
+        F.col("id").alias("rid"),
+        *(F.col(c).alias(f"r_{c}") for c in carry),
+        F.col("c").alias("cj"),
+        F.explode(F.sequence(F.lit(0), F.col("c"))).alias("ci"),
+    )
+    # (id1, id2) = (least, greatest); carried columns follow their id
+    lo, hi = F.col("id") < F.col("rid"), F.col("id") > F.col("rid")
+    return (
+        left.join(right, [*BUCKET, "ci", "cj"])
+        .where((F.col("ci") < F.col("cj")) | (F.col("id") < F.col("rid")))
+        .select(
+            F.least("id", "rid").alias("id1"),
+            F.greatest("id", "rid").alias("id2"),
+            "chan",
+            *(
+                F.when(first, F.col(c)).otherwise(F.col(f"r_{c}")).alias(f"{c}{k}")
+                for c in carry
+                for k, first in ((1, lo), (2, hi))
+            ),
+        )
+    )
+
+
+def _entries(arr: Column, chan: int, kid, key) -> Column:
+    """*arr* mapped to posting structs; a NULL *arr* maps to an empty
+    array, so it drops only its own postings from the ``concat``."""
+    return F.coalesce(
+        F.transform(
+            arr,
+            lambda x: F.struct(
+                F.lit(chan).alias("chan"),
+                kid(x).cast("int").alias("kid"),
+                key(x).alias("key"),
+            ),
+        ),
+        F.array().cast(_POSTING),
+    )
+
+
+def posting_table(
+    payload: DataFrame, config: DedupConfig, nbits: int = 64
+) -> DataFrame:
+    """``(id, simhash, chan, kid, key)``: every LSH band, SimHash block and
+    winnow fingerprint of every doc, from one projection and one explode.
+
+    Band keys are the xxhash64 rendering for either hash strategy: a
+    bucket depends only on the signature slice."""
+    sig, sh = F.col("signature"), F.col("simhash")
+    bands = F.when(
+        sig.isNotNull(), F.sequence(F.lit(0), F.lit(config.bands - 1))
+    )
+    blocks = F.when(sh.isNotNull(), shash.simhash_blocks(sh, config, nbits))
+    entries = F.concat(
+        _entries(
+            bands, LSH, lambda b: b,
+            lambda b: band_key(sig, b, config.rows_per_band),
+        ),
+        _entries(blocks, SIMHASH, lambda b: b["block_id"], lambda b: b["block_key"]),
+        _entries(F.col("winnow_fps"), WINNOW, lambda _: F.lit(0), lambda f: f),
+    )
+    return payload.select(
+        "id", "simhash", F.explode(entries).alias("p")
+    ).select("id", "simhash", "p.chan", "p.kid", "p.key")
+
+
+def channel_candidates(
+    payload: DataFrame, config: DedupConfig, nbits: int = 64
+) -> DataFrame:
+    """``(id1, id2, channels)``: every pair found by at least one channel,
+    ``channels`` in :data:`CHANNELS` order.
+
+    payload: ``(id, signature, simhash, winnow_fps, ...)`` from the
+    representation kernel. A pair is an LSH candidate when it shares any
+    band, a SimHash candidate when it shares a block of at most
+    :data:`SIMHASH_MAX_BUCKET` members and lies within
+    ``config.hamming_radius``, and a winnow candidate when it shares at
+    least :data:`WINNOW_MIN_SHARED` fingerprints held by at most
+    ``config.winnow_max_df`` docs each — the per-channel functions' pairs."""
+    chan, n = F.col("chan"), F.col("n")
+    keep = (
+        F.when(chan == SIMHASH, n <= SIMHASH_MAX_BUCKET)
+        .when(chan == WINNOW, n <= config.winnow_max_df)
+        .otherwise(True)
+    )
+    pairs = bucket_pairs(
+        posting_table(payload, config, nbits), config, keep, carry=("simhash",)
+    )
+    near = shash.hamming(F.col("simhash1"), F.col("simhash2"))
+    flags = pairs.groupBy("id1", "id2").agg(
+        F.bool_or(chan == LSH).alias("f0"),
+        F.bool_or(
+            (chan == SIMHASH) & (near <= config.hamming_radius)
+        ).alias("f1"),
+        (F.count_if(chan == WINNOW) >= WINNOW_MIN_SHARED).alias("f2"),
+    )
+    on = [F.col(f"f{i}") for i in range(len(CHANNELS))]
+    return flags.where(on[0] | on[1] | on[2]).select(
+        "id1",
+        "id2",
+        F.array_compact(
+            F.array(*(F.when(f, F.lit(c)) for f, c in zip(on, CHANNELS)))
+        ).alias("channels"),
+    )

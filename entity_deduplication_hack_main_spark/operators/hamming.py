@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import simhash as shash
+from entity_deduplication_hack_main_spark.operators import candidates as cand
 
 
 def simhash_table(
@@ -37,50 +38,38 @@ def hamming_candidate_pairs(
     sim_table: DataFrame,
     config: DedupConfig,
     nbits: int = 64,
-    max_bucket: int = 10000,
+    max_bucket: int = cand.SIMHASH_MAX_BUCKET,
     materialize: bool = False,
 ) -> DataFrame:
     """Distinct (id1, id2, hamming) with hamming <= config.hamming_radius.
 
-    Block-index join: explode each fingerprint into its blocks, self-join on
-    (block_id, block_key), verify exact Hamming distance. Buckets above
-    max_bucket (degenerate fingerprints, e.g. empty docs) are dropped —
-    a documented coverage cap mirroring LSH bucket salting.
+    Block-index join: explode each fingerprint into its blocks, pair docs
+    sharing a (block_id, block_key) bucket with
+    :func:`candidates.bucket_pairs` (sized by a partial aggregate, salted
+    above ``config.max_bucket_size``), verify exact Hamming distance.
+    Buckets above max_bucket (degenerate fingerprints, e.g. empty docs)
+    are dropped — a documented coverage cap.
 
-    Bucket sizes come from a partial-aggregating ``groupBy(key).count()``
-    joined back (r05 verdict #1) — a count-window here shuffled every
-    member of a degenerate-fingerprint bucket to one reducer before
-    counting; the groupBy collapses hot keys map-side and the join-back
-    streams them (see lsh.candidate_pairs for the full rationale).
-
-    materialize: pin the sized block table (localCheckpoint) — the a/b
-    self-join branches re-reference it, re-running the simhash input
-    subtree per branch otherwise. Off by default for streaming batches.
+    materialize: pin the block table (localCheckpoint) — the size count
+    and both join sides re-reference it, re-running the simhash input
+    subtree per reference otherwise. Off by default for streaming batches.
     """
     blocks = sim_table.select(
         "id",
         "simhash",
         F.explode(shash.simhash_blocks(F.col("simhash"), config, nbits)).alias("b"),
     ).select("id", "simhash", "b.block_id", "b.block_key")
-    key = ["block_id", "block_key"]
     if materialize:
-        blocks = blocks.localCheckpoint()  # size count + join both re-ref
-    sizes = (
-        blocks.groupBy(*key)
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= max_bucket))
+        blocks = blocks.localCheckpoint()
+    pairs = cand.bucket_pairs(
+        cand.one_channel(blocks, "block_id", "block_key", "simhash"),
+        config,
+        F.col("n") <= max_bucket,
+        carry=("simhash",),
     )
-    blocks = blocks.join(sizes, key)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    ham = shash.hamming(F.col("a.simhash"), F.col("b.simhash"))
+    ham = shash.hamming(F.col("simhash1"), F.col("simhash2"))
     return (
-        a.join(b, key)
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            ham.alias("hamming"),
-        )
+        pairs.select("id1", "id2", ham.alias("hamming"))
         .where(F.col("hamming") <= config.hamming_radius)
         .distinct()
     )

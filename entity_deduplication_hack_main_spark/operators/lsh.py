@@ -8,14 +8,14 @@ least/greatest exactly as the reference sorts pair tuples (J7,
 ``EvaluateVariations.ipynb cell 2``).
 
 Scale design:
-- banding is pure JVM (md5 over signature slices → codegen; one
-  ``posexplode`` = bands× row inflation, no Python);
-- the candidate self-join shuffles on (band_id, band_hash); AQE skew-join
-  handles moderate skew, and buckets larger than ``config.max_bucket_size``
-  (boilerplate pages sharing a band) are *salted*: members are chunked by a
-  deterministic hash and pairs are generated per chunk-pair key
-  (blocked-cartesian), bounding any single task at ~salt_chunk² comparisons
-  while preserving the exact pair set. Deterministic → resume-safe.
+- banding is pure JVM (md5 or xxhash64 over signature slices → codegen;
+  one ``posexplode`` = bands× row inflation, no Python);
+- pairs come from :func:`candidates.bucket_pairs`, the sized, salted
+  bucket self-join shared by every candidate channel: buckets larger
+  than ``config.max_bucket_size`` (boilerplate pages sharing a band) are
+  split into chunk-pair join keys, bounding any single task at
+  ~salt_chunk² comparisons while preserving the exact pair set.
+  Deterministic → resume-safe.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
+from entity_deduplication_hack_main_spark.operators import candidates as cand
 
 
 def candidate_probability(jaccard: float, config: DedupConfig) -> float:
@@ -109,32 +110,9 @@ def band_hashes(
     per doc, and an 8-byte key vs a 32-byte string cuts that stage's
     shuffle volume ~2.5x (band buckets are identical either way: both
     hashes are injective enough on r-row signature slices)."""
-    r = config.rows_per_band
-    sig = F.col(sig_col)
-    if hash_fn == "xxhash64":
-        def one_band(band):
-            return F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.slice(sig, band * F.lit(r) + F.lit(1), r),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                )
-            )
-    else:
-        def one_band(band):
-            return F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice(sig, band * F.lit(r) + F.lit(1), r),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                )
-            )
     bands = F.transform(
-        F.sequence(F.lit(0), F.lit(config.bands - 1)), one_band
+        F.sequence(F.lit(0), F.lit(config.bands - 1)),
+        lambda b: cand.band_key(F.col(sig_col), b, config.rows_per_band, hash_fn),
     )
     return df.select(
         F.col(id_col).alias("id"),
@@ -142,88 +120,28 @@ def band_hashes(
     )
 
 
-def _pairs_norm(df: DataFrame, left: str, right: str) -> DataFrame:
-    """Order-insensitive distinct pair keys (J7 least/greatest)."""
-    return df.select(
-        F.least(F.col(left), F.col(right)).alias("id1"),
-        F.greatest(F.col(left), F.col(right)).alias("id2"),
-    ).where(F.col("id1") != F.col("id2"))
-
-
 def candidate_pairs(
     bands: DataFrame, config: DedupConfig, materialize: bool = False
 ) -> DataFrame:
     """Distinct (id1, id2) pairs sharing >= 1 LSH bucket, salted for skew.
 
-    bands: output of :func:`band_hashes`.
+    bands: output of :func:`band_hashes` (any bucket key type). Sizing,
+    salting and the self-join are :func:`candidates.bucket_pairs` over the
+    one-channel posting table ``(band_id, band_hash)``.
 
-    Bucket sizes come from a partial-aggregating ``groupBy(key).count()``
-    joined back onto the band rows (r05 verdict #1; guide §2.3 "aggregate
-    before you shuffle"). The previous count-window over the bucket key
-    shuffled EVERY member of a hot bucket to one reducer task before
-    counting — the same single-task hot-key materialization the gram df
-    cap removed from the span pass (suffix.py:323). The groupBy collapses
-    a boilerplate bucket to one long per map partition; the join back
-    merely streams the hot bucket's rows through a co-partitioned join
-    (same exchange, reused) that AQE skew-join can split. Singleton
-    buckets are dropped by joining against the ``bucket_n >= 2`` count
-    table, exactly as the window filter did.
-
-    materialize: ``localCheckpoint`` the sized member table before pair
-    generation. The cold/hot/left/right branches below re-reference it
-    FOUR times — Catalyst duplicates the whole upstream subtree per
-    reference (the r05 verify_candidate_pairs plan carried 44 copies of
-    the representation kernel), so the banding input would be recomputed
-    per branch. Pinning computes it once per invocation; each invocation
-    checkpoints afresh, so nothing persists across bench legs. Off by
-    default: streaming micro-batches are smaller than the checkpoint
-    overhead.
+    materialize: ``localCheckpoint`` the band table first. The size count
+    and both join sides re-reference it, and Catalyst duplicates the whole
+    upstream subtree per reference (the r05 verify_candidate_pairs plan
+    carried 44 copies of the representation kernel), so pinning computes
+    the banding input once per invocation. Off by default: streaming
+    micro-batches are smaller than the checkpoint overhead, and the
+    pipeline's :func:`candidates.channel_candidates` reads a committed
+    payload instead.
     """
-    key = ["band_id", "band_hash"]
     if materialize:
-        # pin the band table: the size count, the join-back and the four
-        # cold/hot pair branches all re-reference it — unpinned, each
-        # re-runs whatever produced the bands (the representation kernel /
-        # hyperplane matmul). Pinning MEMBERS as well was measured SLOWER
-        # (extra eager job + barrier outweighs recomputing the cheap
-        # narrow join from pinned bands; 6.7 vs 5.8 s at sf1.0 on the
-        # hyperplane channel).
         bands = bands.localCheckpoint()
-    sizes = (
-        bands.groupBy(*key)
-        .agg(F.count("*").alias("bucket_n"))
-        .where(F.col("bucket_n") >= 2)  # singleton buckets produce no pairs
-    )
-    members = bands.join(sizes, key)
-
-    cold = members.where(F.col("bucket_n") <= config.max_bucket_size)
-    hot = members.where(F.col("bucket_n") > config.max_bucket_size)
-
-    a, b = cold.alias("a"), cold.alias("b")
-    cold_pairs = _pairs_norm(
-        a.join(b, key).where(F.col("a.id") < F.col("b.id")), "a.id", "b.id"
-    )
-
-    # Salted blocked-cartesian for hot buckets: member → chunk c; pair-bucket
-    # (ci, cj), ci <= cj; member plays the ci role for cj in [c, n) and the
-    # cj role for ci in [0, c]. Exact same pair set, bounded task size.
-    nch = F.ceil(F.col("bucket_n") / F.lit(config.salt_chunk)).cast("int")
-    hot_c = hot.withColumn("nch", nch).withColumn(
-        "chunk", F.pmod(F.xxhash64("id"), F.col("nch")).cast("int")
-    )
-    left = hot_c.select(
-        *key, "id", F.col("chunk").alias("ci"),
-        F.explode(F.sequence(F.col("chunk"), F.col("nch") - 1)).alias("cj"),
-    )
-    right = hot_c.select(
-        *key, F.col("id").alias("rid"), F.col("chunk").alias("cj"),
-        F.explode(F.sequence(F.lit(0), F.col("chunk"))).alias("ci"),
-    )
-    hot_pairs = _pairs_norm(
-        left.join(right, key + ["ci", "cj"]), "id", "rid"
-    )
-
-    return cold_pairs.unionByName(hot_pairs).distinct()
+    postings = cand.one_channel(bands, "band_id", "band_hash")
+    return cand.bucket_pairs(postings, config).select("id1", "id2").distinct()
 
 
 def documents_to_candidates(

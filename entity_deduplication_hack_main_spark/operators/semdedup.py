@@ -17,12 +17,12 @@ This implementation composes two machines this engine already has:
   oracle can embed the same literals; pass
   :func:`knn.train_ivf_anchors` output for the production trained
   quantizer (tighter cells → higher within-cell dup recall).
-- **within-cell pair generation** is the salted bucket self-join from
-  ``operators/lsh.py`` ``candidate_pairs`` — cells are just buckets with
-  ``band_id = 0`` and ``band_hash = cell``, so hot cells (a popular
-  semantic neighborhood is exactly as skewed as a boilerplate LSH
-  bucket) are chunk-pair salted with the SAME proven-equal machinery,
-  bounding any task at ~salt_chunk² comparisons.
+- **within-cell pair generation** is the salted bucket self-join of
+  ``operators/candidates.py`` (via ``lsh.candidate_pairs``) — cells are
+  just buckets with ``band_id = 0`` and ``band_hash = cell``, so hot
+  cells (a popular semantic neighborhood is exactly as skewed as a
+  boilerplate LSH bucket) are chunk-pair salted with the SAME
+  proven-equal machinery, bounding any task at ~salt_chunk² comparisons.
 
 Keep rule (deterministic, parallel- and resume-safe): a vector is
 DROPPED iff some *lower-id* vector in the same cell has cosine ≥
@@ -119,8 +119,8 @@ def semantic_dup_pairs_matmul(
     through two joins, 12.5M fold-cosines and a 12.5M-row distinct for a
     handful of qualifying pairs. Here the pair space never materializes:
     cells are chunked deterministically (pmod(xxhash64(id), nch) — the
-    lsh.py salting key), every chunk-pair block (ci <= cj) is scored as
-    ONE numpy matmul inside applyInPandas, and only candidates within a
+    candidates.bucket_pairs salting key), every chunk-pair block
+    (ci <= cj) is scored as ONE numpy matmul inside applyInPandas, and only candidates within a
     1e-6 guard band of the threshold are emitted (vectors riding along)
     for the exact fold-cosine re-score — so the output is bit-identical
     to the expression path and its DuckDB oracle.

@@ -32,13 +32,14 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import represent, textnorm
+from entity_deduplication_hack_main_spark.operators import candidates as cand
 
 
 def winnow_pairs_from_payload(
     payload: DataFrame,
     min_df: int = 2,
     max_df: int | None = None,
-    min_shared: int = 2,
+    min_shared: int = cand.WINNOW_MIN_SHARED,
     materialize: bool = False,
 ) -> DataFrame:
     """Distinct (id1, id2) sharing >= min_shared winnowed fingerprints.
@@ -54,29 +55,27 @@ def winnow_pairs_from_payload(
     share most of the contained doc's fingerprints, so >= 2 keeps them
     while cutting coincidence quadratically.
 
-    Fingerprint df comes from a partial-aggregating ``groupBy(wfp).count()``
-    joined back (r05 verdict #1) — the previous count-window shuffled every
-    posting of a hot boilerplate fingerprint to one reducer before
-    counting; the groupBy collapses hot keys map-side (lsh.candidate_pairs
-    has the full rationale). materialize: pin the df-marked posting table,
-    re-referenced by both self-join branches.
+    Fingerprint df is the bucket size of :func:`candidates.bucket_pairs`
+    (one partial aggregate, salted self-join), which emits one row per
+    shared fingerprint so the pair's count is exact. materialize: pin the
+    posting table, re-referenced by the df count and both join sides.
     """
+    config = DedupConfig()
     if max_df is None:
-        max_df = DedupConfig().winnow_max_df
-    fps = payload.select("id", F.explode("winnow_fps").alias("wfp"))
-    if materialize:
-        fps = fps.localCheckpoint()  # df count + join both re-ref
-    sizes = (
-        fps.groupBy("wfp")
-        .agg(F.count("*").alias("df"))
-        .where((F.col("df") >= min_df) & (F.col("df") <= max_df))
+        max_df = config.winnow_max_df
+    fps = payload.select(
+        "id", F.lit(0).alias("kid"), F.explode("winnow_fps").alias("wfp")
     )
-    m = fps.join(sizes, "wfp")
+    if materialize:
+        fps = fps.localCheckpoint()
+    n = F.col("n")
     return (
-        m.alias("a")
-        .join(m.alias("b"), "wfp")
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+        cand.bucket_pairs(
+            cand.one_channel(fps, "kid", "wfp"),
+            config,
+            (n >= min_df) & (n <= max_df),
+        )
+        .groupBy("id1", "id2")
         .agg(F.count("*").alias("shared_fps"))
         .where(F.col("shared_fps") >= min_shared)
         .select("id1", "id2")

@@ -34,7 +34,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -107,19 +107,27 @@ class StageCommitter:
         previous per-file groupBy re-read every stage output — an extra
         full scan per stage, prohibitive at 100 TB); per-file bytes come
         from filesystem metadata only.
-        """
-        if self.workdir is None:
-            return build().cache()
-        from pyspark.sql import Observation
 
-        t0 = time.monotonic()
-        resumed = self._committed(name)
-        rows = None
-        if not resumed:
-            obs = Observation(f"lineage_{name}")
-            df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
-            df.write.mode("overwrite").parquet(self._path(name))
-            rows = obs.get["rows"]
+        Jobs started by the build and the write carry the description
+        ``<run_id>/<name>``; the caller's description is restored after.
+        The job group is left alone: callers own it.
+        """
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{self.run_id}/{name}")
+        try:
+            if self.workdir is None:
+                return build().cache()
+            t0 = time.monotonic()
+            resumed = self._committed(name)
+            rows = None
+            if not resumed:
+                obs = Observation(f"lineage_{name}")
+                df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
+                df.write.mode("overwrite").parquet(self._path(name))
+                rows = obs.get["rows"]
+        finally:
+            sc.setJobDescription(caller)
         out = self.spark.read.parquet(self._path(name))
         wall_ms = int((time.monotonic() - t0) * 1000)
         self._write_lineage(name, rows, wall_ms, resumed)

@@ -13,6 +13,10 @@ Three independent recall channels feed one edge set:
 - SimHash Hamming <= r: near-exact pairs differing in a few tokens,
 - winnowed substring fingerprints: containment pairs (truncation /
   superstring) whose symmetric Jaccard may sit below the LSH threshold.
+The candidates stage builds all three from ONE posting table (band keys,
+SimHash blocks and winnow fingerprints exploded together) and ONE salted
+bucket self-join; a ``groupBy(id1, id2)`` then derives each pair's
+``channels`` (operators/candidates.py).
 
 Every stage goes through :class:`StageCommitter` → committed parquet +
 per-partition lineage rows + resume (plans/lineage.py).
@@ -27,16 +31,16 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import represent
+from entity_deduplication_hack_main_spark.operators import candidates as cand
 from entity_deduplication_hack_main_spark.operators import cluster as cc
-from entity_deduplication_hack_main_spark.operators import hamming as ham
-from entity_deduplication_hack_main_spark.operators import lsh, suffix, verify
+from entity_deduplication_hack_main_spark.operators import suffix, verify
 from entity_deduplication_hack_main_spark.plans.lineage import StageCommitter
 
 
 @dataclass
 class PipelineResult:
     payload: DataFrame       # (id, shingle_set, fp, signature, simhash)
-    candidates: DataFrame    # (id1, id2, channel)
+    candidates: DataFrame    # (id1, id2, channels)
     verified: DataFrame      # (id1, id2, jaccard, dup_type, status)
     edges: DataFrame         # (id1, id2) duplicate edges
     assignments: DataFrame   # (id/node, cluster_id)
@@ -239,31 +243,9 @@ def run_pipeline(
         )
 
     def build_candidates() -> DataFrame:
-        # bigint band keys on the production path (md5 strings are the
-        # oracle rendering) — ~2.5x less banding-shuffle volume
-        band_fn = "xxhash64" if hash_strategy == "xxhash64" else "md5"
-        # materialize=True pins each channel's exploded index (bands /
-        # blocks / fps) once per build: the size-count + join-back +
-        # pair branches re-reference it, and the committer cache only
-        # covers the payload BELOW these, not the banding work itself
-        lsh_pairs = lsh.candidate_pairs(
-            lsh.band_hashes(payload, config, "signature", "id", band_fn),
-            config,
-            materialize=True,
-        ).withColumn("channel", F.lit("minhash_lsh"))
-        sim_pairs = ham.hamming_candidate_pairs(
-            payload.select("id", "simhash"), config, nbits,
-            materialize=True,
-        ).select("id1", "id2", F.lit("simhash").alias("channel"))
-        win_pairs = suffix.winnow_pairs_from_payload(
-            payload, max_df=config.winnow_max_df, materialize=True
-        ).withColumn("channel", F.lit("winnow"))
-        return (
-            lsh_pairs.unionByName(sim_pairs)
-            .unionByName(win_pairs)
-            .groupBy("id1", "id2")
-            .agg(F.collect_set("channel").alias("channels"))
-        )
+        # all three channels from one posting table and one salted
+        # self-join over the committed payload; no pin (operators/candidates)
+        return cand.channel_candidates(payload, config, nbits)
 
     candidates = com.stage("candidates", build_candidates)
 

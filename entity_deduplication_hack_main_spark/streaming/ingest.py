@@ -28,8 +28,10 @@ Per micro-batch (`foreachBatch`), with `near_dup=True` (default):
 1. exact channel — normalized-text fingerprint; first-per-fp within the
    batch, then anti-join against the committed fingerprint index;
 2. *within* the batch — ALL THREE batch recall channels (MinHash-LSH ∪
-   SimHash Hamming blocks ∪ winnow fingerprints), verified with the SAME
-   full measure set and edge rule the batch pipeline uses
+   SimHash Hamming blocks ∪ winnow fingerprints) from the batch
+   pipeline's own candidate function (candidates.channel_candidates),
+   verified with the SAME full measure set and edge rule the batch
+   pipeline uses
    (verify.verify_pairs_full / duplicate_edges_full — r03 verdict #3:
    streaming used to run the MinHash channel only, so a containment-dup or
    2-token-edit near-exact inside one batch survived streaming but not
@@ -148,11 +150,11 @@ from pyspark.sql import functions as F
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import represent, textstats
 from entity_deduplication_hack_main_spark.functions import simhash as shash
+from entity_deduplication_hack_main_spark.operators import candidates as cand_op
 from entity_deduplication_hack_main_spark.operators import cluster as cc_op
 from entity_deduplication_hack_main_spark.operators import (
     decontaminate as decon_op,
 )
-from entity_deduplication_hack_main_spark.operators import hamming as ham_op
 from entity_deduplication_hack_main_spark.operators import (
     linededup as linededup_op,
 )
@@ -645,20 +647,11 @@ class StreamingDedup:
                     F.broadcast(flagged), "id", "left_anti"
                 ).cache()
 
-        # near-dup WITHIN the batch: all three batch recall channels, the
-        # batch pipeline's full measure set and edge rule (r03 verdict #3),
-        # then components; non-representative (non-min-id) members drop
-        bands = lsh_op.band_hashes(payload, cfg, "signature", "id", "xxhash64")
-        lsh_pairs = lsh_op.candidate_pairs(bands, cfg)
-        ham_pairs = ham_op.hamming_candidate_pairs(
-            payload.select("id", "simhash"), cfg, nbits
-        ).select("id1", "id2")
-        win_pairs = suffix_op.winnow_pairs_from_payload(
-            payload, max_df=cfg.winnow_max_df
-        )
-        in_cand = (
-            lsh_pairs.unionByName(ham_pairs).unionByName(win_pairs).distinct()
-        )
+        # near-dup WITHIN the batch: the batch pipeline's candidate stage
+        # (all three recall channels, one bucket self-join), full measure
+        # set and edge rule (r03 verdict #3), then components;
+        # non-representative (non-min-id) members drop
+        in_cand = cand_op.channel_candidates(payload, cfg, nbits)
         verified = verify_op.verify_pairs_full(in_cand, payload, cfg)
         edges = verify_op.duplicate_edges_full(
             verified, cfg, self.containment_threshold

@@ -94,14 +94,14 @@ def test_salted_pairs_equal_unsalted(spark):
     bands = spark.createDataFrame(rows, "id bigint, band_id int, band_hash string")
     cfg_plain = DedupConfig(max_bucket_size=10_000)
     cfg_salted = DedupConfig(max_bucket_size=20, salt_chunk=16)
-    plain = {
+    plain = Counter(
         (r["id1"], r["id2"])
         for r in lsh.candidate_pairs(bands, cfg_plain).collect()
-    }
-    salted = {
+    )
+    salted = Counter(
         (r["id1"], r["id2"])
         for r in lsh.candidate_pairs(bands, cfg_salted).collect()
-    }
+    )
     assert plain == salted and len(plain) > 0
 
 

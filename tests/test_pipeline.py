@@ -186,6 +186,31 @@ def test_lineage_write_starts_no_spark_job(spark, tmp_path):
     ]
 
 
+def test_stage_labels_its_jobs_and_restores_caller(spark, tmp_path):
+    """Jobs of a stage's build and write run under the description
+    ``<run_id>/<stage>``; the caller's description and job group are
+    unchanged afterwards, committed or not."""
+    from entity_deduplication_hack_main_spark.plans.lineage import StageCommitter
+
+    sc = spark.sparkContext
+    seen = []
+
+    def build():
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return spark.range(3)
+
+    try:
+        sc.setJobGroup("caller-group", "caller")
+        for wd in (str(tmp_path / "wd"), None):
+            StageCommitter(spark, wd, run_id="r").stage("s", build)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == ["r/s", "r/s"]
+
+
 def test_lineage_reads_legacy_spark_written_files(spark, tmp_path):
     """A workdir committed by the older Spark-job writer (INT96
     `committed_at`) resumes next to driver-written files: every row reads
