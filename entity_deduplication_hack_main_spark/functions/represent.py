@@ -36,10 +36,7 @@ the content representation (SURVEY.md §2.7 E1).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -50,11 +47,6 @@ _BIT_CHUNK = 16
 _U64 = 18446744073709551616  # 2^64
 _I64 = 9223372036854775808  # 2^63
 _TOP = np.uint64(_I64)
-
-REPR_SCHEMA = (
-    "struct<shingle_set:array<bigint>,signature:array<bigint>,"
-    "winnow_fps:array<bigint>,simhash:bigint>"
-)
 
 # Shingles per winnowing window (substring channel). Detection guarantee:
 # any shared token run >= shingle_k + WINNOW_WINDOW - 1 (~52 words at k=5)
@@ -95,20 +87,6 @@ def token_hashes(text_col: Column, hash_strategy: str = "xxhash64") -> Column:
 # --------------------------------------------------------------------------
 # numpy kernel
 # --------------------------------------------------------------------------
-
-
-def _flatten(lists: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(flat uint64, lengths, offsets) for a Series of int lists."""
-    lengths = np.fromiter((len(x) for x in lists), dtype=np.int64, count=len(lists))
-    if lengths.sum() == 0:
-        flat = np.zeros(0, dtype=np.uint64)
-    else:
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in lists if len(x)]
-        ).astype(np.uint64)
-    offsets = np.zeros(len(lists), dtype=np.int64)
-    np.cumsum(lengths[:-1], out=offsets[1:])
-    return flat, lengths, offsets
 
 
 def _shingle_hashes(
@@ -275,13 +253,6 @@ def _simhash(
         ones[lengths == 0] = 0
         fp |= (2 * ones > lengths.astype(np.uint64)).astype(np.uint64) << np.uint64(j)
     return fp.astype(np.int64)
-
-
-def _split_lists(flat: np.ndarray, row_ids: np.ndarray, n_rows: int):
-    """Per-row list assembly for Arrow list columns (flat sorted by row)."""
-    counts = np.bincount(row_ids, minlength=n_rows)
-    split_at = np.cumsum(counts)[:-1]
-    return np.split(flat.astype(np.int64), split_at)
 
 
 # Rows per kernel tile are capped so the flattened token-hash slice (and
@@ -495,44 +466,6 @@ def with_ordered_shingles(
         base = docs.select(F.col(id_col).alias("id"), th.alias("_th"))
     id_t = base.schema["id"].dataType.simpleString()
     return base.mapInArrow(fn, f"id {id_t}, shingles array<bigint>")
-
-
-def representation_udf(config: DedupConfig, hash_strategy: str = "xxhash64"):
-    """pandas UDF variant of the kernel (kept for column-level composition;
-    the pipeline uses :func:`representation_map`)."""
-    a, b = minhash_perms64(config)
-    coeffs64 = shingle_coeffs64(config)
-    nbits = 64 if hash_strategy == "xxhash64" else 60
-    window = WINNOW_WINDOW
-
-    @F.pandas_udf(REPR_SCHEMA)
-    def _repr(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for th_lists in it:
-            n_rows = len(th_lists)
-            if n_rows == 0:
-                yield pd.DataFrame(
-                    {
-                        "shingle_set": [],
-                        "signature": [],
-                        "winnow_fps": [],
-                        "simhash": pd.Series([], dtype=np.int64),
-                    }
-                )
-                continue
-            flat_th, lengths, offsets = _flatten(th_lists)
-            ss_rows, ss_vals, sig, wn_rows, wn_vals, sim = _kernel_batch(
-                flat_th, lengths, offsets, a, b, coeffs64, nbits, window
-            )
-            yield pd.DataFrame(
-                {
-                    "shingle_set": _split_lists(ss_vals, ss_rows, n_rows),
-                    "signature": list(sig),
-                    "winnow_fps": _split_lists(wn_vals, wn_rows, n_rows),
-                    "simhash": pd.Series(sim),
-                }
-            )
-
-    return _repr
 
 
 def with_representation(

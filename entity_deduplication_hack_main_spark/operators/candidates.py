@@ -30,11 +30,15 @@ any posting table into pairs:
 
 :func:`channel_candidates` is the pipeline's candidate stage: the
 three-channel posting table through one :func:`bucket_pairs`, then one
-``groupBy(id1, id2)`` derives the channel flags. Nothing is pinned: the
-pair plan reads the (committed) payload three times — sizing and both
-join sides — which is cheaper than a ``localCheckpoint`` job and leaves no
-storage behind. ``lsh.candidate_pairs``, ``hamming.hamming_candidate_pairs``
-and ``suffix.winnow_pairs_from_payload`` are :func:`bucket_pairs` over a
+``groupBy(id1, id2)`` derives the channel flags. Streaming ingest probes
+the committed corpus with the same posting table, bucket caps
+(:func:`channel_keep`) and flags (:func:`channel_flags`).
+
+Nothing is pinned: the pair plan reads the (committed) payload three
+times — sizing and both join sides — which is cheaper than a
+``localCheckpoint`` job and leaves no storage behind.
+``lsh.candidate_pairs``, ``hamming.hamming_candidate_pairs`` and
+``suffix.winnow_pairs_from_payload`` are :func:`bucket_pairs` over a
 one-channel posting table.
 """
 
@@ -186,6 +190,33 @@ def posting_table(
     ).select("id", "simhash", "p.chan", "p.kid", "p.key")
 
 
+def channel_keep(config: DedupConfig) -> Column:
+    """The per-channel cap on a bucket's size ``n``: SimHash buckets of at
+    most :data:`SIMHASH_MAX_BUCKET` members, winnow fingerprints held by at
+    most ``config.winnow_max_df`` docs, LSH buckets uncapped."""
+    chan, n = F.col("chan"), F.col("n")
+    return (
+        F.when(chan == SIMHASH, n <= SIMHASH_MAX_BUCKET)
+        .when(chan == WINNOW, n <= config.winnow_max_df)
+        .otherwise(True)
+    )
+
+
+def channel_flags(config: DedupConfig, sh1: str, sh2: str) -> list[Column]:
+    """Aggregates over one pair's shared postings, named by
+    :data:`CHANNELS`: any shared band; a shared SimHash block with the two
+    simhashes *sh1*, *sh2* within ``config.hamming_radius``; at least
+    :data:`WINNOW_MIN_SHARED` shared winnow fingerprints."""
+    chan = F.col("chan")
+    near = shash.hamming(F.col(sh1), F.col(sh2)) <= config.hamming_radius
+    flags = (
+        F.bool_or(chan == LSH),
+        F.bool_or((chan == SIMHASH) & near),
+        F.count_if(chan == WINNOW) >= WINNOW_MIN_SHARED,
+    )
+    return [f.alias(c) for f, c in zip(flags, CHANNELS)]
+
+
 def channel_candidates(
     payload: DataFrame, config: DedupConfig, nbits: int = 64
 ) -> DataFrame:
@@ -193,30 +224,19 @@ def channel_candidates(
     ``channels`` in :data:`CHANNELS` order.
 
     payload: ``(id, signature, simhash, winnow_fps, ...)`` from the
-    representation kernel. A pair is an LSH candidate when it shares any
-    band, a SimHash candidate when it shares a block of at most
-    :data:`SIMHASH_MAX_BUCKET` members and lies within
-    ``config.hamming_radius``, and a winnow candidate when it shares at
-    least :data:`WINNOW_MIN_SHARED` fingerprints held by at most
-    ``config.winnow_max_df`` docs each — the per-channel functions' pairs."""
-    chan, n = F.col("chan"), F.col("n")
-    keep = (
-        F.when(chan == SIMHASH, n <= SIMHASH_MAX_BUCKET)
-        .when(chan == WINNOW, n <= config.winnow_max_df)
-        .otherwise(True)
-    )
+    representation kernel. Buckets are capped by :func:`channel_keep` and
+    pairs flagged by :func:`channel_flags` — the per-channel functions'
+    pairs."""
     pairs = bucket_pairs(
-        posting_table(payload, config, nbits), config, keep, carry=("simhash",)
+        posting_table(payload, config, nbits),
+        config,
+        channel_keep(config),
+        carry=("simhash",),
     )
-    near = shash.hamming(F.col("simhash1"), F.col("simhash2"))
     flags = pairs.groupBy("id1", "id2").agg(
-        F.bool_or(chan == LSH).alias("f0"),
-        F.bool_or(
-            (chan == SIMHASH) & (near <= config.hamming_radius)
-        ).alias("f1"),
-        (F.count_if(chan == WINNOW) >= WINNOW_MIN_SHARED).alias("f2"),
+        *channel_flags(config, "simhash1", "simhash2")
     )
-    on = [F.col(f"f{i}") for i in range(len(CHANNELS))]
+    on = [F.col(c) for c in CHANNELS]
     return flags.where(on[0] | on[1] | on[2]).select(
         "id1",
         "id2",

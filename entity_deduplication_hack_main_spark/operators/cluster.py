@@ -71,7 +71,6 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     config: DedupConfig | None = None,
-    use_reliable_checkpoint: bool = False,
     local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """(node, cluster_id): cluster_id = min node id in the component.
@@ -105,8 +104,7 @@ def connected_components(
             head = pinned.collect()
     try:
         return _connected_components_impl(
-            edges, head, vertices, config, use_reliable_checkpoint,
-            local_threshold,
+            edges, head, vertices, config, local_threshold
         )
     finally:
         if pinned is not None:
@@ -118,7 +116,6 @@ def _connected_components_impl(
     head,
     vertices: DataFrame | None,
     config: DedupConfig,
-    use_reliable_checkpoint: bool,
     local_threshold: int,
 ) -> DataFrame:
     if head is not None and len(head) <= local_threshold:
@@ -143,17 +140,13 @@ def _connected_components_impl(
         return universe.join(F.broadcast(lbl), "node", "left").select(
             "node", F.coalesce("_lbl", "node").alias("cluster_id")
         )
-    def ckpt(df: DataFrame) -> DataFrame:
-        if use_reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    sym = ckpt(
+    sym = (
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionByName(
             edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     if vertices is not None:
@@ -162,7 +155,7 @@ def _connected_components_impl(
         ).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
 
-    labels = ckpt(labels)
+    labels = labels.localCheckpoint(eager=True)
     prev = _checksum(labels)
     for _ in range(config.max_cc_iterations):
         # 1. min label among neighbors
@@ -189,7 +182,7 @@ def _connected_components_impl(
                 "node", F.coalesce("p_label", "label").alias("label")
             )
         )
-        labels = ckpt(jumped)
+        labels = jumped.localCheckpoint(eager=True)
         cur = _checksum(labels)
         if cur == prev:
             break

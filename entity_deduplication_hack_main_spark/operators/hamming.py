@@ -21,19 +21,6 @@ from entity_deduplication_hack_main_spark.functions import simhash as shash
 from entity_deduplication_hack_main_spark.operators import candidates as cand
 
 
-def simhash_table(
-    docs: DataFrame,
-    config: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    """(id, simhash) via the Arrow kernel."""
-    return shash.with_simhash(docs, text_col, "simhash", hash_strategy).select(
-        F.col(id_col).alias("id"), "simhash"
-    )
-
-
 def hamming_candidate_pairs(
     sim_table: DataFrame,
     config: DedupConfig,
@@ -52,7 +39,8 @@ def hamming_candidate_pairs(
 
     materialize: pin the block table (localCheckpoint) — the size count
     and both join sides re-reference it, re-running the simhash input
-    subtree per reference otherwise. Off by default for streaming batches.
+    subtree per reference otherwise. Off by default: a cheap or
+    already-committed input costs less to re-read than one checkpoint job.
     """
     blocks = sim_table.select(
         "id",

@@ -133,31 +133,14 @@ def candidate_pairs(
     and both join sides re-reference it, and Catalyst duplicates the whole
     upstream subtree per reference (the r05 verify_candidate_pairs plan
     carried 44 copies of the representation kernel), so pinning computes
-    the banding input once per invocation. Off by default: streaming
-    micro-batches are smaller than the checkpoint overhead, and the
-    pipeline's :func:`candidates.channel_candidates` reads a committed
-    payload instead.
+    the banding input once per invocation. Off by default: a cheap or
+    already-committed band input costs less to re-read than one
+    checkpoint job, and the pin is left to GC.
     """
     if materialize:
         bands = bands.localCheckpoint()
     postings = cand.one_channel(bands, "band_id", "band_hash")
     return cand.bucket_pairs(postings, config).select("id1", "id2").distinct()
-
-
-def documents_to_candidates(
-    docs: DataFrame,
-    config: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    """text → representation kernel → bands → distinct candidate pairs."""
-    from entity_deduplication_hack_main_spark.functions import represent
-
-    sig = represent.with_representation(
-        docs, config, id_col, text_col, hash_strategy
-    ).select("id", "signature")
-    return candidate_pairs(band_hashes(sig, config, id_col="id"), config)
 
 
 # --- DuckDB oracle (unsalted — salting is a physical rewrite, the logical

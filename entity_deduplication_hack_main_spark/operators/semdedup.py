@@ -81,7 +81,9 @@ def semantic_dup_pairs(
     """(id1, id2, cosine): within-cell pairs with cosine ≥ threshold,
     id1 < id2. Pair generation is the salted LSH bucket join (cells are
     buckets); cosine is re-fetched + computed JVM-side on the candidate
-    set only."""
+    set only. Kept as the reference that
+    :func:`semantic_dup_pairs_matmul`, the path :func:`semantic_dedup`
+    runs, is tested against."""
     buckets = cells.select(
         "id", F.lit(0).alias("band_id"), F.col("cell").alias("band_hash")
     )
@@ -246,7 +248,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     anchors: np.ndarray | None = None,
-    use_matmul: bool = True,
     materialize: bool = False,
 ) -> DataFrame:
     """(vec_id, cell, kept): SemDeDup decision per vector.
@@ -254,11 +255,8 @@ def semantic_dedup(
     kept = false iff a lower-id vector in the same cell is within the
     cosine threshold (greedy lowest-id-survives). One row per input
     vector — the stable-cardinality curation report; filter
-    ``kept`` for the surviving corpus.
-
-    use_matmul: score within-cell pairs with
-    :func:`semantic_dup_pairs_matmul` (bit-identical, ~10x cheaper) —
-    the expression path stays for parity testing. materialize: pin the
+    ``kept`` for the surviving corpus. Within-cell pairs are scored by
+    :func:`semantic_dup_pairs_matmul`. materialize: pin the
     cell assignment (localCheckpoint) — pair generation and the final
     left join re-reference it, and the 16-anchor argmax expression is
     the most expensive per-row work in this operator.
@@ -268,9 +266,8 @@ def semantic_dedup(
     cells = assign_cells(emb, anchors, id_col, vec_col)
     if materialize:
         cells = cells.localCheckpoint()
-    pair_fn = semantic_dup_pairs_matmul if use_matmul else semantic_dup_pairs
     dropped = (
-        pair_fn(cells, config, threshold)
+        semantic_dup_pairs_matmul(cells, config, threshold)
         .select(F.col("id2").alias("id"))
         .distinct()
     )

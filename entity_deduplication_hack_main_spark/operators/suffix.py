@@ -82,21 +82,6 @@ def winnow_pairs_from_payload(
     )
 
 
-def substring_candidate_pairs(
-    docs: DataFrame,
-    config: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int | None = None,
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    """Standalone: docs → kernel → winnow fingerprint candidate pairs."""
-    payload = represent.with_representation(
-        docs, config, id_col, text_col, hash_strategy
-    ).select("id", "winnow_fps")
-    return winnow_pairs_from_payload(payload, max_df=max_df)
-
-
 def verify_containment(
     pairs: DataFrame,
     docs: DataFrame,
@@ -222,7 +207,8 @@ def sql_winnowed_pairs(
     max_df: int | None = None,
     min_shared: int = 2,
 ) -> str:
-    """DuckDB SELECT matching :func:`substring_candidate_pairs` (md5)."""
+    """DuckDB SELECT matching :func:`winnow_pairs_from_payload` over the
+    md5-strategy representation kernel."""
     if max_df is None:
         max_df = config.winnow_max_df
     return f"""

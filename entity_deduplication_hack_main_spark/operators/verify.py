@@ -26,23 +26,6 @@ from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import textstats
 
 
-def doc_payload(
-    docs: DataFrame,
-    config: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    """(id, shingle_set, fp, …) — per-doc verification payload via the
-    representation kernel (functions/represent.py) so shingle identity is
-    consistent with candidate generation."""
-    from entity_deduplication_hack_main_spark.functions import represent
-
-    return represent.with_representation(
-        docs, config, id_col, text_col, hash_strategy
-    ).select("id", "shingle_set", "fp")
-
-
 def overlap_sizes(df: DataFrame, s1: str = "s1", s2: str = "s2") -> DataFrame:
     """``df`` plus ``_inter`` = |S1 ∩ S2|, ``_n1`` = |S1|, ``_n2`` = |S2|,
     projected once so every exact-set measure derives from plain ints.

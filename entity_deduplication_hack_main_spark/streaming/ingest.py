@@ -37,46 +37,60 @@ Per micro-batch (`foreachBatch`), with `near_dup=True` (default):
    2-token-edit near-exact inside one batch survived streaming but not
    batch), then connected components; only each component's min-id
    representative survives;
-3. *against the corpus*, one join per channel — every channel's decision
-   threshold is ``jaccard_candidate``, the SAME value the in-batch /
-   batch-pipeline edge rule passes at (``verify_pairs_full`` status), so a
-   pair reaches the identical verdict whether it arrives in one batch or
-   split across two (r04 advice #5 — corpus channels previously decided
-   at ``jaccard_similar``, so an exact-J-0.6 pair deduped in-batch but
-   survived cross-batch):
-   - MinHash: the batch's band hashes join the committed band index
-     (bounded: bands×docs rows, no signatures re-read); candidates are
-     scored by MinHash signature agreement (the unbiased Jaccard
-     estimate; the committed shingle sets are not retained). Clear-cut
-     candidates (|estimate − threshold| > the ±2.5σ band of
-     :func:`est_margin`) are decided by the estimate alone; *borderline*
-     candidates are re-verified exactly: the few committed docs involved
-     are fetched from the deduped output table, re-shingled, and compared
-     by true Jaccard — so batch and streaming agree on every pair except
-     the (exponentially rare) ones whose estimate errs by more than the
-     margin;
-   - SimHash: the batch's 4×16-bit pigeonhole blocks join the committed
-     simhash index (one bigint per committed doc, kept in `_index`);
-     Hamming <= radius drops the new doc — exact, no text fetch;
-   - winnow: the batch's winnow fingerprints join the committed
-     `_winnow_index` (df-capped on the committed side — same boilerplate
-     cap as the batch channel); pairs sharing >= 2 fingerprints fetch the
-     committed text and drop on EXACT jaccard >= threshold OR containment
-     >= containment_threshold (the batch edge rule's containment leg);
+3. *against the corpus*, one posting probe — the batch's
+   ``candidates.posting_table`` (band keys, SimHash blocks, winnow
+   fingerprints) joins ONE committed posting frame built from the band
+   index, the ``_index`` simhash blocks and the winnow index; each
+   channel keeps the batch pipeline's bucket cap
+   (``candidates.channel_keep``) and pair flag
+   (``candidates.channel_flags``), derived in one ``groupBy(id, old_id)``.
+   Every channel's decision threshold is ``jaccard_candidate``, the SAME
+   value the in-batch / batch-pipeline edge rule passes at
+   (``verify_pairs_full`` status), so a pair reaches the identical verdict
+   whether it arrives in one batch or split across two (r04 advice #5 —
+   corpus channels previously decided at ``jaccard_similar``, so an
+   exact-J-0.6 pair deduped in-batch but survived cross-batch):
+   - MinHash: LSH pairs are scored by MinHash signature agreement (the
+     unbiased Jaccard estimate; the committed shingle sets are not
+     retained). Clear-cut candidates (|estimate − threshold| > the ±2.5σ
+     band of :func:`est_margin`) are decided by the estimate alone;
+     *borderline* candidates are re-verified exactly, so batch and
+     streaming agree on every pair except the (exponentially rare) ones
+     whose estimate errs by more than the margin;
+   - SimHash: a shared 16-bit block with Hamming <= radius drops the new
+     doc — exact from the index (one bigint per committed doc), no text
+     fetch;
+   - winnow: pairs sharing ``WINNOW_MIN_SHARED`` fingerprints (df-capped
+     on the committed side — same boilerplate cap as the batch channel)
+     drop on EXACT jaccard >= threshold OR containment >=
+     containment_threshold (the batch edge rule's containment leg);
+   - the exact re-verify runs ONCE per batch, for the borderline and
+     winnow pairs together: the few committed docs involved are fetched
+     from the deduped output table, re-shingled, and intersected once;
+4. one batch tail for both modes: survivors append to the output plus
+   the index tables — `_index` (id, fp, signature, simhash; id, fp only
+   with ``near_dup=False``), `_band_index` (id, band_id, band_hash),
+   `_winnow_index` (id, wfp) and, when the URL channel is on,
+   `_url_index` (id, url_key) — and one `_streaming_lineage` row
+   records the batch's decision counts (input, fresh, per-channel
+   candidates/drops, borderline estimate outcomes incl. how many exact
+   re-verifies FLIPPED the estimate's call, and the below-band kept tail)
+   so estimate drift is observable (r03 verdict #7).
 
-Per-batch cost vs the committed corpus (r04 verdict #3): the three index
-tables are written with a ``kb`` key-bucket column (hash of the join key
-mod :data:`N_KEY_BUCKETS`), range-clustered within each batch partition,
-and every corpus-side read pushes ``In(kb, <batch's buckets>)`` into the
-parquet scan — file/row-group skipping over plain parquet, no metastore
-bucketing, and legacy (pre-``kb``) files surface kb NULL and are read in
-full. After the pruned scan, the committed side is LEFT-SEMI-reduced by a
-broadcast of the batch's distinct keys BEFORE any window/aggregate, so the
-per-key df caps (winnow boilerplate, SimHash degenerate buckets) count the
-matched subset only — identical counts (key equality keeps whole key
-groups) without the full-index window shuffle a growing corpus cannot
-afford. The one remaining O(corpus) term is the `_index` SCAN (one narrow
-row per committed doc, for signatures + simhashes); it is never shuffled —
+Per-batch cost vs the committed corpus (r04 verdict #3): the index tables
+(:data:`STATE_TABLES`, one reader and one writer) are written with a
+``kb`` key-bucket column (hash of the join key mod :data:`N_KEY_BUCKETS`),
+range-clustered within each batch partition, and every corpus-side read
+pushes ``In(kb, <batch's buckets>)`` into the parquet scan — file/row-group
+skipping over plain parquet, no metastore bucketing, and legacy
+(pre-``kb``) files surface kb NULL and are read in full. After the pruned
+scan, the committed postings are LEFT-SEMI-reduced by a broadcast of the
+batch's distinct ``(chan, kid, key)`` BEFORE the partial-aggregate bucket
+sizing, so the per-bucket caps (winnow boilerplate, SimHash degenerate
+buckets) count the matched subset only — identical counts (key equality
+keeps whole buckets) without aggregating the whole index. The one
+remaining O(corpus) term is the `_index` SCAN (one narrow row per
+committed doc, for simhash blocks + signatures); it is never shuffled —
 signature lookups broadcast-semi-reduce by candidate ids. See SCALE.md
 for the cost model.
 
@@ -99,14 +113,6 @@ file set per batch per state table, so a quiescent-window rewrite folds
 all committed partitions into the ``batch_id = -1`` sentinel partition
 in the kb-range-clustered layout — O(1) files per key bucket again,
 reads and retry semantics unchanged.
-4. survivors append to the output plus the index tables — `_index`
-   (id, fp, signature, simhash), `_band_index` (id, band_id, band_hash),
-   `_winnow_index` (id, wfp) and, when the URL channel is on,
-   `_url_index` (id, url_key) — and one `_streaming_lineage` row
-   records the batch's decision counts (input, fresh, per-channel
-   candidates/drops, borderline estimate outcomes incl. how many exact
-   re-verifies FLIPPED the estimate's call, and the below-band kept tail)
-   so estimate drift is observable (r03 verdict #7).
 
 Benchmark decontamination at ingest: pass ``holdout=`` to drop batch
 docs contaminated against an eval corpus (exact fp + band-collision →
@@ -133,6 +139,13 @@ the overwrite on s3a/hdfs). If a checkpoint block is lost mid-batch the
 batch fails and the foreachBatch retry recomputes it — idempotent by the
 partition-overwrite design above.
 
+Pins: every frame a batch checkpoints or persists goes on one list that
+is released when the batch ends, on success and on failure — never
+earlier, since a released checkpoint fails any later read of a frame
+derived from it (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+``DataFrame.unpersist()`` does not free a ``localCheckpoint``'s blocks, so
+those are released through the checkpointed RDD of their plan.
+
 State growth: the indexes carry O(1 row + bands rows) per committed doc —
 fingerprint + 8-byte signature entries, never full text — which is the
 bounded-memory alternative to `dropDuplicates` + watermark state (bounded
@@ -144,7 +157,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
@@ -158,7 +171,6 @@ from entity_deduplication_hack_main_spark.operators import (
 from entity_deduplication_hack_main_spark.operators import (
     linededup as linededup_op,
 )
-from entity_deduplication_hack_main_spark.operators import lsh as lsh_op
 from entity_deduplication_hack_main_spark.operators import suffix as suffix_op
 from entity_deduplication_hack_main_spark.operators import (
     urldedup as urldedup_op,
@@ -171,6 +183,23 @@ from entity_deduplication_hack_main_spark.plans import fsutil
 #: is collected to the driver (bounded by this constant) and pushed into
 #: the committed-side parquet scans as an In() filter
 N_KEY_BUCKETS = 256
+
+#: SimHash width: the streaming path uses the xxhash64 strategy
+NBITS = 64
+
+#: the committed state tables, ``<workdir>/<name>``: each table's columns
+#: between ``id`` and ``kb``, and the join key its ``kb`` column buckets.
+#: Every table is partitioned by ``batch_id``. One row per committed doc in ``_index``
+#: and ``_url_index``; one per band, resp. winnow fingerprint, in
+#: ``_band_index`` and ``_winnow_index`` (bigint keys: the band index grows
+#: bands rows per doc forever, and an 8-byte key vs a 32-char md5 string is
+#: a 2.5x standing size difference).
+STATE_TABLES = {
+    "_index": ("fp string, signature array<bigint>, simhash bigint", "fp"),
+    "_band_index": ("band_id int, band_hash bigint", "band_hash"),
+    "_winnow_index": ("wfp bigint", "wfp"),
+    "_url_index": ("url_key string", "url_key"),
+}
 
 
 def _kb(col) -> "F.Column":
@@ -193,6 +222,34 @@ def est_margin(config: DedupConfig) -> float:
 
     t = float(config.jaccard_candidate)
     return 2.5 * math.sqrt(t * (1.0 - t) / config.num_perms)
+
+
+class _Pins:
+    """Every frame one micro-batch pins, released together when the batch
+    ends, on success and on failure. Never earlier: a released checkpoint
+    fails every later read of a frame derived from it."""
+
+    def __init__(self) -> None:
+        self._releases = []
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint(eager=True)``. ``DataFrame.unpersist()``
+        does not free a local checkpoint's blocks, so it is released
+        through the checkpointed RDD its plan scans."""
+        out = df.localCheckpoint(eager=True)
+        rdd = out._jdf.logicalPlan().rdd()
+        self._releases.append(lambda: rdd.unpersist(False))
+        return out
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        out = df.persist()
+        self._releases.append(out.unpersist)
+        return out
+
+    def release(self) -> None:
+        for release in self._releases:
+            release()
+        self._releases.clear()
 
 
 class StreamingDedup:
@@ -313,8 +370,8 @@ class StreamingDedup:
         not raise AnalysisException or depend on which parquet footer
         Spark samples for schema inference (r04 advice #1). Every null a
         legacy row surfaces is tolerated downstream: null simhash blocks
-        explode to nothing, null signatures never cross the estimate band,
-        null kb rows are exempt from pruning."""
+        never join, null signatures never cross the estimate band, null kb
+        rows are exempt from pruning."""
         if fsutil.exists(self.spark, path):
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.createDataFrame([], schema)
@@ -338,70 +395,19 @@ class StreamingDedup:
             r[0] for r in df.select(_kb(key_col).alias("kb")).distinct().collect()
         ]
 
-    def _index(
+    def _state(
         self,
+        table: str,
         exclude_batch: int,
         id_type: str = "string",
         kbs: list[int] | None = None,
     ) -> DataFrame:
-        sig = (
-            ", signature array<bigint>, simhash bigint"
-            if self.near_dup
-            else ""
-        )
+        """The committed rows of state table *table* (a :data:`STATE_TABLES`
+        name) outside batch *exclude_batch*, kb-pruned to *kbs* if given."""
+        cols, _ = STATE_TABLES[table]
         df = self._read_or_empty(
-            self.index_path,
-            f"id {id_type}, fp string{sig}, kb int, batch_id bigint",
-        )
-        return self._kb_prune(
-            df.where(F.col("batch_id") != F.lit(exclude_batch)), kbs
-        )
-
-    def _winnow_index(
-        self,
-        exclude_batch: int,
-        id_type: str = "string",
-        kbs: list[int] | None = None,
-    ) -> DataFrame:
-        # one row per winnow fingerprint per committed doc — density is
-        # ~2/(w+1) of shingle positions (~4% of tokens), the same bounded
-        # state class as the band index
-        df = self._read_or_empty(
-            self.winnow_path, f"id {id_type}, wfp bigint, kb int, batch_id bigint"
-        )
-        return self._kb_prune(
-            df.where(F.col("batch_id") != F.lit(exclude_batch)), kbs
-        )
-
-    def _band_index(
-        self,
-        exclude_batch: int,
-        id_type: str = "string",
-        kbs: list[int] | None = None,
-    ) -> DataFrame:
-        # bigint band keys (xxhash64) — the persisted index grows one row
-        # per band per committed doc forever, so the 8-byte key vs a
-        # 32-char md5 string is a 2.5x standing size difference
-        df = self._read_or_empty(
-            self.band_path,
-            f"id {id_type}, band_id int, band_hash bigint, kb int, "
-            "batch_id bigint",
-        )
-        return self._kb_prune(
-            df.where(F.col("batch_id") != F.lit(exclude_batch)), kbs
-        )
-
-    def _url_index(
-        self,
-        exclude_batch: int,
-        id_type: str = "string",
-        kbs: list[int] | None = None,
-    ) -> DataFrame:
-        # one row per committed canonical url — the same bounded state
-        # class as the fingerprint index (narrow strings, never text)
-        df = self._read_or_empty(
-            self.url_path,
-            f"id {id_type}, url_key string, kb int, batch_id bigint",
+            os.path.join(self.workdir, table),
+            f"id {id_type}, {cols}, kb int, batch_id bigint",
         )
         return self._kb_prune(
             df.where(F.col("batch_id") != F.lit(exclude_batch)), kbs
@@ -441,7 +447,7 @@ class StreamingDedup:
         for bad in contaminated:
             b = bad.select(F.col(bad.columns[0]).alias("id"))
             reg = reg.join(F.broadcast(b), "id", "left_anti")
-        self._write_index(reg, self.url_path, batch_id, F.col("url_key"))
+        self._write_index(reg, "_url_index", batch_id)
 
     def _overwrite_partition(self, df: DataFrame, path: str, batch_id: int):
         (
@@ -452,36 +458,40 @@ class StreamingDedup:
             .parquet(path)
         )
 
-    def _write_index(
-        self, df: DataFrame, path: str, batch_id: int, key_col
-    ) -> None:
-        """Index write in the prunable layout: kb = key bucket of the join
-        key, RANGE-clustered across the batch's files and sorted within
-        them, so parquet min/max stats make the read-side In(kb) filter
-        skip whole files/row groups. One extra narrow shuffle per index
-        write — the price of never re-scanning the full committed index
-        per micro-batch."""
-        out = df.withColumn("kb", _kb(key_col))
+    def _write_index(self, df: DataFrame, table: str, batch_id: int) -> None:
+        """Write state table *table* in the prunable layout: kb = key
+        bucket of its join key, RANGE-clustered across the batch's files
+        and sorted within them, so parquet min/max stats make the read-side
+        In(kb) filter skip whole files/row groups. One extra narrow shuffle
+        per index write — the price of never re-scanning the full committed
+        index per micro-batch."""
+        out = df.withColumn("kb", _kb(F.col(STATE_TABLES[table][1])))
         self._overwrite_partition(
             out.repartitionByRange("kb").sortWithinPartitions("kb"),
-            path,
+            os.path.join(self.workdir, table),
             batch_id,
         )
 
     # --- the micro-batch body ---------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        cfg = self.config
+        pins = _Pins()
+        try:
+            self._ingest(batch, batch_id, pins)
+        finally:
+            pins.release()
+
+    def _ingest(self, batch: DataFrame, batch_id: int, pins: _Pins) -> None:
         id_type = batch.schema[self.id_col].dataType.simpleString()
+        n_input = batch.count()
 
         # URL channel (module docstring item 0) — before any content work:
-        # canonical recrawls collapse in-batch, committed canonical keys
-        # drop, and every NEW key is registered ("first crawl wins")
+        # canonical recrawls collapse in-batch and committed canonical keys
+        # drop. The NEW keys register in the batch tail (_register_urls),
+        # once the contaminated docs, which must not register, are known.
         n_url_dup = 0
-        n_input = None
-        _url_kept = None
+        url_kept = None
         if self.url_col is not None:
-            n_input = batch.count()
             keyed = urldedup_op.dedup_by_url(
                 batch,
                 id_col=self.id_col,
@@ -490,168 +500,134 @@ class StreamingDedup:
             )
             kbs_u = self._batch_kbs(keyed, F.col("url_key"))
             prior_urls = (
-                self._url_index(
-                    exclude_batch=batch_id, id_type=id_type, kbs=kbs_u
-                )
+                self._state("_url_index", batch_id, id_type, kbs_u)
                 .select("url_key")
                 .distinct()
             )
-            # localCheckpoint BEFORE this batch's later url_path write:
-            # the anti-join's lineage reads url_path. NULL url_keys
-            # (unparseable URLs) pass dedup_by_url through and never match
-            # the anti-join — kept, with no index entry.
-            _url_kept = keyed.join(
-                prior_urls, "url_key", "left_anti"
-            ).localCheckpoint(eager=True)
-            n_url_dup = n_input - _url_kept.count()
-            batch = _url_kept.drop("url_key")
-            # the index write is DEFERRED to the end of the batch (each
-            # path calls _register_urls): contaminated docs must not
-            # register their canonical key — the holdout promise is that
-            # NO dedup state sees them, and a registered key would block
-            # a future clean recrawl of that URL forever. Content-dup
-            # drops DO register (a recrawl of a dup page is still a
-            # recrawl).
-
-        with_fp = batch.withColumn(
-            "fp", textstats.fingerprint(F.col(self.text_col))
-        )
-        from pyspark.sql import Window
+            # checkpointed: the anti-join's lineage reads _url_index, which
+            # the tail overwrites. NULL url_keys (unparseable URLs) never
+            # match the anti-join — kept, with no index entry.
+            url_kept = pins.checkpoint(
+                keyed.join(prior_urls, "url_key", "left_anti")
+            )
+            n_url_dup = n_input - url_kept.count()
+            batch = url_kept.drop("url_key")
 
         # exact channel: one doc per fingerprint in-batch (min id), then
-        # drop fps already committed by OTHER batches (retry-safe read)
+        # drop fps already committed by OTHER batches (retry-safe read of
+        # the batch's key buckets only)
         w = Window.partitionBy("fp").orderBy(self.id_col)
         first = (
-            with_fp.withColumn("_rn", F.row_number().over(w))
+            batch.withColumn("fp", textstats.fingerprint(F.col(self.text_col)))
+            .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # fp anti-join reads only the batch's key buckets of the committed
-        # index (kb pruning); the full one-row-per-doc index is read
-        # separately (prior_full) for signature/simhash lookups
         kbs_fp = self._batch_kbs(first, F.col("fp"))
-        prior_fps = self._index(
-            exclude_batch=batch_id, id_type=id_type, kbs=kbs_fp
-        ).select("fp")
-        # localCheckpoint, not cache: fresh's lineage reads index_path,
-        # which this batch later overwrites — truncate it (module docstring)
-        fresh = first.join(
-            prior_fps.distinct(), "fp", "left_anti"
-        ).localCheckpoint(eager=True)
+        prior_fps = self._state("_index", batch_id, id_type, kbs_fp).select("fp")
+        # checkpointed, not cached: fresh's lineage reads _index, which the
+        # tail overwrites (module docstring)
+        fresh = pins.checkpoint(first.join(prior_fps.distinct(), "fp", "left_anti"))
 
-        # n-gram holdout channel (docstring): runs on BOTH paths, before
-        # any representation/state work — quoted-eval-span docs never get
-        # signatures computed, never reach an index
-        n_contaminated_ngram = 0
-        _contam_flags: list[DataFrame] = []  # fed to _register_urls
-        _flag_ckpts: list[DataFrame] = []  # every checkpointed flag frame
+        # holdout channels (docstring). The n-gram channel runs on BOTH
+        # paths, before any representation/state work — quoted-eval-span
+        # docs never get signatures computed, never reach an index.
+        contaminated: list[DataFrame] = []  # flagged ids, for _register_urls
+        n_ngram = 0
         if self.holdout is not None and self.holdout_ngram_n is not None:
-            # checkpointed: reused by _register_urls AFTER the parent
-            # frame's checkpoint blocks are unpersisted
-            ng_flagged = self._ngram_contaminated_ids(fresh).localCheckpoint(
-                eager=True
-            )
-            _flag_ckpts.append(ng_flagged)
-            n_contaminated_ngram = ng_flagged.count()
-            if n_contaminated_ngram:
-                _contam_flags.append(ng_flagged)
-                _fresh_pre_ngram = fresh
-                fresh = fresh.join(
-                    F.broadcast(ng_flagged), self.id_col, "left_anti"
-                ).localCheckpoint(eager=True)
-                _fresh_pre_ngram.unpersist()  # superseded checkpoint blocks
+            flagged = pins.checkpoint(self._ngram_contaminated_ids(fresh))
+            n_ngram = flagged.count()
+            if n_ngram:
+                contaminated.append(flagged)
+                fresh = pins.checkpoint(
+                    fresh.join(F.broadcast(flagged), self.id_col, "left_anti")
+                )
 
-        if not self.near_dup:
-            n_contaminated = 0
+        n_contaminated = 0
+        if self.near_dup:
+            payload = pins.persist(
+                represent.with_representation(
+                    fresh, self.config, self.id_col, self.text_col
+                )
+            )
             if self.holdout is not None:
-                # exact decontamination channel only: no batch
-                # representation exists on this path (docstring)
+                # both whole-doc channels (exact fp + band collision → exact
+                # Jaccard), holdout broadcast
+                flagged = pins.checkpoint(
+                    decon_op.decontaminate(
+                        payload,
+                        self._holdout_rep(),
+                        self.config,
+                        threshold=self.holdout_threshold,
+                        broadcast_ref=True,
+                    ).select(F.col("doc_id").alias("id"))
+                )
+                n_contaminated = flagged.count()
+                if n_contaminated:
+                    contaminated.append(flagged)
+                    payload = pins.persist(
+                        payload.join(F.broadcast(flagged), "id", "left_anti")
+                    )
+            out_rows, state, near_counts = self._near_dup(
+                fresh, payload, batch_id, id_type, pins
+            )
+        else:
+            if self.holdout is not None:
+                # the exact channel only: no batch representation exists
                 hold_fps = F.broadcast(
                     self._holdout_rep().select("fp").distinct()
                 )
-                exact_flagged = (
-                    fresh.join(hold_fps, "fp", "left_semi")
-                    .select(self.id_col)
-                    .localCheckpoint(eager=True)
+                flagged = pins.checkpoint(
+                    fresh.join(hold_fps, "fp", "left_semi").select(self.id_col)
                 )
-                _flag_ckpts.append(exact_flagged)
-                n_contaminated = exact_flagged.count()
+                n_contaminated = flagged.count()
                 if n_contaminated:
-                    _contam_flags.append(exact_flagged)
-                    _fresh_pre_exact = fresh
-                    fresh = fresh.join(
-                        hold_fps, "fp", "left_anti"
-                    ).localCheckpoint(eager=True)
-                    _fresh_pre_exact.unpersist()
-            self._overwrite_partition(fresh.drop("fp"), self.out_path, batch_id)
-            self._write_index(
-                fresh.select(F.col(self.id_col).alias("id"), "fp"),
-                self.index_path,
-                batch_id,
-                F.col("fp"),
-            )
-            self._register_urls(_url_kept, batch_id, _contam_flags)
-            # the exact-only path records its decisions too (the holdout
-            # docstring's audit promise must not depend on near_dup)
-            counts = {
-                "n_input": batch.count() if n_input is None else n_input,
-                "n_fresh": fresh.count(),
-                "n_contaminated": n_contaminated,
-                "n_contaminated_ngram": n_contaminated_ngram,
-                "n_url_dup": n_url_dup,
-            }
-            self._overwrite_partition(
-                self.spark.createDataFrame(
-                    [tuple(counts.values())],
-                    ", ".join(f"{k} bigint" for k in counts),
-                ),
-                self.lineage_path,
-                batch_id,
-            )
-            fresh.unpersist()
-            if _url_kept is not None:
-                _url_kept.unpersist()
-            for df in _flag_ckpts:
-                df.unpersist()
-            return
-        prior_full = self._index(exclude_batch=batch_id, id_type=id_type)
+                    contaminated.append(flagged)
+                    fresh = pins.checkpoint(
+                        fresh.join(hold_fps, "fp", "left_anti")
+                    )
+            out_rows, near_counts = fresh, {}
+            state = {"_index": fresh.select(F.col(self.id_col).alias("id"), "fp")}
 
-        payload = represent.with_representation(
-            fresh, cfg, self.id_col, self.text_col
-        ).cache()
-        nbits = 64  # xxhash64 strategy on the streaming path
+        # the lineage row (r03 verdict #7), counted before any write
+        counts = {
+            "n_input": n_input,
+            "n_fresh": fresh.count(),
+            "n_contaminated": n_contaminated,
+            "n_contaminated_ngram": n_ngram,
+            **near_counts,
+            "n_url_dup": n_url_dup,
+        }
 
-        # decontamination gate (docstring): flag-and-drop vs the holdout
-        # BEFORE any dedup state or output sees the batch — both channels
-        # (exact fp + band-collision→exact-Jaccard), holdout broadcast
-        n_contaminated = 0
-        _payload_raw = None
-        if self.holdout is not None:
-            flagged = (
-                decon_op.decontaminate(
-                    payload,
-                    self._holdout_rep(),
-                    cfg,
-                    threshold=self.holdout_threshold,
-                    broadcast_ref=True,
-                )
-                .select(F.col("doc_id").alias("id"))
-                .localCheckpoint(eager=True)  # reused by _register_urls
-            )
-            _flag_ckpts.append(flagged)
-            n_contaminated = flagged.count()
-            if n_contaminated:
-                _contam_flags.append(flagged)
-                _payload_raw = payload
-                payload = payload.join(
-                    F.broadcast(flagged), "id", "left_anti"
-                ).cache()
+        # the batch tail (module docstring item 4)
+        self._overwrite_partition(out_rows.drop("fp"), self.out_path, batch_id)
+        for table, rows in state.items():
+            self._write_index(rows, table, batch_id)
+        self._register_urls(url_kept, batch_id, contaminated)
+        self._overwrite_partition(
+            self.spark.createDataFrame(
+                [tuple(counts.values())],
+                ", ".join(f"{k} bigint" for k in counts),
+            ),
+            self.lineage_path,
+            batch_id,
+        )
 
-        # near-dup WITHIN the batch: the batch pipeline's candidate stage
-        # (all three recall channels, one bucket self-join), full measure
-        # set and edge rule (r03 verdict #3), then components;
+    def _near_dup(
+        self,
+        fresh: DataFrame,
+        payload: DataFrame,
+        batch_id: int,
+        id_type: str,
+        pins: _Pins,
+    ) -> tuple[DataFrame, dict[str, DataFrame], dict[str, int]]:
+        """Module docstring items 2 and 3: the surviving ``fresh`` rows,
+        the rows they add to each state table, and the decision counts."""
+        cfg = self.config
+        # near-dup WITHIN the batch: the batch pipeline's candidate stage,
+        # full measure set and edge rule (r03 verdict #3), then components;
         # non-representative (non-min-id) members drop
-        in_cand = cand_op.channel_candidates(payload, cfg, nbits)
+        in_cand = cand_op.channel_candidates(payload, cfg, NBITS)
         verified = verify_op.verify_pairs_full(in_cand, payload, cfg)
         edges = verify_op.duplicate_edges_full(
             verified, cfg, self.containment_threshold
@@ -660,44 +636,25 @@ class StreamingDedup:
         in_batch_drop = labels.where(
             F.col("node") != F.col("cluster_id")
         ).select(F.col("node").alias("id"))
-        kept = payload.join(in_batch_drop, "id", "left_anti").cache()
+        kept = pins.persist(payload.join(in_batch_drop, "id", "left_anti"))
 
-        # --- vs the committed corpus, channel 1: MinHash ------------------
-        # shared band bucket → signature agreement (MinHash Jaccard
-        # estimate); borderline estimates get an exact-Jaccard re-verify
-        # against the committed docs' re-shingled text so batch and
-        # streaming agree on the same pair (r02 verdict)
-        kept_bands = lsh_op.band_hashes(kept, cfg, "signature", "id", "xxhash64")
-        kbs_band = self._batch_kbs(kept_bands, F.col("band_hash"))
-        old_bands = (
-            self._band_index(
-                exclude_batch=batch_id, id_type=id_type, kbs=kbs_band
-            )
-            .select(F.col("id").alias("old_id"), "band_id", "band_hash")
-            # broadcast semi-reduce on the batch's band keys: only matching
-            # committed rows ever shuffle into the candidate join
+        # vs the committed corpus: one posting probe, then each channel's
+        # decision rule
+        post = cand_op.posting_table(kept, cfg, NBITS)
+        pairs = pins.persist(self._corpus_pairs(post, batch_id, id_type))
+        lsh, sh, wn = (F.col(c) for c in cand_op.CHANNELS)
+        # signature lookup: the one-row-per-doc index is scanned and
+        # semi-reduced by the LSH pairs' committed ids, never shuffled
+        sigs = (
+            self._state("_index", batch_id, id_type)
             .join(
                 F.broadcast(
-                    kept_bands.select("band_id", "band_hash").distinct()
+                    pairs.where(lsh).select(F.col("old_id").alias("id")).distinct()
                 ),
-                ["band_id", "band_hash"],
+                "id",
                 "left_semi",
             )
-        )
-        cand = (
-            kept_bands.join(old_bands, ["band_id", "band_hash"])
-            .select("id", "old_id")
-            .distinct()
-            .persist()  # reused: scored AND the old_sigs semi-reduction
-        )
-        # signature lookup: semi-reduce the one-row-per-doc index by the
-        # (bounded) candidate id set — the index is scanned, never shuffled
-        old_sigs = prior_full.join(
-            F.broadcast(cand.select(F.col("old_id").alias("id")).distinct()),
-            "id",
-            "left_semi",
-        ).select(
-            F.col("id").alias("old_id"), F.col("signature").alias("old_sig")
+            .select(F.col("id").alias("sig_id"), F.col("signature").alias("old_sig"))
         )
         agree = F.size(
             F.filter(
@@ -705,219 +662,151 @@ class StreamingDedup:
                 lambda x: x,
             )
         ) / F.lit(cfg.num_perms)
+        # _est: the MinHash estimate of an LSH pair with a committed
+        # signature row, NULL for every other pair
+        scored = pins.persist(
+            pairs.join(kept.select("id", "signature", "shingle_set"), "id")
+            .join(sigs, (F.col("old_id") == F.col("sig_id")) & lsh, "left")
+            .withColumn("_est", agree)
+        )
         # decision threshold = the batch edge rule's pass mark (advice #5:
         # cross-batch and in-batch verdicts must agree on the same pair)
-        t = float(cfg.jaccard_candidate)
-        scored = (
-            cand.join(kept.select("id", "signature", "shingle_set"), "id")
-            .join(old_sigs, "old_id")
-            .withColumn("_est", agree)
-            .persist()
-        )
-        m = est_margin(cfg)
-        sure_drop = scored.where(
-            F.col("_est") >= F.lit(t + m)
-        ).select("id")
-        borderline = scored.where(
-            (F.col("_est") < F.lit(t + m))
-            & (F.col("_est") >= F.lit(t - m))
-        ).select("id", "old_id", "_est", "shingle_set")
-        bl_meas = self._exact_pair_measures(
-            borderline, batch_id, id_type
-        ).persist()
-        borderline_drop = bl_meas.where(
-            F.col("ex_jaccard") >= F.lit(t)
-        ).select("id")
-
-        # --- channel 2: SimHash Hamming vs the committed simhash index ---
-        # exact from the index (one bigint per committed doc) — no text
-        # fetch; same 4x16-bit pigeonhole blocks + bucket cap as the batch
-        # channel (hamming.hamming_candidate_pairs)
-        from pyspark.sql import Window as W
-
-        old_sim = prior_full.select(
-            F.col("id").alias("old_id"), F.col("simhash").alias("old_sh")
-        )
-        new_blocks = kept.select(
-            "id",
-            "simhash",
-            F.explode(
-                shash.simhash_blocks(F.col("simhash"), cfg, nbits)
-            ).alias("b"),
-        ).select("id", "simhash", "b.block_id", "b.block_key")
-        # broadcast semi-reduce on the batch's block keys BEFORE the
-        # degenerate-bucket count: the count per (block_id, block_key) is
-        # identical on the matched subset (key equality keeps whole key
-        # groups), but the window no longer shuffles the entire committed
-        # corpus every micro-batch (r04 advice #3)
-        old_blocks = (
-            old_sim.select(
-                "old_id",
-                "old_sh",
-                F.explode(
-                    shash.simhash_blocks(F.col("old_sh"), cfg, nbits)
-                ).alias("b"),
-            )
-            .select("old_id", "old_sh", "b.block_id", "b.block_key")
-            .join(
-                F.broadcast(
-                    new_blocks.select("block_id", "block_key").distinct()
+        t, m = float(cfg.jaccard_candidate), est_margin(cfg)
+        est = F.col("_est")
+        sure = est >= t + m
+        borderline = (est < t + m) & (est >= t - m)
+        # one exact re-verify for the borderline estimates and winnow pairs
+        meas = pins.persist(
+            self._exact_pair_measures(
+                scored.where(borderline | wn).select(
+                    "id", "old_id", "shingle_set", "_est", wn
                 ),
-                ["block_id", "block_key"],
-                "left_semi",
+                batch_id,
+                id_type,
             )
-            .withColumn(
-                "_n", F.count("*").over(W.partitionBy("block_id", "block_key"))
-            )
-            .where(F.col("_n") <= 10000)  # degenerate-fp coverage cap
         )
-        sh_drop = (
-            new_blocks.join(old_blocks, ["block_id", "block_key"])
-            .where(
-                shash.hamming(F.col("simhash"), F.col("old_sh"))
-                <= cfg.hamming_radius
-            )
-            .select("id")
-            .distinct()
-            .persist()
+        exact = F.col("ex_jaccard") >= t
+        bl_drop = borderline & exact
+        wn_drop = wn & (
+            exact | (F.col("ex_containment") >= self.containment_threshold)
         )
-
-        # --- channel 3: winnow fingerprints vs the committed index -------
-        # pairs sharing >= 2 committed fps fetch the committed text and
-        # drop on EXACT jaccard or containment — the batch edge rule's
-        # containment leg, which the estimate channels cannot see
-        # (containment-dups sit below the symmetric-Jaccard threshold)
-        new_fps = kept.select("id", F.explode("winnow_fps").alias("wfp"))
-        kbs_w = self._batch_kbs(new_fps, F.col("wfp"))
-        # pruned scan + broadcast semi-reduce on the batch's fps, THEN the
-        # boilerplate df count on the matched subset — exact per matched
-        # key, and the committed index is never re-windowed whole
-        old_fps = (
-            self._winnow_index(
-                exclude_batch=batch_id, id_type=id_type, kbs=kbs_w
-            )
-            .select(F.col("id").alias("old_id"), "wfp")
-            .join(
-                F.broadcast(new_fps.select("wfp").distinct()),
-                "wfp",
-                "left_semi",
-            )
-            .withColumn("_df", F.count("*").over(W.partitionBy("wfp")))
-            .where(F.col("_df") <= cfg.winnow_max_df)  # boilerplate cap
-        )
-        wn_cand = (
-            new_fps.join(old_fps.select("old_id", "wfp"), "wfp")
-            .groupBy("id", "old_id")
-            .agg(F.count("*").alias("_nfp"))
-            .where(F.col("_nfp") >= 2)
-            .join(kept.select("id", "shingle_set"), "id")
-            .select("id", "old_id", "shingle_set")
-            .persist()
-        )
-        wn_meas = self._exact_pair_measures(wn_cand, batch_id, id_type)
-        wn_drop = (
-            wn_meas.where(
-                (F.col("ex_jaccard") >= F.lit(t))
-                | (F.col("ex_containment") >= F.lit(self.containment_threshold))
-            )
-            .select("id")
-            .distinct()
-            .persist()
-        )
-
         corpus_drop = (
-            sure_drop.unionByName(borderline_drop)
-            .unionByName(sh_drop)
-            .unionByName(wn_drop)
+            scored.where(sure | sh)
+            .select("id")
+            .unionByName(meas.where(bl_drop | wn_drop).select("id"))
             .distinct()
         )
-        # localCheckpoint: survivors' lineage reads index_path, band_path,
-        # winnow_path AND out_path (exact text fetches) — all overwritten
-        # below
-        survivors = (
-            kept.join(corpus_drop, "id", "left_anti")
-            .select("id")
-            .localCheckpoint(eager=True)
+        # checkpointed: survivors' lineage reads every state table and the
+        # output table (exact text fetches), all overwritten by the tail
+        survivors = pins.checkpoint(
+            kept.join(corpus_drop, "id", "left_anti").select("id")
         )
 
-        # --- per-batch decision counts (r03 verdict #7) --------------------
-        # Evaluated BEFORE the index/output writes: the candidate frames
-        # (scored, bl_meas, …) read the committed index paths this batch is
-        # about to overwrite, and persist() alone does not pin them — AQE
-        # empty-relation pruning can skip a cached subtree entirely while
-        # materializing `survivors` (seen when the committed corpus is
-        # empty: the post-write count then re-listed the band index and
-        # collided with the batch's own fresh write). Counting here forces
-        # every frame onto its pre-write file listing.
-        est_says_drop = F.col("_est") >= F.lit(t)
-        exact_says_drop = F.col("ex_jaccard") >= F.lit(t)
+        # Counted BEFORE the tail's writes: the candidate frames read the
+        # committed paths this batch is about to overwrite, and persist()
+        # alone does not pin them — AQE empty-relation pruning can skip a
+        # cached subtree entirely while materializing `survivors` (seen
+        # when the committed corpus is empty: a post-write count then
+        # re-listed the band index and collided with the batch's own fresh
+        # write). Counting here forces every frame onto its pre-write file
+        # listing.
         counts = {
-            "n_input": batch.count() if n_input is None else n_input,
-            "n_fresh": fresh.count(),
-            "n_contaminated": n_contaminated,
-            "n_contaminated_ngram": n_contaminated_ngram,
             "n_inbatch_drop": in_batch_drop.count(),
-            "mh_candidates": scored.count(),
-            "mh_sure_drop": sure_drop.count(),
-            "mh_borderline": bl_meas.count(),
-            "mh_borderline_drop": bl_meas.where(exact_says_drop).count(),
-            "mh_borderline_flipped": bl_meas.where(
-                est_says_drop != exact_says_drop
+            "mh_candidates": scored.where(F.col("sig_id").isNotNull()).count(),
+            "mh_sure_drop": scored.where(sure).count(),
+            "mh_borderline": meas.where(borderline).count(),
+            "mh_borderline_drop": meas.where(bl_drop).count(),
+            "mh_borderline_flipped": meas.where(
+                borderline & ((est >= t) != exact)
             ).count(),
-            "mh_below_band_kept": scored.where(
-                F.col("_est") < F.lit(t - m)
-            ).count(),
-            "sh_drop": sh_drop.count(),
-            "wn_candidates": wn_cand.count(),
-            "wn_drop": wn_drop.count(),
+            "mh_below_band_kept": scored.where(est < t - m).count(),
+            "sh_drop": scored.where(sh).select("id").distinct().count(),
+            "wn_candidates": pairs.where(wn).count(),
+            "wn_drop": meas.where(wn_drop).select("id").distinct().count(),
             "n_survivors": survivors.count(),
-            "n_url_dup": n_url_dup,
         }
 
+        new_post = post.join(survivors, "id", "left_semi")
+        chan, kid, key = F.col("chan"), F.col("kid"), F.col("key")
+        state = {
+            "_index": kept.join(survivors, "id", "left_semi").select(
+                "id", "fp", "signature", "simhash"
+            ),
+            "_band_index": new_post.where(chan == cand_op.LSH).select(
+                "id", kid.alias("band_id"), key.alias("band_hash")
+            ),
+            "_winnow_index": new_post.where(chan == cand_op.WINNOW).select(
+                "id", key.alias("wfp")
+            ),
+        }
         out_rows = fresh.join(
             survivors.withColumnRenamed("id", self.id_col), self.id_col, "left_semi"
         )
-        self._overwrite_partition(out_rows.drop("fp"), self.out_path, batch_id)
-        self._write_index(
-            kept.join(survivors, "id", "left_semi").select(
-                "id", "fp", "signature", "simhash"
-            ),
-            self.index_path,
-            batch_id,
-            F.col("fp"),
-        )
-        self._write_index(
-            kept_bands.join(survivors, "id", "left_semi"),
-            self.band_path,
-            batch_id,
-            F.col("band_hash"),
-        )
-        self._write_index(
-            kept.join(survivors, "id", "left_semi").select(
-                "id", F.explode("winnow_fps").alias("wfp")
-            ),
-            self.winnow_path,
-            batch_id,
-            F.col("wfp"),
-        )
-        self._register_urls(_url_kept, batch_id, _contam_flags)
+        return out_rows, state, counts
 
-        schema = ", ".join(f"{k} bigint" for k in counts)
-        self._overwrite_partition(
-            self.spark.createDataFrame([tuple(counts.values())], schema),
-            self.lineage_path,
-            batch_id,
-        )
-        for df in (
-            payload, kept, cand, scored, bl_meas, sh_drop, wn_cand, wn_drop
+    def _corpus_pairs(
+        self, post: DataFrame, batch_id: int, id_type: str
+    ) -> DataFrame:
+        """``(id, old_id, <CHANNELS flags>)``: the batch's postings *post*
+        probed against the committed postings in one join (module docstring
+        item 3)."""
+        cfg = self.config
+        chan = F.col("chan")
+        kbs = {cand_op.LSH: [], cand_op.WINNOW: []}
+        for c, kb in (
+            post.where(chan != cand_op.SIMHASH)
+            .select("chan", _kb(F.col("key")))
+            .distinct()
+            .collect()
         ):
-            df.unpersist()
-        if _payload_raw is not None:
-            _payload_raw.unpersist()
-        if _url_kept is not None:
-            _url_kept.unpersist()
-        for df in _flag_ckpts:
-            df.unpersist()
+            kbs[c].append(kb)
+
+        def postings(df, c, kid, key, sh=F.lit(None).cast("bigint")):
+            return df.select(
+                F.col("id").alias("old_id"),
+                F.lit(c).alias("chan"),
+                kid.alias("kid"),
+                key.alias("key"),
+                sh.alias("old_sh"),
+            )
+
+        bands = self._state("_band_index", batch_id, id_type, kbs[cand_op.LSH])
+        blocks = self._state("_index", batch_id, id_type).select(
+            "id",
+            "simhash",
+            F.explode(shash.simhash_blocks(F.col("simhash"), cfg, NBITS)).alias(
+                "b"
+            ),
+        )
+        fps = self._state("_winnow_index", batch_id, id_type, kbs[cand_op.WINNOW])
+        bucket = cand_op.BUCKET
+        committed = (
+            postings(bands, cand_op.LSH, F.col("band_id"), F.col("band_hash"))
+            .unionByName(
+                postings(
+                    blocks,
+                    cand_op.SIMHASH,
+                    F.col("b.block_id"),
+                    F.col("b.block_key"),
+                    F.col("simhash"),
+                )
+            )
+            .unionByName(postings(fps, cand_op.WINNOW, F.lit(0), F.col("wfp")))
+            # broadcast semi-reduce on the batch's keys BEFORE the sizing:
+            # key equality keeps whole buckets, so the committed-side sizes
+            # are exact, and the committed index is never aggregated whole
+            .join(F.broadcast(post.select(*bucket).distinct()), bucket, "left_semi")
+        )
+        sizes = (
+            committed.groupBy(*bucket)
+            .agg(F.count("*").alias("n"))
+            .where(cand_op.channel_keep(cfg))
+        )
+        return (
+            post.join(committed.join(sizes, bucket, "left_semi"), bucket)
+            .groupBy("id", "old_id")
+            .agg(*cand_op.channel_flags(cfg, "simhash", "old_sh"))
+        )
 
     def _exact_pair_measures(
         self, pairs: DataFrame, batch_id: int, id_type: str
@@ -930,11 +819,11 @@ class StreamingDedup:
         when both sets are empty and ``ex_containment`` when either is
         (batch verify says 0.0 there).
 
-        Bounded: only borderline MinHash candidates (the ±2.5σ
-        est_margin band — a few % of candidates) and >=2-shared-fp winnow
-        candidates reach this, and only distinct old_ids are fetched
-        (left-semi on the committed table, pushed down to the parquet
-        scan).
+        Called once per batch, on the union of the borderline MinHash
+        candidates (the ±2.5σ est_margin band — a few % of candidates) and
+        the winnow candidates, so a pair in both is measured once; only
+        distinct old_ids are fetched (left-semi on the committed table,
+        pushed down to the parquet scan).
         """
         out = self._read_or_empty(
             self.out_path,
@@ -1064,21 +953,17 @@ class StreamingDedup:
 
         Returns {table: {"files_before": n, "files_after": n}}."""
         stats = {}
-        for name, path, has_kb in (
-            ("index", self.index_path, True),
-            ("band_index", self.band_path, True),
-            ("winnow_index", self.winnow_path, True),
-            ("url_index", self.url_path, True),
-            ("deduped", self.out_path, False),
-        ):
+        for name in (*STATE_TABLES, "deduped"):
+            path = os.path.join(self.workdir, name)
             if not fsutil.exists(self.spark, path):
                 continue
             # mergeSchema: partitions written by older engine versions may
             # lack newer columns — the fold must not drop them
             df = self.spark.read.option("mergeSchema", "true").parquet(path)
             before = df.select(F.input_file_name()).distinct().count()
-            folded = df.drop("batch_id").localCheckpoint(eager=True)
-            if has_kb and "kb" in folded.columns:
+            pins = _Pins()  # released once the fold is written
+            folded = pins.checkpoint(df.drop("batch_id"))
+            if "kb" in folded.columns:
                 folded = folded.repartitionByRange(
                     int(files_per_table), "kb"
                 ).sortWithinPartitions("kb")
@@ -1097,13 +982,17 @@ class StreamingDedup:
                 .mode("overwrite")
                 .parquet(path)
             )
+            pins.release()
             after = (
                 self.spark.read.parquet(path)
                 .select(F.input_file_name())
                 .distinct()
                 .count()
             )
-            stats[name] = {"files_before": before, "files_after": after}
+            stats[name.lstrip("_")] = {
+                "files_before": before,
+                "files_after": after,
+            }
         return stats
 
     def start(self, source_dir: str, schema: str, trigger_once: bool = True):

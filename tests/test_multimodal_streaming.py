@@ -359,7 +359,7 @@ def test_streaming_index_reads_push_kb_pruning(spark, tmp_path):
     all_kbs = [r["kb"] for r in committed.select("kb").distinct().collect()]
     assert all(k is not None for k in all_kbs)
     # the pruned read pushes the filter into the scan...
-    pruned = sd._band_index(exclude_batch=99, id_type="string", kbs=all_kbs)
+    pruned = sd._state("_band_index", exclude_batch=99, id_type="string", kbs=all_kbs)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     flat = plan.replace(" ", "")
     assert "PushedFilters" in plan and "In(kb" in flat, plan
@@ -367,7 +367,7 @@ def test_streaming_index_reads_push_kb_pruning(spark, tmp_path):
     # non-legacy rows for disjoint buckets
     assert pruned.count() == committed.count()
     miss = [k for k in range(256) if k not in all_kbs][:2]
-    assert sd._band_index(exclude_batch=99, id_type="string", kbs=miss).count() == 0
+    assert sd._state("_band_index", exclude_batch=99, id_type="string", kbs=miss).count() == 0
 
 
 def test_streaming_cross_batch_threshold_matches_in_batch(spark, tmp_path):
@@ -767,7 +767,7 @@ def test_streaming_url_channel_contaminated_urls_not_registered(
     # schema-enforced production reader: the index dir may exist with
     # zero files when every batch doc was contamination-dropped
     keys = {
-        r["url_key"] for r in sd._url_index(exclude_batch=-999).collect()
+        r["url_key"] for r in sd._state("_url_index", exclude_batch=-999).collect()
     }
     assert "h.example/quote" not in keys
     # a CLEAN page at the same canonical url must still be ingestible
@@ -785,6 +785,96 @@ def test_streaming_url_channel_contaminated_urls_not_registered(
     }
     assert lin[1]["n_url_dup"] == 0
     keys = {
-        r["url_key"] for r in sd._url_index(exclude_batch=-999).collect()
+        r["url_key"] for r in sd._state("_url_index", exclude_batch=-999).collect()
     }
     assert keys == {"h.example/quote"}
+
+
+@pytest.fixture
+def two_batches(spark):
+    """Batch 0 commits two docs; batch 1 brings a contained chunk of the
+    first (winnow channel), a token permutation of the second (SimHash
+    channel only: shingle Jaccard ~0) and one new doc."""
+    import random
+
+    schema = "url string, warc_ts timestamp, text string"
+    c_doc = " ".join(f"etok{i}" for i in range(60))
+    shuffled = c_doc.split()
+    random.Random(2).shuffle(shuffled)
+    batch0 = [("uA", None, " ".join(f"gamma{i}" for i in range(200))),
+              ("uC", None, c_doc)]
+    batch1 = [("uB", None, " ".join(f"gamma{i}" for i in range(50, 150))),
+              ("uD", None, " ".join(shuffled)),
+              ("uE", None, " ".join(f"new{i}" for i in range(60)))]
+    return [spark.createDataFrame(b, schema) for b in (batch0, batch1)]
+
+
+def _run(spark, sd, batches):
+    """Process *batches* as batches 0.. and return the lineage rows."""
+    for b, df in enumerate(batches):
+        sd.process_batch(df, b)
+    return {
+        r["batch_id"]: r for r in spark.read.parquet(sd.lineage_path).collect()
+    }
+
+
+def _pinned_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_streaming_batch_releases_its_pins(spark, tmp_path, monkeypatch,
+                                           two_batches):
+    """Every checkpoint and cache a batch pins is released when the batch
+    ends, when it commits and when it fails mid-tail."""
+    sd = StreamingDedup(spark, str(tmp_path / "wd"), config=_sd_config())
+    before = _pinned_rdds(spark)
+    sd.process_batch(two_batches[0], 0)
+    assert _pinned_rdds(spark) <= before
+
+    def boom(*_):
+        raise RuntimeError("index write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(StreamingDedup, "_write_index", boom)
+        with pytest.raises(RuntimeError, match="index write failed"):
+            sd.process_batch(two_batches[1], 1)
+    assert _pinned_rdds(spark) <= before
+    # the retry commits and releases too
+    sd.process_batch(two_batches[1], 1)
+    assert _pinned_rdds(spark) <= before
+    urls = {r["url"] for r in spark.read.parquet(sd.out_path).collect()}
+    assert urls == {"uA", "uC", "uE"}, urls
+
+
+def test_streaming_simhash_cap_is_the_batch_constant(spark, tmp_path,
+                                                     monkeypatch, two_batches):
+    """The committed SimHash bucket cap is candidates.SIMHASH_MAX_BUCKET:
+    under a cap of 0 every committed bucket is over it, so the SimHash-only
+    duplicate survives."""
+    from entity_deduplication_hack_main_spark.operators import candidates
+
+    monkeypatch.setattr(candidates, "SIMHASH_MAX_BUCKET", 0)
+    sd = StreamingDedup(spark, str(tmp_path / "wd"), config=_sd_config())
+    lin = _run(spark, sd, two_batches)
+    assert lin[1]["sh_drop"] == 0
+    urls = {r["url"] for r in spark.read.parquet(sd.out_path).collect()}
+    assert urls == {"uA", "uC", "uD", "uE"}, urls
+
+
+def test_streaming_one_exact_reverify_per_batch(spark, tmp_path, monkeypatch,
+                                                two_batches):
+    """Borderline MinHash pairs and winnow pairs share one exact
+    re-verify per near-dup batch."""
+    calls = []
+    measure = StreamingDedup._exact_pair_measures
+
+    def spy(self, *args):
+        calls.append(args[1])  # the batch id
+        return measure(self, *args)
+
+    monkeypatch.setattr(StreamingDedup, "_exact_pair_measures", spy)
+    sd = StreamingDedup(spark, str(tmp_path / "wd"), config=_sd_config())
+    lin = _run(spark, sd, two_batches)
+    assert calls == [0, 1]
+    assert lin[1]["wn_candidates"] >= 1 and lin[1]["wn_drop"] >= 1
+    assert lin[1]["sh_drop"] >= 1
