@@ -3,7 +3,7 @@
 
 Default mode (driver contract): runs the headline queries + the full dedup
 pipeline at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS or the host's CPU count] and prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...}, "sf": ..., "docs_per_sec": ...}
 
@@ -244,7 +244,11 @@ def main() -> None:
                          "(true N-core machines, not local[N] task caps)")
     args = ap.parse_args()
 
-    cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from entity_deduplication_hack_main_spark.session import (
+        default_parallelism,
+    )
+
+    cpus = args.cpus or default_parallelism()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     if args.pipeline_only:

@@ -29,7 +29,6 @@ class DedupConfig:
     jaccard_similar: float = 0.7      # similar if J >= 0.7
     jaccard_candidate: float = 0.5    # below this a candidate is "conflict"
     # --- SimHash channel -------------------------------------------------
-    simhash_bits: int = 64
     simhash_blocks: int = 4     # Hamming-ball block index (4 x 16-bit keys)
     hamming_radius: int = 3     # near-exact if Hamming distance <= r
     # --- skew handling ---------------------------------------------------

@@ -84,29 +84,6 @@ def _seg_stats(segs: Column):
     return F.size(segs), F.size(segs) - F.size(dist), chars, chars - chars_first
 
 
-def line_dup_counts(text: Column) -> Column:
-    """struct(n_lines, n_dup_lines, line_chars, dup_line_chars) — exact
-    integers; lines split on single newlines."""
-    n, nd, c, dc = _seg_stats(F.split(text, "\n"))
-    return F.struct(
-        n.alias("n_lines"),
-        nd.alias("n_dup_lines"),
-        c.alias("line_chars"),
-        dc.alias("dup_line_chars"),
-    )
-
-
-def paragraph_dup_counts(text: Column) -> Column:
-    """Same statistics over blank-line-separated paragraphs."""
-    n, nd, c, dc = _seg_stats(F.split(text, "\n\n"))
-    return F.struct(
-        n.alias("n_paras"),
-        nd.alias("n_dup_paras"),
-        c.alias("para_chars"),
-        dc.alias("dup_para_chars"),
-    )
-
-
 def _frac(num: Column, den: Column) -> Column:
     return F.round(
         F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0)), 6
@@ -246,10 +223,7 @@ def repetition_scores(
     Embarrassingly parallel: one projection + one Arrow kernel pass, no
     shuffle — the 100 TB shape for a per-document quality scorer.
     """
-    from entity_deduplication_hack_main_spark.functions import (
-        hashes,
-        represent,
-    )
+    from entity_deduplication_hack_main_spark.functions import represent
 
     text = F.coalesce(F.col(text_col), F.lit(""))
     toks = textnorm.tokens(textnorm.normalize(text))

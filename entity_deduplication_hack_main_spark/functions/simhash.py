@@ -7,82 +7,19 @@ token multiset. Candidates come from a block index (4 x 16-bit keys: any two
 docs within Hamming distance 3 share at least one of 4 blocks, pigeonhole),
 verified with ``bit_count(xor) <= r``.
 
-Execution contract mirrors functions/represent.py: token hashing JVM-side,
-fingerprint assembly in an Arrow-batched numpy kernel (loop over bit chunks,
-never over rows). The oracle variant uses 60-bit md5-derived token hashes so
-DuckDB reproduces the exact fingerprint integers.
+The fingerprint itself is computed by the representation kernel
+(functions/represent.py); this module holds the block index, the Hamming
+distance and the DuckDB oracle. The oracle variant uses 60-bit md5-derived
+token hashes so DuckDB reproduces the exact fingerprint integers.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import hashes, textnorm
-
-_BIT_CHUNK = 16
-
-
-def _simhash_batch(lists: pd.Series, nbits: int) -> pd.Series:
-    if len(lists) == 0:
-        return pd.Series([], dtype=np.int64)
-    lengths = np.fromiter((len(x) for x in lists), dtype=np.int64, count=len(lists))
-    safe = [x if len(x) else [0] for x in lists]
-    flat = np.concatenate([np.asarray(x, dtype=np.uint64) for x in safe])
-    offsets = np.zeros(len(lists), dtype=np.int64)
-    np.cumsum(np.maximum(lengths, 1)[:-1], out=offsets[1:])
-    fp = np.zeros(len(lists), dtype=np.uint64)
-    for b0 in range(0, nbits, _BIT_CHUNK):
-        b1 = min(b0 + _BIT_CHUNK, nbits)
-        shifts = np.arange(b0, b1, dtype=np.uint64)
-        bits = ((flat[None, :] >> shifts[:, None]) & np.uint64(1)).astype(np.int64)
-        sums = np.add.reduceat(2 * bits - 1, offsets, axis=1)
-        # rows with empty token lists contribute nothing
-        sums[:, lengths == 0] = 0
-        bitvals = (sums > 0).astype(np.uint64)
-        for j in range(b0, b1):
-            fp |= bitvals[j - b0] << np.uint64(j)
-    return pd.Series(fp.astype(np.int64))
-
-
-def simhash_udf(nbits: int = 64):
-    """pandas UDF: array<bigint> token hashes → bigint fingerprint."""
-
-    @F.pandas_udf(LongType())
-    def _simhash(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for lists in it:
-            yield _simhash_batch(lists, nbits)
-
-    return _simhash
-
-
-def token_hashes(text_col: Column, hash_strategy: str = "xxhash64") -> Column:
-    """Per-occurrence token hashes (JVM): array<bigint>.
-
-    'xxhash64' → full 64-bit (production); 'md5' → 60-bit non-negative
-    (oracle-reproducible).
-    """
-    toks = textnorm.tokens(textnorm.normalize(text_col))
-    if hash_strategy == "xxhash64":
-        return F.transform(toks, lambda t: F.xxhash64(t))
-    return F.transform(toks, lambda t: hashes.md5_long(t))
-
-
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    nbits = 64 if hash_strategy == "xxhash64" else 60
-    th = token_hashes(F.col(text_col), hash_strategy)
-    return df.withColumn(out_col, simhash_udf(nbits)(th))
 
 
 def simhash_blocks(fp_col: Column, config: DedupConfig, nbits: int = 64) -> Column:

@@ -53,20 +53,6 @@ def distinct_token_count(text: Column) -> Column:
     return F.size(F.array_distinct(textnorm.tokens(textnorm.normalize(text))))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of *lang*."""
-    toks = textnorm.tokens(textnorm.normalize(text))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    n = F.size(toks)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def lang_scores(text: Column) -> Column:
-    """struct of per-language stopword ratios; argmax = predicted language."""
-    return F.struct(*[stopword_ratio(text, lg).alias(lg) for lg in STOPWORDS])
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are not letters/digits/whitespace."""
     n = F.length(text)
@@ -114,12 +100,6 @@ def stopword_ratio_from(toks: Column, lang: str = "en") -> Column:
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     n = F.size(toks)
     return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def lang_scores_from(toks: Column) -> Column:
-    return F.struct(
-        *[stopword_ratio_from(toks, lg).alias(lg) for lg in STOPWORDS]
-    )
 
 
 def mean_token_len_from(toks: Column) -> Column:

@@ -1,70 +1,78 @@
-"""Union-find connected components as iterative DataFrame self-joins.
+"""Union-find connected components: vectorized on the driver when the
+edges fit, iterative DataFrame self-joins when they do not.
 
 The reference leaves duplicate *resolution* as future work (README.md:7 —
-matches stay pairwise); the north_rule requires transitive clustering. We
-use min-label propagation with pointer jumping (a DataFrame rendering of
-hash-to-min, cf. Kiveris et al. "Connected Components in MapReduce and
-Beyond" and PAPERS.md "BTS: Load-Balanced Distributed Union-Find",
-ICDE 2024): each iteration every node adopts the min label in its
-neighborhood, then labels are compressed by one pointer-jump
-(label ← label(label)) — convergence in O(log diameter) rounds.
+matches stay pairwise); the north_rule requires transitive clustering.
+Both paths label every node with the minimum id of its component.
 
-Scale design: each iteration is two shuffles (groupBy min + join); the
-frontier DataFrame is checkpointed every round to cut lineage (the
-north_rule's "checkpointed frontiers"), convergence is detected by an
-order-insensitive label-set checksum, and an iteration cap guards
-pathological inputs.
+Local path (edge count <= ``local_threshold``, the common case after
+verification: dup edges << docs): the edges reach the driver as ONE
+guarded Arrow collect, ids are mapped to dense ints with ``pyarrow.compute``
+(any orderable type, string urls included), and a numpy union-find hooks
+each larger root under the smaller one (``np.minimum.at``) and pointer-jumps
+to a fixpoint — no per-row Python. The vertex universe never leaves the
+cluster: singletons are attached by a distributed left join.
+
+Distributed path: min-label propagation with pointer jumping (a DataFrame
+rendering of hash-to-min, cf. Kiveris et al. "Connected Components in
+MapReduce and Beyond" and PAPERS.md "BTS: Load-Balanced Distributed
+Union-Find", ICDE 2024): each round every node adopts the min label in its
+neighborhood, then labels are compressed by one pointer jump
+(label <- label(label)). That takes O(log diameter) rounds when ids ascend
+along paths but up to diameter rounds on adversarial id orders (label 0
+moves one hop per round along the path 0, n-1, n-2, ..., 1). Each round
+is checkpointed (the north_rule's "checkpointed frontiers"); an
+``Observation`` on that checkpoint counts the nodes whose label changed,
+and the loop converges when the count is 0 — no separate convergence job.
+A round's checkpoint is released once the next one is materialized, and
+the symmetric edge table once the loop ends, so only the returned labels'
+checkpoint outlives the call. Each round plans over the previous
+checkpoint without the size estimate it carried (``pins.unsized``), so
+planning stays flat up to the iteration cap that guards pathological
+inputs.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.config import DedupConfig
+from entity_deduplication_hack_main_spark.plans.pins import Pins, unsized
 
 
-def _checksum(labels: DataFrame) -> int:
-    row = labels.select(
-        F.sum(F.xxhash64("node", "label").cast("decimal(38,0)")).alias("c"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    return hash((str(row["c"]), row["n"]))
-
-
-def _local_union_find(edge_rows) -> tuple[list, list]:
-    """Driver-side union-find with path compression over EDGE ENDPOINTS
-    ONLY; returns the (nodes, labels) columns, label = min member.
-    Identical labels to the distributed loop for every edge-touched node —
-    isolated vertices never reach the driver (they are attached
-    distributedly as singletons by the caller)."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            nxt = parent[x]
-            parent[x] = root
-            x = nxt
-        return root
-
-    def union(x, y):
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            # union by min keeps the final relabel trivial
-            lo, hi = (rx, ry) if rx < ry else (ry, rx)
-            parent[hi] = lo
-
-    nodes = set()
-    for r in edge_rows:
-        union(r[0], r[1])
-        nodes.add(r[0])
-        nodes.add(r[1])
-    nodes = list(nodes)
-    return nodes, [find(n) for n in nodes]
+def _min_labels(head: pa.Table) -> pa.Table:
+    """(node, cluster_id) over the endpoints of the ``(id1, id2)`` edge
+    table ``head``; cluster_id = min member id."""
+    m = head.num_rows
+    ends = pa.concat_arrays(
+        [head["id1"].combine_chunks(), head["id2"].combine_chunks()]
+    )
+    nodes = pc.unique(ends)
+    # sorted dense ids: the min dense id of a component is its min id
+    nodes = nodes.take(pc.array_sort_indices(nodes))
+    dense = pc.index_in(ends, value_set=nodes).to_numpy()
+    u, v = dense[:m], dense[m:]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        # an edge inside one component stays inside it: drop it
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        # hook each larger root under the smallest root it touches
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        # parent[x] <= x, so jumping reaches each node's root
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return pa.table({"node": nodes, "cluster_id": nodes.take(parent)})
 
 
 def connected_components(
@@ -79,119 +87,100 @@ def connected_components(
     universe — isolated vertices become singleton clusters.
     Works for any orderable id type (string urls or bigint doc ids).
 
-    Hybrid execution: if the edge count is under ``local_threshold`` the
-    edge-touched components are solved with a driver-side union-find
-    (milliseconds, exact same labels) and the vertex universe NEVER leaves
-    the cluster — singletons are attached by a distributed left join with
-    ``coalesce(label, node)``. This is the common case after verification
-    (dup edges ≪ docs): a 10^12-doc corpus with 1M dup edges collects 1M
-    rows, not 10^12. The gate is a cheap ``limit(threshold+1).count()``
-    probe first — edges only reach the driver once the count is KNOWN to
-    fit, so an over-threshold input never materializes 2M+ Row objects in
-    Python heap just to discard them (round-2 advice). Edges are persisted
-    across the probe + collect (and the distributed loop's iterations) so
-    the two actions don't recompute the upstream verify lineage.
-    Above the threshold the iterative distributed loop runs.
-    Set ``local_threshold=0`` to force the distributed path.
+    Hybrid execution: the edges are collected with one guarded
+    ``limit(local_threshold + 1).toArrow()`` job — at most threshold+1
+    rows ever reach the driver. If they fit, the edge-touched components
+    are labelled on the driver (module docstring) and the vertex universe
+    NEVER leaves the cluster: singletons are attached by a distributed
+    left join with ``coalesce(label, node)``. A 10^12-doc corpus with 1M
+    dup edges collects 1M edges, not 10^12 docs. Above the threshold the
+    iterative distributed loop runs. Set ``local_threshold=0`` to force
+    the distributed path.
     """
     config = config or DedupConfig()
-    head = None
-    pinned = None
     if local_threshold:
-        pinned = edges.select("id1", "id2").persist()
-        edges = pinned
-        if pinned.limit(local_threshold + 1).count() <= local_threshold:
-            head = pinned.collect()
+        head = edges.select("id1", "id2").limit(local_threshold + 1).toArrow()
+        if head.num_rows <= local_threshold:
+            t = edges.schema["id1"].dataType.simpleString()
+            # Arrow columns: the JVM reads the batches directly, no
+            # Python-worker job (empty columns cast to `t` too)
+            labels = edges.sparkSession.createDataFrame(
+                _min_labels(head), f"node {t}, cluster_id {t}"
+            )
+            if vertices is None:
+                return labels
+            universe = (
+                vertices.toDF("node")
+                .select("node")
+                .unionByName(labels.select("node"))
+                .distinct()
+            )
+            lbl = labels.withColumnRenamed("cluster_id", "_lbl")
+            return universe.join(F.broadcast(lbl), "node", "left").select(
+                "node", F.coalesce("_lbl", "node").alias("cluster_id")
+            )
+    pins = Pins()
     try:
-        return _connected_components_impl(
-            edges, head, vertices, config, local_threshold
-        )
-    finally:
-        if pinned is not None:
-            pinned.unpersist()
-
-
-def _connected_components_impl(
-    edges: DataFrame,
-    head,
-    vertices: DataFrame | None,
-    config: DedupConfig,
-    local_threshold: int,
-) -> DataFrame:
-    if head is not None and len(head) <= local_threshold:
-        spark = edges.sparkSession
-        t = edges.schema["id1"].dataType.simpleString()
-        nodes, roots = _local_union_find(head)
-        # Arrow columns, not pickled rows: the JVM reads the batches
-        # directly, no Python-worker job (empty columns cast to `t` too)
-        labels = spark.createDataFrame(
-            pa.table({"node": nodes, "cluster_id": roots}),
-            f"node {t}, cluster_id {t}",
-        )
-        if vertices is None:
-            return labels
-        universe = (
-            vertices.toDF("node")
-            .select("node")
-            .unionByName(labels.select("node"))
+        sym = pins.checkpoint(
+            edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+            .unionByName(
+                edges.select(
+                    F.col("id2").alias("src"), F.col("id1").alias("dst")
+                )
+            )
             .distinct()
         )
-        lbl = labels.withColumnRenamed("cluster_id", "_lbl")
-        return universe.join(F.broadcast(lbl), "node", "left").select(
-            "node", F.coalesce("_lbl", "node").alias("cluster_id")
+        nodes = sym.select(F.col("src").alias("node")).distinct()
+        if vertices is not None:
+            nodes = nodes.unionByName(
+                vertices.toDF("node").select("node")
+            ).distinct()
+        labels = pins.checkpoint(
+            nodes.select("node", F.col("node").alias("label"))
         )
-    sym = (
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    if vertices is not None:
-        nodes = nodes.unionByName(
-            vertices.toDF("node").select("node")
-        ).distinct()
-    labels = nodes.select("node", F.col("node").alias("label"))
-
-    labels = labels.localCheckpoint(eager=True)
-    prev = _checksum(labels)
-    for _ in range(config.max_cc_iterations):
-        # 1. min label among neighbors
-        neigh = (
-            sym.join(labels, sym["src"] == labels["node"])
-            .groupBy("dst")
-            .agg(F.min("label").alias("nlabel"))
-            .withColumnRenamed("dst", "node")
-        )
-        merged = (
-            labels.join(neigh, "node", "left")
-            .select(
+        for _ in range(config.max_cc_iterations):
+            cur = unsized(labels)
+            # 1. min label among neighbors
+            neigh = (
+                sym.join(cur, sym["src"] == cur["node"])
+                .groupBy("dst")
+                .agg(F.min("label").alias("nlabel"))
+                .withColumnRenamed("dst", "node")
+            )
+            merged = cur.join(neigh, "node", "left").select(
                 "node",
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
+                F.col("label").alias("old"),
+                F.least("label", F.coalesce("nlabel", "label")).alias("label"),
             )
-        )
-        # 2. pointer jump: label ← label(label)
-        parent = merged.select(
-            F.col("node").alias("p_node"), F.col("label").alias("p_label")
-        )
-        jumped = (
-            merged.join(parent, merged["label"] == parent["p_node"], "left")
-            .select(
-                "node", F.coalesce("p_label", "label").alias("label")
+            # 2. pointer jump: label <- label(label)
+            parent = merged.select(
+                F.col("node").alias("p_node"), F.col("label").alias("p_label")
             )
-        )
-        labels = jumped.localCheckpoint(eager=True)
-        cur = _checksum(labels)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in "
-            f"{config.max_cc_iterations} iterations"
-        )
+            jumped = merged.join(
+                parent, merged["label"] == parent["p_node"], "left"
+            ).select(
+                "node", "old", F.coalesce("p_label", "label").alias("label")
+            )
+            changed = Observation()
+            new = pins.checkpoint(
+                jumped.observe(
+                    changed,
+                    F.count_if(F.col("label") != F.col("old")).alias("n"),
+                ).select("node", "label")
+            )
+            pins.release(labels)
+            labels = new
+            if changed.get["n"] == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in "
+                f"{config.max_cc_iterations} iterations"
+            )
+        pins.release(sym)
+    except BaseException:
+        pins.release()
+        raise
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -4,7 +4,7 @@ Second recall channel per the north_star: 64-bit SimHash fingerprints, a
 4 x 16-bit block index (pigeonhole: Hamming distance <= 3 ⇒ at least one of
 the 4 blocks is bit-identical), candidates verified with
 ``bit_count(a XOR b) <= r`` — all JVM expressions around the Arrow simhash
-kernel (functions/simhash.py).
+kernel (functions/represent.py).
 
 Reference parity: plays the role of the cosine-threshold channel (J1/J2,
 ``similarity_utils.py:22-33``) for near-exact duplicates that differ in a

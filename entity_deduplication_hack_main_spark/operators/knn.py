@@ -99,7 +99,8 @@ def brute_force_knn_matmul(
     from collections.abc import Iterator
 
     rows = _collect_probes_guarded(probes.select(id_col, vec_col))
-    probe_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    # object ids: any orderable id type (string urls or bigint doc ids)
+    probe_ids = np.array([r[0] for r in rows], dtype=object)
     pm = np.array([r[1] for r in rows], dtype=np.float64)
     pm /= np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-300)
     tie_tol = 2.0 * 10.0 ** (-score_round)  # > rounding half-ulp + fp error
@@ -123,8 +124,10 @@ def brute_force_knn_matmul(
             )
 
     vec_t = corpus.schema[vec_col].dataType.simpleString()
+    pid_t = probes.schema[id_col].dataType.simpleString()
+    nid_t = corpus.schema[id_col].dataType.simpleString()
     partials = corpus.select(id_col, vec_col).mapInPandas(
-        score, f"probe_id bigint, neighbor_id bigint, cv {vec_t}"
+        score, f"probe_id {pid_t}, neighbor_id {nid_t}, cv {vec_t}"
     )
     p = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv")
@@ -628,7 +631,7 @@ def ivf_knn_matmul(
             probe_ids_list.append(pid)
             vecs.append(r["pv"])
         cell_lists.setdefault(int(r["cell"]), []).append(index_of[pid])
-    probe_ids = np.array(probe_ids_list, dtype=np.int64)
+    probe_ids = np.array(probe_ids_list, dtype=object)  # any id type
     pm = np.array(vecs, dtype=np.float64) if vecs else np.zeros((0, dim))
     if len(pm):
         pm /= np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-300)
@@ -697,7 +700,11 @@ def ivf_knn_matmul(
     # pattern): never a corpus broadcast, never a full-corpus shuffle.
     partials = (
         c_cells.select("neighbor_id", "cv", "cell")
-        .mapInPandas(score, "probe_id bigint, neighbor_id bigint")
+        .mapInPandas(
+            score,
+            f"probe_id {probes.schema[id_col].dataType.simpleString()}, "
+            f"neighbor_id {corpus.schema[id_col].dataType.simpleString()}",
+        )
         .where(F.col("probe_id") != F.col("neighbor_id"))
         .localCheckpoint()
     )
@@ -832,11 +839,14 @@ def embedding_near_dup_pairs_matmul(
         )
 
     vec_t = df.schema[vec_col].dataType.simpleString()
+    id_t = df.schema[id_col].dataType.simpleString()
+    # a NULL block key blocks nothing, as in the join on equal keys
     cand = (
         df.select(id_col, vec_col, block_col)
+        .where(F.col(block_col).isNotNull())
         .groupBy(block_col)
         .applyInPandas(
-            block, f"id1 bigint, id2 bigint, v1 {vec_t}, v2 {vec_t}"
+            block, f"id1 {id_t}, id2 {id_t}, v1 {vec_t}, v2 {vec_t}"
         )
     )
     return cand.select(

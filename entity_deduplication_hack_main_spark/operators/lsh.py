@@ -177,18 +177,3 @@ WITH {sql_repr_ctes(config, doc_table, id_col, text_col)},
 {sql_bands_from_sig(config)}
 SELECT id, band_id, band_hash FROM _bands
 """
-
-
-def sql_candidate_pairs(
-    config: DedupConfig,
-    doc_table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    bands = sql_band_hashes(config, doc_table, id_col, text_col)
-    return f"""
-WITH _b AS ({bands})
-SELECT DISTINCT least(a.id, b.id) AS id1, greatest(a.id, b.id) AS id2
-FROM _b a JOIN _b b
-  ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.id < b.id
-"""

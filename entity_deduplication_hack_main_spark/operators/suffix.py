@@ -82,50 +82,6 @@ def winnow_pairs_from_payload(
     )
 
 
-def verify_containment(
-    pairs: DataFrame,
-    docs: DataFrame,
-    config: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_strategy: str = "xxhash64",
-) -> DataFrame:
-    """(id1, id2, containment, is_substring): exact containment check.
-
-    containment = |S1 ∩ S2| / min(|S1|, |S2|) on exact shingle sets;
-    is_substring = the shorter normalized text occurs verbatim in the longer.
-    """
-    payload = represent.with_representation(
-        docs, config, id_col, text_col, hash_strategy
-    ).select("id", "shingle_set")
-    norms = docs.select(
-        F.col(id_col).alias("id"),
-        textnorm.normalize(F.col(text_col)).alias("norm"),
-    )
-    p = payload.join(norms, "id")
-    a = p.select(
-        F.col("id").alias("id1"), F.col("norm").alias("n1"),
-        F.col("shingle_set").alias("s1"),
-    )
-    b = p.select(
-        F.col("id").alias("id2"), F.col("norm").alias("n2"),
-        F.col("shingle_set").alias("s2"),
-    )
-    j = pairs.join(a, "id1").join(b, "id2")
-    inter = F.size(F.array_intersect("s1", "s2"))
-    smaller = F.least(F.size("s1"), F.size("s2"))
-    shorter = F.when(F.length("n1") <= F.length("n2"), F.col("n1")).otherwise("n2")
-    longer = F.when(F.length("n1") <= F.length("n2"), F.col("n2")).otherwise("n1")
-    return j.select(
-        "id1",
-        "id2",
-        F.round(F.when(smaller > 0, inter / smaller).otherwise(0.0), 9).alias(
-            "containment"
-        ),
-        F.contains(longer, shorter).alias("is_substring"),
-    )
-
-
 def _span_runs(mark, k: int, min_tokens: int) -> list[dict]:
     """Maximal True-runs of `mark` (shingle positions) → token spans
     [start, end] inclusive; shingle i covers tokens [i, i+k-1]."""

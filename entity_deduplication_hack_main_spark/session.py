@@ -27,6 +27,12 @@ def default_driver_memory() -> str:
     return f"{min(_MAX_DRIVER_MB, ram_mb // 2)}m"
 
 
+def default_parallelism() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the host's CPU count, so the
+    default session never runs more task slots than the host has cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "spark-dedup",
@@ -35,7 +41,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
-    parallelism: local[N] cores; default $SPARK_GRAFT_CPUS or 32.
+    parallelism: local[N] cores; default ``default_parallelism()``.
     Driver heap: $SPARK_DRIVER_MEM, else ``default_driver_memory()``.
     shuffle_partitions: default = 3x parallelism — over-partitioning cuts
         the straggler tail of compute-skewed stages (with exactly N
@@ -55,7 +61,7 @@ def get_spark(
         accepted.
     """
     heap = os.environ.get("SPARK_DRIVER_MEM", default_driver_memory())
-    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = parallelism or default_parallelism()
     sp = shuffle_partitions or (3 * cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -33,12 +33,6 @@ def read_matches_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
 
 
-def write_clusters(assignments: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Cluster-assignment sink: partitioned parquet (Iceberg-contract —
-    swap for .format('iceberg') when the runtime jar is present)."""
-    assignments.write.mode(mode).parquet(path)
-
-
 def write_corpus_partitioned(
     docs: DataFrame, path: str, mode: str = "overwrite"
 ) -> None:

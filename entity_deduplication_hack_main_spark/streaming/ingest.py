@@ -139,12 +139,10 @@ the overwrite on s3a/hdfs). If a checkpoint block is lost mid-batch the
 batch fails and the foreachBatch retry recomputes it — idempotent by the
 partition-overwrite design above.
 
-Pins: every frame a batch checkpoints or persists goes on one list that
-is released when the batch ends, on success and on failure — never
-earlier, since a released checkpoint fails any later read of a frame
-derived from it (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
-``DataFrame.unpersist()`` does not free a ``localCheckpoint``'s blocks, so
-those are released through the checkpointed RDD of their plan.
+Pins: every frame a batch checkpoints or persists goes on one
+``plans.pins.Pins`` list that is released when the batch ends, on success
+and on failure — never earlier, since a released checkpoint fails any
+later read of a frame derived from it.
 
 State growth: the indexes carry O(1 row + bands rows) per committed doc —
 fingerprint + 8-byte signature entries, never full text — which is the
@@ -177,6 +175,7 @@ from entity_deduplication_hack_main_spark.operators import (
 )
 from entity_deduplication_hack_main_spark.operators import verify as verify_op
 from entity_deduplication_hack_main_spark.plans import fsutil
+from entity_deduplication_hack_main_spark.plans.pins import Pins
 
 
 #: key buckets for the prunable index layout — the batch's distinct kb set
@@ -222,34 +221,6 @@ def est_margin(config: DedupConfig) -> float:
 
     t = float(config.jaccard_candidate)
     return 2.5 * math.sqrt(t * (1.0 - t) / config.num_perms)
-
-
-class _Pins:
-    """Every frame one micro-batch pins, released together when the batch
-    ends, on success and on failure. Never earlier: a released checkpoint
-    fails every later read of a frame derived from it."""
-
-    def __init__(self) -> None:
-        self._releases = []
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        """``df.localCheckpoint(eager=True)``. ``DataFrame.unpersist()``
-        does not free a local checkpoint's blocks, so it is released
-        through the checkpointed RDD its plan scans."""
-        out = df.localCheckpoint(eager=True)
-        rdd = out._jdf.logicalPlan().rdd()
-        self._releases.append(lambda: rdd.unpersist(False))
-        return out
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        out = df.persist()
-        self._releases.append(out.unpersist)
-        return out
-
-    def release(self) -> None:
-        for release in self._releases:
-            release()
-        self._releases.clear()
 
 
 class StreamingDedup:
@@ -475,13 +446,13 @@ class StreamingDedup:
     # --- the micro-batch body ---------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        pins = _Pins()
+        pins = Pins()
         try:
             self._ingest(batch, batch_id, pins)
         finally:
             pins.release()
 
-    def _ingest(self, batch: DataFrame, batch_id: int, pins: _Pins) -> None:
+    def _ingest(self, batch: DataFrame, batch_id: int, pins: Pins) -> None:
         id_type = batch.schema[self.id_col].dataType.simpleString()
         n_input = batch.count()
 
@@ -619,7 +590,7 @@ class StreamingDedup:
         payload: DataFrame,
         batch_id: int,
         id_type: str,
-        pins: _Pins,
+        pins: Pins,
     ) -> tuple[DataFrame, dict[str, DataFrame], dict[str, int]]:
         """Module docstring items 2 and 3: the surviving ``fresh`` rows,
         the rows they add to each state table, and the decision counts."""
@@ -961,7 +932,7 @@ class StreamingDedup:
             # lack newer columns — the fold must not drop them
             df = self.spark.read.option("mergeSchema", "true").parquet(path)
             before = df.select(F.input_file_name()).distinct().count()
-            pins = _Pins()  # released once the fold is written
+            pins = Pins()  # released once the fold is written
             folded = pins.checkpoint(df.drop("batch_id"))
             if "kb" in folded.columns:
                 folded = folded.repartitionByRange(

@@ -623,16 +623,16 @@ def test_hybrid_uf_never_collects_vertices(spark, monkeypatch):
     verts = spark.range(0, 50_000).toDF("id")
     collected_sizes: list[int] = []
     impl = type(edges)  # Spark 4: patch the concrete class, not the facade
-    orig = impl.collect
+    orig = impl.toArrow
 
     def spy(self):
-        rows = orig(self)
-        collected_sizes.append(len(rows))
-        return rows
+        table = orig(self)
+        collected_sizes.append(table.num_rows)
+        return table
 
-    monkeypatch.setattr(impl, "collect", spy)
+    monkeypatch.setattr(impl, "toArrow", spy)
     out = cluster.connected_components(edges, verts)
-    labels = {r["node"]: r["cluster_id"] for r in orig(out)}
+    labels = {r["node"]: r["cluster_id"] for r in out.collect()}
     # exactly one driver materialization: the bounded edge head — never the
     # 50k vertices
     assert collected_sizes == [3]
@@ -641,28 +641,77 @@ def test_hybrid_uf_never_collects_vertices(spark, monkeypatch):
     assert labels[49_999] == 49_999 and len(labels) == 50_000
 
 
-def test_local_and_distributed_cc_identical(spark):
-    """Hybrid CC: driver-side union-find must produce exactly the
-    distributed loop's labels (min member id per component)."""
+def _cc_graphs(spark):
+    """(name, edges, vertices or None): random, path, star and string-id
+    graphs of at most 500 nodes. The star's center is its LARGEST id, so
+    no leaf's first neighbor is its component's minimum."""
     import random
 
     random.seed(11)
-    edges = spark.createDataFrame(
+    rand = spark.createDataFrame(
         [(random.randrange(400), random.randrange(400)) for _ in range(300)],
         "id1 bigint, id2 bigint",
     ).where(F.col("id1") != F.col("id2"))
-    verts = spark.range(0, 400).toDF("id")
-    local = {
-        (r["node"], r["cluster_id"])
-        for r in cluster.connected_components(edges, verts).collect()
-    }
-    dist = {
-        (r["node"], r["cluster_id"])
-        for r in cluster.connected_components(
-            edges, verts, local_threshold=0
-        ).collect()
-    }
-    assert local == dist
+    path = spark.range(499).select(
+        F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
+    )
+    star = spark.range(499).select(
+        F.col("id").alias("id1"), F.lit(499).cast("bigint").alias("id2")
+    )
+
+    def url(c):
+        return F.concat(F.lit("u:"), F.lpad(c.cast("string"), 4, "0"))
+
+    strs = spark.range(450).where(F.col("id") % 50 != 0).select(
+        url(F.col("id")).alias("id1"), url(F.col("id") + 1).alias("id2")
+    )
+    str_verts = spark.range(0, 460).select(url(F.col("id")).alias("id"))
+    return [
+        ("random", rand, spark.range(0, 410).toDF("id")),
+        ("path", path, None),
+        ("star", star, None),
+        ("string", strs, str_verts),
+    ]
+
+
+def test_local_and_distributed_cc_identical(spark):
+    """Hybrid CC: driver-side union-find must produce exactly the
+    distributed loop's labels (min member id per component), row for row."""
+    for name, edges, verts in _cc_graphs(spark):
+        local = _labels(cluster.connected_components(edges, verts))
+        dist = _labels(
+            cluster.connected_components(edges, verts, local_threshold=0)
+        )
+        assert local == dist, name
+        assert len({c for _, c in local}) < len(local), name
+
+
+def test_distributed_cc_keeps_only_its_result_pinned(spark):
+    """Every round checkpoint but the returned one, and the symmetric edge
+    table, is released when the distributed loop ends."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id1 bigint, id2 bigint"
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    out = cluster.connected_components(edges, local_threshold=0)
+    assert len(set(sc._jsc.getPersistentRDDs().keySet()) - before) <= 1
+    assert _labels(out) == Counter({(i, 0): 1 for i in range(201)})
+
+
+def test_distributed_cc_many_rounds_stay_plannable(spark):
+    """On the path 0 - 25 - 24 - ... - 1 label 0 moves one hop per round,
+    so the loop runs 26 rounds. Each round joins the previous round's
+    checkpoint with itself; were the checkpoint's size estimate carried
+    over, it would double in bit length every round and planning would
+    stall long before the round cap."""
+    n = 26
+    edges = spark.createDataFrame(
+        [(0, n - 1)] + [(i, i + 1) for i in range(1, n - 1)],
+        "id1 bigint, id2 bigint",
+    )
+    out = cluster.connected_components(edges, local_threshold=0)
+    assert _labels(out) == Counter({(i, 0): 1 for i in range(n)})
 
 
 def test_substring_spans_find_planted_run(spark):

@@ -12,7 +12,9 @@ operator's internals):
   cross blocks and empty hash chunks);
 - the IVF matmul scorer is bit-identical to the expression ivf_knn;
 - the matmul kNN paths fail fast (typed error, no driver collect) on
-  over-cap probe sets (r05 verdict #7).
+  over-cap probe sets (r05 verdict #7);
+- the matmul embedding paths keep string ids, and a NULL block key pairs
+  nothing.
 """
 
 from __future__ import annotations
@@ -162,3 +164,60 @@ def test_matmul_probe_guard_raises(spark, sf001, monkeypatch):
         knn.brute_force_knn_matmul(emb.limit(11), emb, k=5)
     with pytest.raises(ValueError, match="probe side exceeds"):
         knn.ivf_knn_matmul(emb.limit(11), emb, dim=64, k=5)
+
+
+def _string_id_embeddings(spark):
+    """40 vectors in 8 dims with string ids: 20 bases, each with a near
+    copy, in 4 label blocks."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((20, 8))
+    rows = []
+    for i in range(20):
+        for j, v in enumerate((base[i], base[i] + rng.standard_normal(8) * 0.05)):
+            rows.append((f"v:{2 * i + j:02d}", v.tolist(), i % 4))
+    return spark.createDataFrame(
+        rows, "vec_id string, embedding array<double>, label int"
+    )
+
+
+def test_matmul_knn_string_ids(spark):
+    """The matmul kNN paths keep the id type of their input: string ids
+    give the expression paths' rows, not an int() conversion error."""
+    emb = _string_id_embeddings(spark)
+    probes = emb.where(F.col("label") == 0)
+
+    def rows(df):
+        return Counter(map(tuple, df.collect()))
+
+    assert rows(knn.brute_force_knn_matmul(probes, emb, k=3)) == rows(
+        knn.brute_force_knn(probes, emb, k=3)
+    )
+    ivf = dict(dim=8, k=3, n_cells=4, nprobe=2)
+    fast = rows(knn.ivf_knn_matmul(probes, emb, **ivf))
+    assert fast == rows(knn.ivf_knn(probes, emb, **ivf)) and len(fast) > 0
+
+
+def test_embedding_near_dup_matmul_string_ids(spark):
+    emb = _string_id_embeddings(spark)
+    fast = knn.embedding_near_dup_pairs_matmul(emb, threshold=0.9)
+    exact = knn.embedding_near_dup_pairs(emb, threshold=0.9, block_col="label")
+    assert fast.schema["id1"].dataType.simpleString() == "string"
+    got = Counter(map(tuple, fast.collect()))
+    assert got == Counter(map(tuple, exact.collect())) and len(got) >= 20
+
+
+def test_embedding_near_dup_matmul_null_block_pairs_nothing(spark):
+    """Rows with a NULL block key share no block, as in the expression
+    path's join on ``a.label = b.label``."""
+    one = [1.0, 0.0, 0.0]
+    df = spark.createDataFrame(
+        [(i, one, None) for i in range(6)] + [(10, one, 1), (11, one, 1)],
+        "vec_id bigint, embedding array<double>, label int",
+    )
+    fast = Counter(map(tuple, knn.embedding_near_dup_pairs_matmul(df).collect()))
+    exact = knn.embedding_near_dup_pairs(df, block_col="label")
+    assert fast == Counter(map(tuple, exact.collect())) == Counter(
+        {(10, 11, 1.0): 1}
+    )
