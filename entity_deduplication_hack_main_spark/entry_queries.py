@@ -1506,12 +1506,11 @@ WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
 """,
 )
 def embedding_near_dup_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Throughput variant of the near-dup channel (blocked matmul).
-    Oracle-exact since r03: the matmul emits a guard-band candidate set
-    and the output cosine is re-computed with the fold expression — same
-    oracle as the expression twin."""
+    """The label-blocked near-dup channel under its throughput name: the
+    same :func:`knn.embedding_near_dup_pairs` call and oracle as
+    ``embedding_near_dup_pairs``."""
     emb = _t(spark, sf_dir, "embeddings")
-    return knn_op.embedding_near_dup_pairs_matmul(emb, threshold=0.3)
+    return knn_op.embedding_near_dup_pairs(emb, threshold=0.3)
 
 
 @register(
@@ -1534,16 +1533,13 @@ SELECT probe_id, neighbor_id, cosine, rank FROM _rk WHERE rank <= 5
 """,
 )
 def knn_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Throughput ANN baseline: batched-matmul candidate top-(5+8), exact
-    fold re-score + rank — bit-identical to knn_bruteforce (same oracle)
-    at matmul speed (see knn.brute_force_knn_matmul)."""
+    """knn_bruteforce over a spread corpus: the same
+    :func:`knn.brute_force_knn` call and oracle."""
     emb = _t(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") % 10 == 0)
     # the corpus side does all the matmul work inside mapInPandas — the
     # single-file scan is ONE task without the spread
-    return knn_op.brute_force_knn_matmul(
-        probes, _spread(spark, emb, 1), k=5
-    )
+    return knn_op.brute_force_knn(probes, _spread(spark, emb, 1), k=5)
 
 
 @register(
@@ -1558,23 +1554,21 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IDENTICAL algorithm (same anchor literals, same rounded-dot
     argmax + tie-break), so this checks the index structure itself, not
     just a recall bound — the recall-vs-bruteforce gates live in pytest
-    (`test_ivf_knn_full_probe_equals_bruteforce`)."""
+    (`test_ivf_knn_full_probe_equals_bruteforce_and_recall_monotone`);
+    `tests/test_optim.py` checks the operator against `knn.sql_ivf_knn`
+    directly."""
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     probes = base.where(F.col("vec_id") % 10 == 0)
-    # single-file testdata scan = ONE task; the probe side broadcasts, so
-    # the corpus side does all cell-assignment + cosine work — spread it
+    # single-file testdata scan = ONE task; the probes go through the
+    # driver, so the corpus side does all cell-assignment + cosine work —
+    # spread it
     # (same rationale + sizing as similar_part_names)
     corpus = base.repartition(spark.sparkContext.defaultParallelism)
-    # matmul candidate scoring (knn.ivf_knn_matmul): cell assignment stays
-    # the exact JVM argmax on both sides; only the O(P·N/n_cells·nprobe)
-    # fold-cosine scoring moves into per-batch matmul with the proven
-    # guard-band + exact-rescore rule — bit-identical to ivf_knn and the
-    # oracle (pytest: test_ivf_knn_matmul_equals_expression)
-    return knn_op.ivf_knn_matmul(
+    return knn_op.ivf_knn(
         probes, corpus, dim=64, k=5, n_cells=16, nprobe=4,
         id_col="vec_id", vec_col="v",
     )
@@ -2127,13 +2121,13 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) semantic dedup decision per vector:
     IVF-cell assignment (seeded data-free quantizer — oracle precedent of
-    knn_ivf) → salted within-cell cosine pairs → greedy lowest-id keep
+    knn_ivf) → chunked within-cell matmul pairs → greedy lowest-id keep
     (operators/semdedup.py). τ=0.35 matches this synthetic corpus's
     cosine scale (near-dup channel uses 0.3); real encoder embeddings
     would run ~0.95."""
     emb = _spread(spark, _t(spark, sf_dir, "embeddings"), 1)
     return semdedup_op.semantic_dedup(
-        emb, dim=64, config=CFG, threshold=0.35, materialize=True
+        emb, dim=64, threshold=0.35, materialize=True
     )
 
 

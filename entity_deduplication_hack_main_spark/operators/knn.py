@@ -5,15 +5,24 @@ a dense cosine matrix and top-k per probe (``dedup_pipeline.py:45-48``,
 ``similarity_utils.py:9-33``). At scale the dense matrix is never
 materialized:
 
-- ``brute_force_knn``: probes (small side) broadcast against the corpus;
-  cosine in pure JVM expressions (zip_with/aggregate — codegen), rank
-  window for top-k. Correct baseline, O(P×N).
+- ``brute_force_knn``: exact top-k, O(P×N). Probes are collected to the
+  driver; each corpus Arrow batch is scored by one numpy matmul.
+- ``ivf_knn``: inverted-file top-k. Seeded (or trained) anchors assign
+  every corpus vector to one cell; each probe searches its ``nprobe``
+  best cells, scored per batch and cell by matmul.
 - ``lsh_bucketed_knn``: random-hyperplane LSH (SimHash for vectors) —
   sign-pattern bucket key over ``n_planes`` seeded hyperplanes, candidates
   restricted to probes' buckets (multi-probe via bit flips), then exact
-  cosine + top-k. The scale path: O(P×N/2^b) expected.
+  cosine + top-k. O(P×N/2^b) expected.
 - ``embedding_near_dup_pairs``: all-pairs cosine >= threshold within a
-  blocking key — the embedding-cosine near-duplicate channel.
+  blocking key, one matmul per block — the embedding-cosine near-duplicate
+  channel; ``embedding_near_dup_lsh`` is its label-free self-join.
+
+The matmul paths only PROPOSE candidates, with a guard band wider than the
+1e-6 output rounding. Every emitted cosine is the JVM fold expression
+(:func:`similarity.cosine`) rounded to 6 decimals, which is what the
+DuckDB oracles' ``round(list_cosine_similarity(...), 6)`` computes, so
+ties and rounding land where the oracle puts them.
 """
 
 from __future__ import annotations
@@ -25,6 +34,10 @@ from pyspark.sql import functions as F
 from entity_deduplication_hack_main_spark.functions import similarity as simfn
 from entity_deduplication_hack_main_spark.operators.topk import top_k_per_group
 
+#: candidate margin below the k-th matmul score: more than the half-step
+#: of the 6-decimal output rounding plus the matmul-vs-fold float error
+_TIE_TOL = 2e-6
+
 
 def brute_force_knn(
     probes: DataFrame,
@@ -32,68 +45,28 @@ def brute_force_knn(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_round: int = 6,
 ) -> DataFrame:
-    """(probe_id, neighbor_id, cosine, rank): exact top-k cosine neighbors.
+    """(probe_id, neighbor_id, cosine, rank): exact top-k cosine
+    neighbors, self-matches excluded, ties broken by the smaller
+    neighbor_id.
 
-    probes must be small (broadcast side). Self-matches excluded.
-    """
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        F.broadcast(p)
-        .crossJoin(c)
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(simfn.cosine(F.col("pv"), F.col("cv")), score_round).alias(
-                "cosine"
-            ),
-        )
-    )
-    return top_k_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-    ).select("probe_id", "neighbor_id", "cosine", "rank")
+    Probes are collected once (they must be small:
+    :func:`_collect_probes_guarded` enforces it) and normalized into a
+    (P, d) matrix captured by a mapInPandas closure. Each corpus Arrow
+    batch contributes its per-probe CANDIDATES (ids + their vectors ride
+    along — no second corpus scan); the tiny candidate set is then
+    re-scored with the fold cosine and ranked. The matmul does the
+    O(N*P*d) work; the fold touches only the candidate rows.
 
-
-def brute_force_knn_matmul(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_round: int = 6,
-) -> DataFrame:
-    """(probe_id, neighbor_id, cosine, rank): exact top-k via batched numpy
-    matmul — the throughput path (~10x the expression-based scorer).
-
-    Probes are collected once (must be small — the same constraint as the
-    broadcast in :func:`brute_force_knn`), normalized into a (P, d) matrix
-    captured by a mapInPandas closure; each corpus Arrow batch contributes
-    its per-probe CANDIDATES (ids + their vectors ride along — no second
-    corpus scan), then the tiny candidate set is re-scored with the same
-    sequential-fold cosine expression :func:`brute_force_knn` uses and
-    ranked. The matmul does the O(N*P*d) work; the fold touches only the
-    candidate rows — so the output is bit-identical to the expression path
-    (and its SQL oracle) while keeping matmul throughput.
-
-    Candidate rule (r03 advice — a fixed top-(k+8) slice broke when more
-    than ~13 vectors tied at the k-th cosine boundary in one batch, since
-    argpartition picks an arbitrary tie subset and the oracle's
-    neighbor_id tie-break needs the SMALLEST ids): per probe, take every
-    batch row with sim >= (k+1)-th largest − 2e-6. The (k+1)-th guards the
-    slot a self-match may occupy; the 2e-6 margin covers both the ~1e-13
+    Candidate rule (a fixed top-(k+8) slice broke when more than ~13
+    vectors tied at the k-th cosine boundary in one batch, since
+    argpartition picks an arbitrary tie subset and the neighbor_id
+    tie-break needs the SMALLEST ids): per probe, take every batch row
+    with sim >= (k+1)-th largest − :data:`_TIE_TOL`. The (k+1)-th guards
+    the slot a self-match may occupy; the margin covers both the ~1e-13
     matmul-vs-fold float-order error and the 1e-6 output rounding, so any
     row that could ROUND equal to the boundary survives to the exact
-    re-score — ties of ANY multiplicity included, no headroom constant.
+    re-score — ties of ANY multiplicity included.
     """
     import pandas as pd
     from collections.abc import Iterator
@@ -103,7 +76,6 @@ def brute_force_knn_matmul(
     probe_ids = np.array([r[0] for r in rows], dtype=object)
     pm = np.array([r[1] for r in rows], dtype=np.float64)
     pm /= np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-300)
-    tie_tol = 2.0 * 10.0 ** (-score_round)  # > rounding half-ulp + fp error
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -114,7 +86,7 @@ def brute_force_knn_matmul(
             sims = cm @ pm.T  # (batch, P)
             kth = min(k + 1, sims.shape[0])  # +1: one possible self-match
             thr = -np.partition(-sims, kth - 1, axis=0)[kth - 1]  # (P,)
-            pi, ri = np.nonzero(sims.T >= (thr - tie_tol)[:, None])
+            pi, ri = np.nonzero(sims.T >= (thr - _TIE_TOL)[:, None])
             yield pd.DataFrame(
                 {
                     "probe_id": probe_ids[pi],
@@ -138,9 +110,7 @@ def brute_force_knn_matmul(
         .select(
             "probe_id",
             "neighbor_id",
-            F.round(simfn.cosine(F.col("pv"), F.col("cv")), score_round).alias(
-                "cosine"
-            ),
+            F.round(simfn.cosine(F.col("pv"), F.col("cv")), 6).alias("cosine"),
         )
     )
     ranked = top_k_per_group(
@@ -152,7 +122,7 @@ def brute_force_knn_matmul(
     return ranked.select("probe_id", "neighbor_id", "cosine", "rank")
 
 
-#: Probe-side collect cap for the matmul kNN paths (r05 verdict #7): the
+#: Probe-side collect cap for the kNN paths (r05 verdict #7): the
 #: probe matrix lives on the driver and inside every task's closure, so an
 #: accidental full-corpus "probe" set must fail fast with direction, not
 #: OOM the driver. 500k probes × 128 dims ≈ 512 MB — the practical ceiling.
@@ -169,9 +139,9 @@ def _collect_probes_guarded(df: DataFrame, cap: int | None = None) -> list:
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
-            f"probe side exceeds {cap} rows — the matmul paths collect "
-            "probes to the driver; use ivf_knn/lsh_bucketed_knn with a "
-            "distributed probe join for probe sets this large"
+            f"probe side exceeds {cap} rows — every kNN path sends its "
+            "probes through the driver; query in probe slices of at most "
+            f"{cap} rows"
         )
     return rows
 
@@ -493,105 +463,30 @@ def ivf_knn(
 
     Corpus vectors land in the cell of their max-dot anchor (ONE cell
     each — the inverted file); each probe searches its ``nprobe``
-    best-dot cells; candidates get exact JVM cosine + rank. Recall < 1
-    by design at nprobe < n_cells and rises monotonically with nprobe;
-    at nprobe == n_cells the output EQUALS brute force (pytest-gated).
-    Scale shape: assignment is a pure JVM expression (no shuffle), the
-    candidate join is keyed on cell — expected fan-out n/n_cells per
-    probe, the same bucket-bounded pattern as every other channel.
+    best-dot cells; candidates get exact cosine + rank. Recall < 1 by
+    design at nprobe < n_cells and rises monotonically with nprobe; at
+    nprobe == n_cells the output EQUALS :func:`brute_force_knn`
+    (pytest-gated).
 
-    ``anchors``: pass :func:`train_ivf_anchors` output for the trained
-    quantizer (tighter cells, higher recall at equal nprobe — the
-    production path); default is the seeded data-free quantizer of
-    :func:`ivf_anchors`, kept as the oracle variant."""
-    if anchors is None:
-        anchors = ivf_anchors(dim, n_cells, seed)
-    n_cells = len(anchors)
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    c_cells = cv.withColumn(
-        "cell", F.array_max(F.array(*_ivf_cell_scores("cv", anchors)))["i"]
-    )
-    pv = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv")
-    )
-    # top-nprobe cells per probe: sort the (d, i) structs descending and
-    # slice — the same (d desc, i desc) order the oracle's window uses
-    p_cells = pv.select(
-        "probe_id",
-        "pv",
-        F.explode(
-            F.slice(
-                F.reverse(
-                    F.array_sort(F.array(*_ivf_cell_scores("pv", anchors)))
-                ),
-                1,
-                min(nprobe, n_cells),
-            )["i"]
-        ).alias("cell"),
-    )
-    # BROADCAST the probe side: the join key has only n_cells distinct
-    # values, so a shuffle join would hash the entire corpus onto
-    # n_cells partitions — 16 tasks doing all the cosine work regardless
-    # of cluster size (measured 6.4s vs 1.3s at sf0.1). Broadcasting the
-    # (small by contract) probe side keeps the corpus in its incoming
-    # partitioning and the cosine work data-parallel.
-    scored = (
-        F.broadcast(p_cells)
-        .join(c_cells, "cell")
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(simfn.cosine(F.col("pv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    return top_k_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-    ).select("probe_id", "neighbor_id", "cosine", "rank")
-
-
-def ivf_knn_matmul(
-    probes: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 69,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchors: np.ndarray | None = None,
-    score_round: int = 6,
-) -> DataFrame:
-    """:func:`ivf_knn` with matmul candidate scoring — bit-identical
-    output at matmul throughput (the brute_force_knn_matmul pattern
-    applied to the IVF structure; guide §4.2).
-
-    Where the work moves: :func:`ivf_knn` scores EVERY (probe, same-cell
-    corpus row) pair with the three-fold cosine expression and ranks the
-    full candidate set through the window — at nprobe/n_cells of the
-    corpus per probe that is the dominant cost (measured: the sf1.0
-    bench's 10M fold-cosines). Here:
-
-    - cell assignment stays the EXACT JVM rounded-dot argmax on both
-      sides (parity with the oracle's HALF_UP rounding — numpy's
-      banker's rounding must never decide a cell);
+    - cell assignment is the EXACT JVM rounded-dot argmax on both sides
+      (parity with the oracle's HALF_UP rounding — numpy's banker's
+      rounding must never decide a cell);
     - probe cells are computed by the same JVM slice expression and
       collected (probes are small by contract —
       :func:`_collect_probes_guarded` enforces it) into one normalized
       matrix;
     - each corpus Arrow batch contributes, per probed cell, its per-probe
-      top-(k+1) candidates by matmul with a 2e-6 tie margin (every row
-      that could ROUND into the k-th slot survives — the r03-proven
-      candidate rule of brute_force_knn_matmul);
-    - the tiny candidate set is re-scored with the same sequential-fold
-      cosine and ranked, so ties and rounding land exactly where the
-      expression path (and its SQL oracle) put them.
+      top-(k+1) candidates by matmul with the :data:`_TIE_TOL` margin
+      (every row that could ROUND into the k-th slot survives — the
+      candidate rule of :func:`brute_force_knn`);
+    - the tiny candidate set is re-scored with the fold cosine and
+      ranked, so ties and rounding land where :func:`sql_ivf_knn` puts
+      them.
+
+    ``anchors``: pass :func:`train_ivf_anchors` output for the trained
+    quantizer (tighter cells, higher recall at equal nprobe — the
+    production path); default is the seeded data-free quantizer of
+    :func:`ivf_anchors`, kept as the oracle variant.
     """
     import pandas as pd
     from collections.abc import Iterator
@@ -602,6 +497,8 @@ def ivf_knn_matmul(
     pv = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv")
     )
+    # top-nprobe cells per probe: sort the (d, i) structs descending and
+    # slice — the same (d desc, i desc) order the oracle's window uses
     p_cells = pv.select(
         "probe_id",
         "pv",
@@ -638,7 +535,6 @@ def ivf_knn_matmul(
     cell_map = {
         c: np.array(v, dtype=np.int64) for c, v in cell_lists.items()
     }
-    tie_tol = 2.0 * 10.0 ** (-score_round)
 
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -672,7 +568,7 @@ def ivf_knn_matmul(
                 sims = cm @ pm[pidx].T  # (rows_in_cell, probes_on_cell)
                 kth = min(k + 1, sims.shape[0])  # +1: possible self-match
                 thr = -np.partition(-sims, kth - 1, axis=0)[kth - 1]
-                ri, pj = np.nonzero(sims >= (thr - tie_tol)[None, :])
+                ri, pj = np.nonzero(sims >= (thr - _TIE_TOL)[None, :])
                 acc_p.append(pidx[pj])
                 acc_n.append(g["neighbor_id"].to_numpy()[ri])
                 acc_s.append(sims[ri, pj])
@@ -688,7 +584,7 @@ def ivf_knn_matmul(
         )
         counts = np.diff(np.concatenate((starts, [len(p)])))
         rank_kth = starts + np.minimum(k, counts - 1)  # (k+1)-th per probe
-        keep = s >= np.repeat(s[rank_kth], counts) - tie_tol
+        keep = s >= np.repeat(s[rank_kth], counts) - _TIE_TOL
         yield pd.DataFrame(
             {"probe_id": probe_ids[p[keep]], "neighbor_id": n[keep]}
         )
@@ -725,7 +621,7 @@ def ivf_knn_matmul(
         .select(
             "probe_id",
             "neighbor_id",
-            F.round(cos, score_round).alias("cosine"),
+            F.round(cos, 6).alias("cosine"),
         )
     )
     return top_k_per_group(
@@ -796,24 +692,24 @@ SELECT probe_id, neighbor_id, cosine, rank FROM _out WHERE rank <= {k}
 """
 
 
-def embedding_near_dup_pairs_matmul(
+def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
     block_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Blocked all-pairs cosine >= threshold via per-block matmul
-    (applyInPandas) — the throughput path for the embedding near-dup
-    channel (~50x the expression scorer). Blocks must fit in worker
-    memory — pre-split oversized blocks with a salt column upstream.
+    """(id1, id2, cosine): pairs with id1 < id2 that share a non-NULL
+    ``block_col`` value and have cosine >= threshold (J1 semantics: block
+    then compare).
 
-    Bit-parity with the expression scorer (and its SQL oracle): the matmul
-    emits CANDIDATES at ``threshold - 1e-6`` (a guard band wider than both
-    the 1e-6 output rounding and the ~1e-13 matmul-vs-fold float-order
-    error), with both vectors riding along; the final cosine is then
-    re-computed on that tiny pair set with the same sequential-fold
-    expression :func:`embedding_near_dup_pairs` uses and re-thresholded.
+    Each block is scored by one matmul (applyInPandas), so blocks must fit
+    in worker memory — pre-split oversized blocks with a salt column
+    upstream; :func:`embedding_near_dup_lsh` is the label-free path. The
+    matmul emits CANDIDATES at ``threshold - 1e-6`` (a guard band wider
+    than both the 1e-6 output rounding and the ~1e-13 matmul-vs-fold
+    float-order error), with both vectors riding along; the final cosine
+    is the fold cosine of that tiny pair set, re-thresholded.
     """
     import pandas as pd
 
@@ -854,31 +750,3 @@ def embedding_near_dup_pairs_matmul(
         "id2",
         F.round(simfn.cosine(F.col("v1"), F.col("v2")), 6).alias("cosine"),
     ).where(F.col("cosine") >= threshold)
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    block_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id1, id2, cosine) with cosine >= threshold; optional blocking key
-    bounds the pair space (J1 semantics: block then compare)."""
-    a = df.select(
-        F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"),
-        *([F.col(block_col).alias("_blk")] if block_col else []),
-    )
-    b = df.select(
-        F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"),
-        *([F.col(block_col).alias("_blk")] if block_col else []),
-    )
-    j = a.join(b, on="_blk") if block_col else a.crossJoin(b)
-    return (
-        j.where(F.col("id1") < F.col("id2"))
-        .select(
-            "id1", "id2",
-            F.round(simfn.cosine(F.col("v1"), F.col("v2")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )

@@ -156,24 +156,3 @@ _bands AS (
          md5(array_to_string(sig[b.band_id * {r} + 1 : b.band_id * {r} + {r}], ',')) AS band_hash
   FROM _sig CROSS JOIN (FROM range(0, {config.bands}) t(band_id)) b
 )"""
-
-
-def sql_band_hashes(
-    config: DedupConfig,
-    doc_table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB SELECT of (id, band_id, band_hash) matching :func:`band_hashes`
-    over md5-strategy signatures from the representation kernel."""
-    from entity_deduplication_hack_main_spark.functions.represent import (
-        sql_repr_ctes,
-        sql_signature_cte,
-    )
-
-    return f"""
-WITH {sql_repr_ctes(config, doc_table, id_col, text_col)},
-{sql_signature_cte(config)},
-{sql_bands_from_sig(config)}
-SELECT id, band_id, band_hash FROM _bands
-"""

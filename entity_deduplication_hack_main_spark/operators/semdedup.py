@@ -8,7 +8,7 @@ rewrites. The algorithm: cluster the corpus embeddings with a coarse
 quantizer (k-means cells), compute pairwise cosine *within each cell
 only*, and drop all but one member of every near-duplicate neighborhood.
 
-This implementation composes two machines this engine already has:
+This implementation has two parts:
 
 - **cell assignment** is the IVF coarse quantizer from
   ``operators/knn.py`` — a pure JVM argmax over per-anchor dot structs
@@ -17,12 +17,13 @@ This implementation composes two machines this engine already has:
   oracle can embed the same literals; pass
   :func:`knn.train_ivf_anchors` output for the production trained
   quantizer (tighter cells → higher within-cell dup recall).
-- **within-cell pair generation** is the salted bucket self-join of
-  ``operators/candidates.py`` (via ``lsh.candidate_pairs``) — cells are
-  just buckets with ``band_id = 0`` and ``band_hash = cell``, so hot
-  cells (a popular semantic neighborhood is exactly as skewed as a
-  boilerplate LSH bucket) are chunk-pair salted with the SAME
-  proven-equal machinery, bounding any task at ~salt_chunk² comparisons.
+- **within-cell pair generation** never materializes the pair space:
+  each cell is split into hash chunks of at most :data:`CHUNK` members
+  (the ``pmod(xxhash64(id), n)`` salting key of
+  ``candidates.bucket_pairs``), and every chunk-pair block is scored by
+  one numpy matmul. Hot cells (a popular semantic neighborhood is exactly
+  as skewed as a boilerplate LSH bucket) therefore bound any task at
+  ~CHUNK² comparisons.
 
 Keep rule (deterministic, parallel- and resume-safe): a vector is
 DROPPED iff some *lower-id* vector in the same cell has cosine ≥
@@ -33,9 +34,9 @@ on the pair set, not on prior drop decisions, matching the paper's
 overlapping neighborhoods may drop their whole overlap except the
 lowest anchor).
 
-Scale shape: assignment is embarrassingly parallel; the pair join is
-bucket-bounded (never all-pairs) and salted; the verify cosine runs on
-the candidate set only. At 10^12 docs the quantizer would use
+Scale shape: assignment is embarrassingly parallel; pair scoring is
+chunk-bounded (never all-pairs); the exact cosine runs on the guard-band
+candidates only. At 10^12 docs the quantizer would use
 n_cells ≈ √n trained centroids — the join shape is unchanged, only the
 anchor table grows (broadcast; 10⁶ cells × 768 dims ≈ 3 GB is the
 practical ceiling, beyond which the assignment itself becomes a
@@ -48,13 +49,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import similarity as simfn
 from entity_deduplication_hack_main_spark.operators.knn import (
     _ivf_cell_scores,
     ivf_anchors,
 )
-from entity_deduplication_hack_main_spark.operators.lsh import candidate_pairs
+
+#: members per hash chunk of a cell: a block scores at most CHUNK² pairs
+CHUNK = 1024
 
 
 def assign_cells(
@@ -73,67 +75,22 @@ def assign_cells(
     )
 
 
-def semantic_dup_pairs(
-    cells: DataFrame,
-    config: DedupConfig,
-    threshold: float,
-) -> DataFrame:
-    """(id1, id2, cosine): within-cell pairs with cosine ≥ threshold,
-    id1 < id2. Pair generation is the salted LSH bucket join (cells are
-    buckets); cosine is re-fetched + computed JVM-side on the candidate
-    set only. Kept as the reference that
-    :func:`semantic_dup_pairs_matmul`, the path :func:`semantic_dedup`
-    runs, is tested against."""
-    buckets = cells.select(
-        "id", F.lit(0).alias("band_id"), F.col("cell").alias("band_hash")
-    )
-    pairs = candidate_pairs(buckets, config)
-    v1 = cells.select(F.col("id").alias("id1"), F.col("v").alias("v1"))
-    v2 = cells.select(F.col("id").alias("id2"), F.col("v").alias("v2"))
-    return (
-        pairs.join(v1, "id1")
-        .join(v2, "id2")
-        .select(
-            "id1",
-            "id2",
-            F.round(simfn.cosine(F.col("v1"), F.col("v2")), 6).alias(
-                "cosine"
-            ),
-        )
-        .where(F.col("cosine") >= F.lit(threshold))
-    )
+def semantic_dup_pairs(cells: DataFrame, threshold: float) -> DataFrame:
+    """(id1, id2, cosine): within-cell pairs with id1 < id2 and rounded
+    fold-cosine ≥ threshold, each pair exactly once.
 
-
-def semantic_dup_pairs_matmul(
-    cells: DataFrame,
-    config: DedupConfig,
-    threshold: float,
-    chunk: int = 1024,
-) -> DataFrame:
-    """:func:`semantic_dup_pairs` with matmul scoring — the same logical
-    pair set (within-cell, id1 < id2, rounded fold-cosine ≥ threshold) at
-    matmul throughput (guide §4.2; the brute_force_knn_matmul /
-    embedding_near_dup_pairs_matmul house pattern).
-
-    Why: the expression path materializes EVERY within-cell pair
-    (n²/(2·n_cells) rows), joins both vectors back onto it and folds a
-    three-aggregate cosine per pair — at sf1.0 that is 12.5M pair rows
-    through two joins, 12.5M fold-cosines and a 12.5M-row distinct for a
-    handful of qualifying pairs. Here the pair space never materializes:
-    cells are chunked deterministically (pmod(xxhash64(id), nch) — the
-    candidates.bucket_pairs salting key), every chunk-pair block
-    (ci <= cj) is scored as ONE numpy matmul inside applyInPandas, and only candidates within a
-    1e-6 guard band of the threshold are emitted (vectors riding along)
-    for the exact fold-cosine re-score — so the output is bit-identical
-    to the expression path and its DuckDB oracle.
+    Cells are chunked deterministically (pmod(xxhash64(id), nch) with
+    nch = ceil(cell size / :data:`CHUNK`) — the candidates.bucket_pairs
+    salting key); every chunk-pair block (ci <= cj) is scored as ONE numpy
+    matmul inside applyInPandas, and only candidates within a 1e-6 guard
+    band of the threshold are emitted (vectors riding along) for the exact
+    fold-cosine re-score — the rule of :func:`sql_semantic_dedup`.
 
     Scale shape: a member of a cell with nch chunks is replicated into
     nch+1 blocks (~2-3 for sane chunk sizes), each block's worker memory
-    is bounded by 2·chunk vectors and a chunk² sims matrix (1024² ≈ 8 MB)
-    regardless of how hot the cell is — the same task bound the salted
-    LSH join guarantees, now with matmul arithmetic inside it. Each
-    unordered pair lands in exactly one block, so no distinct is needed
-    before the re-score.
+    is bounded by 2·CHUNK vectors and a CHUNK² sims matrix (1024² ≈ 8 MB)
+    regardless of how hot the cell is. Each unordered pair lands in
+    exactly one block, so no distinct is needed before the re-score.
     """
     import pandas as pd
 
@@ -141,7 +98,7 @@ def semantic_dup_pairs_matmul(
     # one row per cell (n_cells ~ √n at scale) — broadcast by design
     c = cells.join(F.broadcast(sizes), "cell")
     nch = F.greatest(
-        F.lit(1), F.ceil(F.col("cell_n") / F.lit(chunk))
+        F.lit(1), F.ceil(F.col("cell_n") / F.lit(CHUNK))
     ).cast("int")
     c = c.withColumn("nch", nch).withColumn(
         "chunk", F.pmod(F.xxhash64("id"), F.col("nch")).cast("int")
@@ -241,7 +198,6 @@ def semantic_dup_pairs_matmul(
 def semantic_dedup(
     emb: DataFrame,
     dim: int,
-    config: DedupConfig,
     threshold: float = 0.85,
     n_cells: int = 16,
     seed: int = 69,
@@ -256,7 +212,7 @@ def semantic_dedup(
     cosine threshold (greedy lowest-id-survives). One row per input
     vector — the stable-cardinality curation report; filter
     ``kept`` for the surviving corpus. Within-cell pairs are scored by
-    :func:`semantic_dup_pairs_matmul`. materialize: pin the
+    :func:`semantic_dup_pairs`. materialize: pin the
     cell assignment (localCheckpoint) — pair generation and the final
     left join re-reference it, and the 16-anchor argmax expression is
     the most expensive per-row work in this operator.
@@ -267,7 +223,7 @@ def semantic_dedup(
     if materialize:
         cells = cells.localCheckpoint()
     dropped = (
-        semantic_dup_pairs_matmul(cells, config, threshold)
+        semantic_dup_pairs(cells, threshold)
         .select(F.col("id2").alias("id"))
         .distinct()
     )
@@ -293,9 +249,8 @@ def sql_semantic_dedup(
     """DuckDB SELECT matching :func:`semantic_dedup` — identical
     algorithm: same literal anchors, same rounded-dot argmax cell
     assignment (larger-index tie-break both engines), same within-cell
-    rounded-cosine pair rule, same lowest-id keep sweep. Salting is a
-    physical rewrite; the logical pair set is identical (lsh.py
-    precedent)."""
+    rounded-cosine pair rule, same lowest-id keep sweep. Chunking is a
+    physical rewrite; the logical pair set is identical."""
     anchors = ivf_anchors(dim, n_cells, seed)
     rows = ", ".join(
         "({}, [{}]::DOUBLE[])".format(

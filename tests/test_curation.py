@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import pii
 from entity_deduplication_hack_main_spark.operators import semdedup
 from entity_deduplication_hack_main_spark.operators.knn import (
@@ -83,13 +82,12 @@ def _emb(spark, sf001):
 
 def test_semdedup_threshold_edges(spark, sf001):
     emb = _emb(spark, sf001)
-    cfg = DedupConfig()
     # threshold above any cosine: everything kept
-    all_kept = semdedup.semantic_dedup(emb, 64, cfg, threshold=1.1)
+    all_kept = semdedup.semantic_dedup(emb, 64, threshold=1.1)
     assert all_kept.where(~F.col("kept")).count() == 0
     assert all_kept.count() == emb.count()
     # threshold below any cosine: exactly one survivor per cell (the min id)
-    one_per = semdedup.semantic_dedup(emb, 64, cfg, threshold=-1.1)
+    one_per = semdedup.semantic_dedup(emb, 64, threshold=-1.1)
     kept = one_per.where(F.col("kept"))
     n_cells = one_per.select("cell").distinct().count()
     assert kept.count() == n_cells
@@ -102,23 +100,10 @@ def test_semdedup_threshold_edges(spark, sf001):
     assert {(r["cell"], r["vec_id"]) for r in kept.collect()} == mins
 
 
-def test_semdedup_salted_equals_unsalted(spark, sf001):
-    emb = _emb(spark, sf001)
-    plain = DedupConfig(max_bucket_size=10_000)
-    salted = DedupConfig(max_bucket_size=5, salt_chunk=4)  # every cell hot
-    a = semdedup.semantic_dedup(emb, 64, plain, threshold=0.35)
-    b = semdedup.semantic_dedup(emb, 64, salted, threshold=0.35)
-    ra = {(r["vec_id"], r["cell"], r["kept"]) for r in a.collect()}
-    rb = {(r["vec_id"], r["cell"], r["kept"]) for r in b.collect()}
-    assert ra == rb
-    assert any(not k for _, _, k in ra)  # non-vacuous at this threshold
-
-
 def test_semdedup_deterministic_across_partitionings(spark, sf001):
     emb = _emb(spark, sf001)
-    cfg = DedupConfig()
-    a = semdedup.semantic_dedup(emb.repartition(13), 64, cfg, threshold=0.3)
-    b = semdedup.semantic_dedup(emb.coalesce(1), 64, cfg, threshold=0.3)
+    a = semdedup.semantic_dedup(emb.repartition(13), 64, threshold=0.3)
+    b = semdedup.semantic_dedup(emb.coalesce(1), 64, threshold=0.3)
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
 
 
@@ -127,10 +112,9 @@ def test_semdedup_trained_anchors_tighten_cells(spark, sf001):
     one at equal threshold on the labeled synthetic vectors (cells align
     with the planted label structure, so more true pairs co-locate)."""
     emb = _emb(spark, sf001)
-    cfg = DedupConfig()
-    seeded = semdedup.semantic_dedup(emb, 64, cfg, threshold=0.3)
+    seeded = semdedup.semantic_dedup(emb, 64, threshold=0.3)
     trained = semdedup.semantic_dedup(
-        emb, 64, cfg, threshold=0.3,
+        emb, 64, threshold=0.3,
         anchors=train_ivf_anchors(emb, 64, n_cells=16),
     )
     n_seeded = seeded.where(~F.col("kept")).count()
@@ -141,7 +125,7 @@ def test_semdedup_trained_anchors_tighten_cells(spark, sf001):
 def test_semdedup_plan_no_cartesian(spark, sf001):
     emb = _emb(spark, sf001)
     plan = (
-        semdedup.semantic_dedup(emb, 64, DedupConfig(), threshold=0.35)
+        semdedup.semantic_dedup(emb, 64, threshold=0.35)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -3,19 +3,12 @@ at sf0.001 (fast); the driver re-runs the same comparison at sf0.01."""
 
 from __future__ import annotations
 
-import hashlib
 import sys
 
-import duckdb
-import pandas as pd
 import pytest
+from conftest import _value_hash
 
 sys.path.insert(0, "/root/repo")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="module")
@@ -23,27 +16,6 @@ def entry_mod():
     import __spark_entry__ as e
 
     return e
-
-
-@pytest.fixture(scope="module")
-def duck(sf001):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf001}/{t}.parquet')"
-        )
-    return con
-
-
-def _value_hash(df: pd.DataFrame) -> str:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        df[c] = df[c].astype(str)
-    if len(df) == 0:
-        rows = []
-    else:
-        rows = sorted(df.apply(lambda r: "|".join(r), axis=1).tolist())
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
 def test_entry_smoke(spark, entry_mod):
@@ -56,30 +28,12 @@ def test_entry_smoke(spark, entry_mod):
 
 
 def test_every_query_has_callable_and_oracle_keys(entry_mod):
-    # since r03 EVERY query is oracle-checked — the matmul twins emit a
+    # EVERY query is oracle-checked — the matmul embedding paths emit a
     # guard-band candidate set and re-score with the fold expression, so
-    # they bit-match the same SQL oracle as their expression twins
+    # they bit-match their SQL oracles
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     assert len(qs) >= 20
     assert set(osql) == set(qs)
-
-
-def test_knn_matmul_agrees_with_exact(spark, sf001, entry_mod):
-    """The throughput kNN must return the same neighbor sets as the
-    bit-exact scorer (scores may differ in the last ulp)."""
-    exact = entry_mod.queries()["knn_bruteforce"](spark, sf001)
-    fast = entry_mod.queries()["knn_matmul"](spark, sf001)
-    e = {(r["probe_id"], r["neighbor_id"]) for r in exact.collect()}
-    f = {(r["probe_id"], r["neighbor_id"]) for r in fast.collect()}
-    assert e == f
-
-
-def test_near_dup_matmul_agrees_with_exact(spark, sf001, entry_mod):
-    exact = entry_mod.queries()["embedding_near_dup_pairs"](spark, sf001)
-    fast = entry_mod.queries()["embedding_near_dup_matmul"](spark, sf001)
-    e = {(r["id1"], r["id2"]) for r in exact.collect()}
-    f = {(r["id1"], r["id2"]) for r in fast.collect()}
-    assert e == f
 
 
 @pytest.mark.parametrize(

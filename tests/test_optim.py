@@ -7,20 +7,23 @@ operator's internals):
 - candidate_pairs bucket sizing is a partial-aggregating groupBy + join,
   never a count-window over the bucket key (r05 verdict #1) — asserted on
   a PLANTED mega-bucket so the hot-key path itself is planned;
-- the SemDeDup matmul scorer emits exactly the expression path's pair set
+- the SemDeDup matmul scorer emits the DuckDB within-cell pair multiset
   for every chunking (including chunk sizes that force multi-chunk
   cross blocks and empty hash chunks);
-- the IVF matmul scorer is bit-identical to the expression ivf_knn;
-- the matmul kNN paths fail fast (typed error, no driver collect) on
-  over-cap probe sets (r05 verdict #7);
-- the matmul embedding paths keep string ids, and a NULL block key pairs
-  nothing.
+- the IVF matmul scorer is bit-identical to its DuckDB oracle
+  (knn.sql_ivf_knn);
+- the kNN paths fail fast (typed error, no driver collect) on over-cap
+  probe sets (r05 verdict #7);
+- the matmul embedding paths keep string ids (DuckDB references), and a
+  NULL block key pairs nothing.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
+import duckdb
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,36 +79,45 @@ def test_winnow_and_hamming_sizing_no_window(spark):
     assert "Window" not in _plan(hp)
 
 
+def _sql_within_cell_pairs(threshold: float) -> str:
+    """Every within-cell pair with rounded cosine >= threshold, once:
+    the cell CTEs of sql_semantic_dedup plus its pair rule, before the
+    DISTINCT that turns pairs into dropped ids."""
+    sql = semdedup.sql_semantic_dedup(64, threshold=threshold)
+    ctes = sql[: sql.index("_dropped AS (")].rstrip().rstrip(",")
+    return f"""{ctes}
+SELECT a.vid AS id1, b.vid AS id2,
+       round(list_cosine_similarity(a.v, b.v), 6) AS cosine
+FROM _cells a JOIN _cells b ON a.cell = b.cell AND a.vid < b.vid
+WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
+"""
+
+
 @pytest.mark.parametrize("chunk", [1, 3, 1024])
-def test_semdedup_matmul_pairs_equal_expression(spark, sf001, chunk):
+def test_semdedup_matmul_pairs_equal_expression(
+    spark, sf001, duck, monkeypatch, chunk
+):
+    """Chunk sizes 1 and 3 force multi-chunk cross blocks and empty hash
+    chunks; 1024 puts every cell in one block."""
+    monkeypatch.setattr(semdedup, "CHUNK", chunk)
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     cells = semdedup.assign_cells(emb, knn.ivf_anchors(64, 16, 69))
-    cfg = DedupConfig()
     # Counters, not sets: a block emitting a pair twice must fail
-    exact = Counter(
-        map(tuple, semdedup.semantic_dup_pairs(cells, cfg, 0.35).collect())
+    got = Counter(
+        map(tuple, semdedup.semantic_dup_pairs(cells, 0.35).collect())
     )
-    fast = Counter(
-        map(
-            tuple,
-            semdedup.semantic_dup_pairs_matmul(
-                cells, cfg, 0.35, chunk=chunk
-            ).collect(),
-        )
-    )
-    assert exact == fast and len(exact) > 0
+    want = Counter(duck.sql(_sql_within_cell_pairs(0.35)).fetchall())
+    assert got == want and len(want) > 0
 
 
-def test_ivf_knn_matmul_equals_expression(spark, sf001):
+def test_ivf_knn_matmul_equals_expression(spark, sf001, duck):
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") % 10 == 0)
-    exact = Counter(
+    got = Counter(
         map(tuple, knn.ivf_knn(probes, emb, dim=64, k=5).collect())
     )
-    fast = Counter(
-        map(tuple, knn.ivf_knn_matmul(probes, emb, dim=64, k=5).collect())
-    )
-    assert exact == fast and len(exact) > 0
+    want = Counter(duck.sql(knn.sql_ivf_knn(dim=64, k=5)).fetchall())
+    assert got == want and len(want) > 0
 
 
 # --- r05 ADVICE correctness fixes (the round brief's carve-out) ----------
@@ -161,14 +173,15 @@ def test_matmul_probe_guard_raises(spark, sf001, monkeypatch):
     monkeypatch.setattr(knn, "MAX_COLLECTED_PROBES", 10)
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     with pytest.raises(ValueError, match="probe side exceeds"):
-        knn.brute_force_knn_matmul(emb.limit(11), emb, k=5)
+        knn.brute_force_knn(emb.limit(11), emb, k=5)
     with pytest.raises(ValueError, match="probe side exceeds"):
-        knn.ivf_knn_matmul(emb.limit(11), emb, dim=64, k=5)
+        knn.ivf_knn(emb.limit(11), emb, dim=64, k=5)
 
 
 def _string_id_embeddings(spark):
     """40 vectors in 8 dims with string ids: 20 bases, each with a near
-    copy, in 4 label blocks."""
+    copy, in 4 label blocks — as a Spark frame and as a DuckDB
+    connection holding the same rows in table ``embeddings``."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -177,47 +190,90 @@ def _string_id_embeddings(spark):
     for i in range(20):
         for j, v in enumerate((base[i], base[i] + rng.standard_normal(8) * 0.05)):
             rows.append((f"v:{2 * i + j:02d}", v.tolist(), i % 4))
-    return spark.createDataFrame(
+    ids, vecs, labels = zip(*rows)
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": list(ids),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+                "label": pa.array(labels, pa.int32()),
+            }
+        ),
+    )
+    df = spark.createDataFrame(
         rows, "vec_id string, embedding array<double>, label int"
     )
+    return df, con
+
+
+def _sql_bruteforce_knn(k: int, probe_filter: str) -> str:
+    """The knn_bruteforce oracle with a free probe filter and k."""
+    return f"""
+WITH _s AS (
+  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+         round(list_cosine_similarity(p.embedding, c.embedding), 6) AS cosine
+  FROM (SELECT * FROM embeddings WHERE {probe_filter}) p
+  CROSS JOIN embeddings c
+  WHERE p.vec_id != c.vec_id
+),
+_rk AS (
+  SELECT *, row_number() OVER (PARTITION BY probe_id
+                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
+  FROM _s
+)
+SELECT probe_id, neighbor_id, cosine, rank FROM _rk WHERE rank <= {k}
+"""
 
 
 def test_matmul_knn_string_ids(spark):
     """The matmul kNN paths keep the id type of their input: string ids
-    give the expression paths' rows, not an int() conversion error."""
-    emb = _string_id_embeddings(spark)
-    probes = emb.where(F.col("label") == 0)
+    give the DuckDB reference rows, not an int() conversion error."""
+    emb, con = _string_id_embeddings(spark)
+    probes = emb.where(F.col("vec_id") < "v:10")
+    probe_filter = "vec_id < 'v:10'"
 
     def rows(df):
         return Counter(map(tuple, df.collect()))
 
-    assert rows(knn.brute_force_knn_matmul(probes, emb, k=3)) == rows(
-        knn.brute_force_knn(probes, emb, k=3)
+    assert rows(knn.brute_force_knn(probes, emb, k=3)) == Counter(
+        con.sql(_sql_bruteforce_knn(3, probe_filter)).fetchall()
     )
     ivf = dict(dim=8, k=3, n_cells=4, nprobe=2)
-    fast = rows(knn.ivf_knn_matmul(probes, emb, **ivf))
-    assert fast == rows(knn.ivf_knn(probes, emb, **ivf)) and len(fast) > 0
+    got = rows(knn.ivf_knn(probes, emb, **ivf))
+    want = Counter(
+        con.sql(knn.sql_ivf_knn(**ivf, probe_filter=probe_filter)).fetchall()
+    )
+    assert got == want and len(got) > 0
 
 
 def test_embedding_near_dup_matmul_string_ids(spark):
-    emb = _string_id_embeddings(spark)
-    fast = knn.embedding_near_dup_pairs_matmul(emb, threshold=0.9)
-    exact = knn.embedding_near_dup_pairs(emb, threshold=0.9, block_col="label")
+    emb, con = _string_id_embeddings(spark)
+    fast = knn.embedding_near_dup_pairs(emb, threshold=0.9)
     assert fast.schema["id1"].dataType.simpleString() == "string"
     got = Counter(map(tuple, fast.collect()))
-    assert got == Counter(map(tuple, exact.collect())) and len(got) >= 20
+    want = Counter(
+        con.sql(
+            """
+SELECT a.vec_id AS id1, b.vec_id AS id2,
+       round(list_cosine_similarity(a.embedding, b.embedding), 6) AS cosine
+FROM embeddings a JOIN embeddings b
+  ON a.label = b.label AND a.vec_id < b.vec_id
+WHERE round(list_cosine_similarity(a.embedding, b.embedding), 6) >= 0.9
+"""
+        ).fetchall()
+    )
+    assert got == want and len(got) >= 20
 
 
 def test_embedding_near_dup_matmul_null_block_pairs_nothing(spark):
-    """Rows with a NULL block key share no block, as in the expression
-    path's join on ``a.label = b.label``."""
+    """Rows with a NULL block key share no block, as in the oracle's
+    join on ``a.label = b.label``."""
     one = [1.0, 0.0, 0.0]
     df = spark.createDataFrame(
         [(i, one, None) for i in range(6)] + [(10, one, 1), (11, one, 1)],
         "vec_id bigint, embedding array<double>, label int",
     )
-    fast = Counter(map(tuple, knn.embedding_near_dup_pairs_matmul(df).collect()))
-    exact = knn.embedding_near_dup_pairs(df, block_col="label")
-    assert fast == Counter(map(tuple, exact.collect())) == Counter(
-        {(10, 11, 1.0): 1}
-    )
+    got = Counter(map(tuple, knn.embedding_near_dup_pairs(df).collect()))
+    assert got == Counter({(10, 11, 1.0): 1})
