@@ -5,7 +5,7 @@ NOT part of the driver contract — bench.py is the frozen measurement
 harness. This tool exists for the optimization loop:
 
   python bench_extra.py q <name> [reps]   time one query (noop sink, median)
-  python bench_extra.py explain <name>    write plans/r06/<name>_<tag>.txt
+  python bench_extra.py explain <name>    write plan_dumps/<name>_<tag>.txt
   python bench_extra.py all [reps]        time every bench query
   python bench_extra.py stages <n_docs> [seed]
                                           per-stage table of run_pipeline
@@ -159,7 +159,7 @@ def main() -> None:
         name = sys.argv[2]
         tag = os.environ.get("PLAN_TAG", "before")
         out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "plans", "r06")
+                               "plan_dumps")
         os.makedirs(out_dir, exist_ok=True)
         plan = qs[name](spark, sf_dir)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -85,11 +85,17 @@ def _spread(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
     constant — scale-adaptive per the driver contract). The testdata
     tables are ONE parquet file each = one scan task, so every expression
     upstream of the first exchange (tokenize/hash kernels, regex chains,
-    fingerprints) runs single-threaded without this; a real cluster's
-    multi-file scan already arrives spread and the extra few-MB shuffle is
-    noise. Same rationale + sizing as the r04 similar_part_names fix
-    (measured there: 9s → 1.4s)."""
-    return df.repartition(spark.sparkContext.defaultParallelism * mult)
+    fingerprints) runs single-threaded without this. Same rationale +
+    sizing as the r04 similar_part_names fix (measured there: 9s → 1.4s).
+
+    A scan that already has at least ``defaultParallelism`` partitions (a
+    multi-file table) arrives spread and is returned as is: the partition
+    count comes from planning the scan, no Spark job, and spares a
+    full-input shuffle at cluster scale."""
+    parallelism = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= parallelism:
+        return df
+    return df.repartition(parallelism * mult)
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -98,7 +104,8 @@ def _pin(df: DataFrame) -> DataFrame:
     subtree per DataFrame reference — the r05 verify_candidate_pairs
     physical plan carried 44 copies of the representation kernel and 74
     Exchanges because candidate generation, the semi-reduce id set and
-    both payload joins each re-embed it (plans/r06/*_before.txt). Pinning
+    both payload joins each re-embed it (dump a query's plan with
+    ``python bench_extra.py explain <query>``). Pinning
     computes the subtree once inside the invocation and truncates the
     plan. NOT cross-run caching: every invocation builds a fresh
     checkpoint from the parquet inputs, and unlike .cache()/persist(),
@@ -478,12 +485,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/setjoin.py) — the brief's 'n-gram Jaccard' channel, exact
     where MinHash-LSH is approximate. Feeds on the ordered-shingle kernel
     (no MinHash/winnow/SimHash work — this channel doesn't use them)."""
-    # The testdata table is one parquet file: without a spread the whole
-    # kernel + explode subtree (evaluated four times by the self-join
-    # shape) runs on ONE task. Wall-neutral at sf0.1 (the join/distinct
-    # dominates there), load-bearing at larger single-file inputs. Same
-    # rationale as knn_ivf/event_sessions.
-    docs = _spread(spark, _t(spark, sf_dir, "documents"), 1)
+    docs = _t(spark, sf_dir, "documents")
     # pins measured NEUTRAL here at sf1.0 (17.3 vs 17.5 s) and pure
     # overhead at sf0.1 — the cost is the candidate join + array_intersect
     # verify, not the kernel; three restructures (late distinct,

@@ -28,6 +28,11 @@ any posting table into pairs:
   each unordered pair exactly once per shared posting pair, so the winnow
   channel can count shared fingerprints under salting.
 
+Sizing and chunk assignment are :func:`chunk_members`, the one sizing and
+salting convention of every blocked comparison: the embedding block scorer
+``knn.embedding_near_dup_pairs`` (behind SemDeDup too) chunks its blocks
+with it and scores each chunk pair with one matmul instead of a join.
+
 :func:`channel_candidates` is the pipeline's candidate stage: the
 three-channel posting table through one :func:`bucket_pairs`, then one
 ``groupBy(id1, id2)`` derives the channel flags. Streaming ingest probes
@@ -90,6 +95,37 @@ def one_channel(df: DataFrame, kid: str, key: str, *carry: str) -> DataFrame:
     )
 
 
+def chunk_members(
+    postings: DataFrame,
+    bucket: Sequence[str],
+    max_size: int,
+    chunk: int,
+    keep: Column | None = None,
+) -> DataFrame:
+    """*postings* (``id``, *bucket* columns, ...) with the bucket size
+    ``n``, its chunk count ``nch`` and the member's chunk ``c``: the one
+    sizing and salting convention of every blocked comparison.
+
+    Sizes come from one partial-aggregating ``groupBy(bucket).count()``
+    joined back; buckets with ``n < 2`` (and, given *keep*, a predicate on
+    ``n``, those it rejects) drop out, and so do NULL keys, which join no
+    size row. A bucket of at most *max_size* members is one chunk; a larger
+    one splits into ``ceil(n / chunk)`` chunks by ``pmod(xxhash64(id),
+    nch)``, so a chunk holds about *chunk* members however hot its bucket
+    is."""
+    n = F.col("n")
+    sized = n >= 2 if keep is None else (n >= 2) & keep
+    sizes = postings.groupBy(*bucket).agg(F.count("*").alias("n")).where(sized)
+    nch = (
+        F.when(n > max_size, F.ceil(n / F.lit(chunk))).otherwise(1).cast("int")
+    )
+    return (
+        postings.join(sizes, list(bucket))
+        .withColumn("nch", nch)
+        .withColumn("c", F.pmod(F.xxhash64("id"), F.col("nch")).cast("int"))
+    )
+
+
 def bucket_pairs(
     postings: DataFrame,
     config: DedupConfig,
@@ -104,18 +140,8 @@ def bucket_pairs(
     bucket pairs twice with each partner, as the plain self-join would.
     keep: an extra predicate on the bucket size ``n`` (and ``chan``);
     buckets with ``n < 2`` always drop."""
-    n = F.col("n")
-    sized = n >= 2 if keep is None else (n >= 2) & keep
-    sizes = postings.groupBy(*BUCKET).agg(F.count("*").alias("n")).where(sized)
-    nch = (
-        F.when(n > config.max_bucket_size, F.ceil(n / F.lit(config.salt_chunk)))
-        .otherwise(1)
-        .cast("int")
-    )
-    members = (
-        postings.join(sizes, BUCKET)
-        .withColumn("nch", nch)
-        .withColumn("c", F.pmod(F.xxhash64("id"), F.col("nch")).cast("int"))
+    members = chunk_members(
+        postings, BUCKET, config.max_bucket_size, config.salt_chunk, keep
     )
     # member in chunk c plays ci = c against every cj in [c, nch) on the
     # left and cj = c against every ci in [0, c] on the right

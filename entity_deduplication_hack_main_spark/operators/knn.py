@@ -15,8 +15,12 @@ materialized:
   restricted to probes' buckets (multi-probe via bit flips), then exact
   cosine + top-k. O(P×N/2^b) expected.
 - ``embedding_near_dup_pairs``: all-pairs cosine >= threshold within a
-  blocking key, one matmul per block — the embedding-cosine near-duplicate
-  channel; ``embedding_near_dup_lsh`` is its label-free self-join.
+  blocking key — the embedding-cosine near-duplicate channel and the only
+  within-block cosine scorer (SemDeDup's within-cell pairs are it with
+  the cell as the block). Blocks over :data:`CHUNK` members are split into
+  hash chunks by ``candidates.chunk_members`` and each chunk pair is one
+  matmul, so a hot block is bounded per task. ``embedding_near_dup_lsh``
+  is its label-free self-join.
 
 The matmul paths only PROPOSE candidates, with a guard band wider than the
 1e-6 output rounding. Every emitted cosine is the JVM fold expression
@@ -32,11 +36,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_deduplication_hack_main_spark.functions import similarity as simfn
+from entity_deduplication_hack_main_spark.operators import candidates as cand
 from entity_deduplication_hack_main_spark.operators.topk import top_k_per_group
 
 #: candidate margin below the k-th matmul score: more than the half-step
 #: of the 6-decimal output rounding plus the matmul-vs-fold float error
 _TIE_TOL = 2e-6
+#: vectors per scoring group of :func:`embedding_near_dup_pairs`: a larger
+#: block splits into hash chunks of about CHUNK/2 members
+CHUNK = 1024
 
 
 def brute_force_knn(
@@ -289,7 +297,6 @@ def embedding_near_dup_lsh(
     seed: int = 69,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    config: "DedupConfig | None" = None,
     materialize: bool = False,
 ) -> DataFrame:
     """(id1, id2, cosine): the PRODUCTION self-join near-dup channel — no
@@ -309,9 +316,7 @@ def embedding_near_dup_lsh(
     bands = hyperplane_bands(
         df, dim, n_planes, n_tables, seed, id_col, vec_col
     )
-    pairs = lsh_op.candidate_pairs(
-        bands, config or DedupConfig(), materialize=materialize
-    )
+    pairs = lsh_op.candidate_pairs(bands, DedupConfig(), materialize=materialize)
     # per-vector L2 norm precomputed ONCE per side (guide §1.2 per-task
     # work): simfn.cosine folds three 64-element aggregates per PAIR
     # (dot + both norms) — at millions of candidate pairs the norm folds
@@ -701,52 +706,93 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """(id1, id2, cosine): pairs with id1 < id2 that share a non-NULL
     ``block_col`` value and have cosine >= threshold (J1 semantics: block
-    then compare).
+    then compare), each pair exactly once.
 
-    Each block is scored by one matmul (applyInPandas), so blocks must fit
-    in worker memory — pre-split oversized blocks with a salt column
-    upstream; :func:`embedding_near_dup_lsh` is the label-free path. The
-    matmul emits CANDIDATES at ``threshold - 1e-6`` (a guard band wider
-    than both the 1e-6 output rounding and the ~1e-13 matmul-vs-fold
-    float-order error), with both vectors riding along; the final cosine
-    is the fold cosine of that tiny pair set, re-thresholded.
+    Blocks are chunked by :func:`candidates.chunk_members`: a block of at
+    most :data:`CHUNK` members is one chunk, a larger one splits into hash
+    chunks of about CHUNK/2. Every chunk pair ``(ci, cj)``, ``ci <= cj``,
+    of a block is one group scored by one numpy matmul (applyInPandas):
+    the diagonal group holds chunk ci (its pairs are the upper triangle),
+    any other group chunk ci against chunk cj. So a group holds about CHUNK
+    vectors however hot the block is (a hash chunk would need twice its
+    expected size to push a group past 2·CHUNK), a member of a block with
+    nch chunks rides in nch groups, and a block of B members still costs
+    B²/2 comparisons.
+
+    The matmul emits CANDIDATES at ``threshold - 1e-6`` (a guard band
+    wider than both the 1e-6 output rounding and the ~1e-13 matmul-vs-fold
+    float-order error), with both vectors riding along; the final cosine is
+    the fold cosine of that tiny pair set, re-thresholded.
     """
     import pandas as pd
 
+    guard = threshold - 1e-6
+
     def block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        vecs = list(pdf[vec_col])
+        ids = pdf["id"].to_numpy()
+        vecs = list(pdf["v"])
         x = np.array(vecs, dtype=np.float64)
         x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-        sims = x @ x.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = sims[iu, ju] >= threshold - 1e-6  # guard band; exact
-        i, j = iu[keep], ju[keep]                # re-score prunes below
+        if pdf["ci"].iat[0] == pdf["cj"].iat[0]:
+            iu, ju = np.triu_indices(len(ids), k=1)
+            keep = (x @ x.T)[iu, ju] >= guard  # guard band; exact
+            i, j = iu[keep], ju[keep]          # re-score prunes below
+        else:  # ci < cj even when chunk cj is empty (no side-true rows)
+            side = pdf["side"].to_numpy()
+            a, b = np.flatnonzero(~side), np.flatnonzero(side)
+            ai, bj = np.nonzero(x[a] @ x[b].T >= guard)
+            i, j = a[ai], b[bj]
         swap = ids[i] > ids[j]
         lo = np.where(swap, j, i)
         hi = np.where(swap, i, j)
+        # object Series: an empty list column would infer float64
         return pd.DataFrame(
             {
                 "id1": ids[lo],
                 "id2": ids[hi],
-                "v1": [vecs[t] for t in lo],
-                "v2": [vecs[t] for t in hi],
+                "v1": pd.Series([vecs[t] for t in lo], dtype=object),
+                "v2": pd.Series([vecs[t] for t in hi], dtype=object),
             }
         )
 
     vec_t = df.schema[vec_col].dataType.simpleString()
     id_t = df.schema[id_col].dataType.simpleString()
-    # a NULL block key blocks nothing, as in the join on equal keys
-    cand = (
-        df.select(id_col, vec_col, block_col)
-        .where(F.col(block_col).isNotNull())
-        .groupBy(block_col)
-        .applyInPandas(
-            block, f"id1 {id_t}, id2 {id_t}, v1 {vec_t}, v2 {vec_t}"
-        )
+    pairs = (
+        _chunk_groups(df, block_col, id_col, vec_col)
+        .groupBy("block", "ci", "cj")
+        .applyInPandas(block, f"id1 {id_t}, id2 {id_t}, v1 {vec_t}, v2 {vec_t}")
     )
-    return cand.select(
+    return pairs.select(
         "id1",
         "id2",
         F.round(simfn.cosine(F.col("v1"), F.col("v2")), 6).alias("cosine"),
     ).where(F.col("cosine") >= threshold)
+
+
+def _chunk_groups(
+    df: DataFrame, block_col: str, id_col: str, vec_col: str
+) -> DataFrame:
+    """(block, ci, cj, side, id, v): the rows of every scoring group of
+    :func:`embedding_near_dup_pairs` — each member once per chunk of its
+    block, in group ``(c, o)`` on side false when its chunk ``c <= o`` and
+    in group ``(o, c)`` on side true when ``o < c``."""
+    members = cand.chunk_members(
+        df.select(
+            F.col(block_col).alias("block"),
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+        ),
+        ["block"],
+        CHUNK,
+        (CHUNK + 1) // 2,
+    )
+    other = F.explode(F.sequence(F.lit(0), F.col("nch") - 1))
+    c, o = F.col("c"), F.col("o")
+    return members.select("block", "id", "v", "c", other.alias("o")).select(
+        "block",
+        F.least(c, o).alias("ci"),
+        F.greatest(c, o).alias("cj"),
+        (c > o).alias("side"),
+        "id",
+        "v",
+    )

@@ -7,9 +7,10 @@ operator's internals):
 - candidate_pairs bucket sizing is a partial-aggregating groupBy + join,
   never a count-window over the bucket key (r05 verdict #1) — asserted on
   a PLANTED mega-bucket so the hot-key path itself is planned;
-- the SemDeDup matmul scorer emits the DuckDB within-cell pair multiset
+- the embedding block scorer emits the DuckDB within-cell pair multiset
   for every chunking (including chunk sizes that force multi-chunk
-  cross blocks and empty hash chunks);
+  cross blocks and empty hash chunks), and a hot block reaches it in
+  CHUNK-bounded groups;
 - the IVF matmul scorer is bit-identical to its DuckDB oracle
   (knn.sql_ivf_knn);
 - the kNN paths fail fast (typed error, no driver collect) on over-cap
@@ -97,17 +98,67 @@ WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
 def test_semdedup_matmul_pairs_equal_expression(
     spark, sf001, duck, monkeypatch, chunk
 ):
-    """Chunk sizes 1 and 3 force multi-chunk cross blocks and empty hash
-    chunks; 1024 puts every cell in one block."""
-    monkeypatch.setattr(semdedup, "CHUNK", chunk)
+    """SemDeDup's within-cell pairs: chunk sizes 1 and 3 force
+    multi-chunk cross groups and empty hash chunks; 1024 puts every cell
+    in one group."""
+    monkeypatch.setattr(knn, "CHUNK", chunk)
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     cells = semdedup.assign_cells(emb, knn.ivf_anchors(64, 16, 69))
-    # Counters, not sets: a block emitting a pair twice must fail
-    got = Counter(
-        map(tuple, semdedup.semantic_dup_pairs(cells, 0.35).collect())
-    )
+    pairs = knn.embedding_near_dup_pairs(cells, 0.35, "cell", "id", "v")
+    # Counters, not sets: a group emitting a pair twice must fail
+    got = Counter(map(tuple, pairs.collect()))
     want = Counter(duck.sql(_sql_within_cell_pairs(0.35)).fetchall())
     assert got == want and len(want) > 0
+
+
+def _sql_label_pairs(threshold: float) -> str:
+    """The blocked self-join of table ``embeddings`` on ``label``."""
+    return f"""
+SELECT a.vec_id AS id1, b.vec_id AS id2,
+       round(list_cosine_similarity(a.embedding, b.embedding), 6) AS cosine
+FROM embeddings a JOIN embeddings b
+  ON a.label = b.label AND a.vec_id < b.vec_id
+WHERE round(list_cosine_similarity(a.embedding, b.embedding), 6) >= {threshold}
+"""
+
+
+def test_embedding_near_dup_hot_block_is_chunk_bounded(spark, monkeypatch):
+    """A planted 3000-member single-label block with CHUNK = 256: the pair
+    multiset equals the DuckDB blocked self-join, and no group the scorer
+    receives holds more than 2·CHUNK vectors (one unchunked group would
+    hold all 3000)."""
+    import numpy as np
+
+    monkeypatch.setattr(knn, "CHUNK", 256)
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((1500, 8))
+    # near copies at cosine ~0.99 (a shuffled id order scatters each pair
+    # over the hash chunks), plus the random pairs that pass by chance
+    vecs = np.concatenate([base, base + rng.standard_normal((1500, 8)) * 0.05])
+    ids = rng.permutation(3000)
+    rows = [(int(i), v.tolist(), 0) for i, v in zip(ids, vecs)]
+    df = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>, label int"
+    )
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs.tolist(), pa.list_(pa.float64())),
+                "label": pa.array([0] * 3000, pa.int32()),
+            }
+        ),
+    )
+    got = Counter(map(tuple, knn.embedding_near_dup_pairs(df).collect()))
+    want = Counter(con.sql(_sql_label_pairs(0.95)).fetchall())
+    assert got == want and len(want) >= 1500
+    groups = knn._chunk_groups(df, "label", "vec_id", "embedding").groupBy(
+        "block", "ci", "cj"
+    ).count()
+    n, biggest = groups.agg(F.count("*"), F.max("count")).first()
+    assert n > 1 and biggest <= 2 * knn.CHUNK
 
 
 def test_ivf_knn_matmul_equals_expression(spark, sf001, duck):
@@ -253,17 +304,7 @@ def test_embedding_near_dup_matmul_string_ids(spark):
     fast = knn.embedding_near_dup_pairs(emb, threshold=0.9)
     assert fast.schema["id1"].dataType.simpleString() == "string"
     got = Counter(map(tuple, fast.collect()))
-    want = Counter(
-        con.sql(
-            """
-SELECT a.vec_id AS id1, b.vec_id AS id2,
-       round(list_cosine_similarity(a.embedding, b.embedding), 6) AS cosine
-FROM embeddings a JOIN embeddings b
-  ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.embedding, b.embedding), 6) >= 0.9
-"""
-        ).fetchall()
-    )
+    want = Counter(con.sql(_sql_label_pairs(0.9)).fetchall())
     assert got == want and len(got) >= 20
 
 

@@ -89,6 +89,28 @@ def test_embedding_near_dup_lsh_plan_is_bucketed(spark, sf001):
     assert "BatchEvalPython" not in plan
 
 
+def test_spread_skips_scans_that_arrive_spread(spark, sf001, tmp_path):
+    """A parquet of 2·defaultParallelism files plans no round-robin
+    exchange, the single-file testdata scan still plans one, and neither
+    decision runs a Spark job."""
+    sc = spark.sparkContext
+    one_file = f"{sf001}/documents.parquet"
+    many_files = str(tmp_path / "documents")
+    spark.read.parquet(one_file).repartition(
+        2 * sc.defaultParallelism
+    ).write.parquet(many_files)
+    scans = [spark.read.parquet(p) for p in (many_files, one_file)]
+    try:
+        sc.setJobGroup("spread-decision", "spread decision")
+        multi, single = (entry_queries._spread(spark, df) for df in scans)
+        assert sc.statusTracker().getJobIdsForGroup("spread-decision") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "RoundRobinPartitioning" not in _plan(multi)
+    assert "RoundRobinPartitioning" in _plan(single)
+
+
 def test_cut_spans_raw_plan_broadcasts_ranges_no_python(spark, sf001):
     """r03 verdict #9: the span-cut ranges join must broadcast the tiny
     grouped-ranges side (the docs side carries the corpus text/token
