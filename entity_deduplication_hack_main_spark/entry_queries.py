@@ -80,7 +80,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
+def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin spread sized off the session's core count (never a
     constant — scale-adaptive per the driver contract). The testdata
     tables are ONE parquet file each = one scan task, so every expression
@@ -95,7 +95,7 @@ def _spread(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
     parallelism = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
         return df
-    return df.repartition(parallelism * mult)
+    return df.repartition(parallelism * 2)
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -115,8 +115,11 @@ def _pin(df: DataFrame) -> DataFrame:
 
 
 def _docs_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The representation kernel over ``documents``. No _spread: a
+    round-robin spread ahead of the Arrow kernel measured slower at sf0.1
+    on 4 cores in every consumer timed (10 alternating pairs)."""
     return represent.with_representation(
-        _spread(spark, _t(spark, sf_dir, "documents")),
+        _t(spark, sf_dir, "documents"),
         CFG,
         "doc_id",
         "text",
@@ -179,7 +182,7 @@ def exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"SELECT doc_id, {textstats.sql_fingerprint('text')} AS fp FROM documents",
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", textstats.fingerprint(F.col("text")).alias("fp")
     )
@@ -221,7 +224,7 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (normalized) and the GPT-2-style BPE-ish pre-tokenizer segment
     count over the RAW text — the cheap length-in-tokens estimate a
     training-data pipeline budgets with."""
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         textstats.bpe_token_count(F.col("text"))
@@ -612,6 +615,9 @@ _raw AS (
 ),
 _q AS (
   SELECT doc_id, url,
+    lower(regexp_extract(url, '^([a-zA-Z]+)://', 1)) AS scheme,
+    regexp_replace(lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)),
+      '^www\\.', '') AS h,
     coalesce(array_to_string(list_sort(list_filter(
       string_split(regexp_extract(url, '\\?([^#]*)', 1), '&'),
       p -> p <> '' AND NOT regexp_matches(
@@ -621,9 +627,11 @@ _q AS (
 ),
 _k AS (
   SELECT doc_id,
-    regexp_replace(regexp_replace(lower(
-        regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)),
-      '^www\\.', ''), ':(80|443)$', '')
+    CASE scheme
+      WHEN 'http' THEN regexp_replace(h, ':80$', '')
+      WHEN 'https' THEN regexp_replace(h, ':443$', '')
+      ELSE h
+    END
     || regexp_replace(
          regexp_extract(url, '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1), '/$', '')
     || CASE WHEN qn = '' THEN '' ELSE '?' || qn END AS url_key
@@ -638,11 +646,12 @@ def url_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Common-Crawl channel, run before any content hashing) demonstrated
     cross-engine: deterministic recrawl/tracking-decorated URL variants
     are synthesized per doc (five shapes exercising every rule — www +
-    default :80 port + trailing slash, :443 + utm/ref params, a
-    NON-default :8080 port with out-of-order params that must stay a
-    DISTINCT key (ports other than the scheme defaults are different
-    services, not recrawls — pinned cross-engine by this variant), gclid
-    injection, uppercase host + fragment; the variant index is
+    trailing slash + an https URL on :80, which is not the https default
+    and stays a DISTINCT key, :443 + utm/ref params, a NON-default :8080
+    port with out-of-order params that must stay a DISTINCT key (ports
+    other than the scheme's default are different services, not recrawls
+    — pinned cross-engine by these variants), gclid injection, uppercase
+    host + fragment; the variant index is
     ``(doc_id div 10) % 5`` — per source doc_ids step 20, so the modulus
     must be odd to cover every variant), canonicalized
     with the production `canonical_url_key` (JVM parse_url + array ops; the
@@ -817,7 +826,7 @@ FROM _q
 """,
 )
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return docs.withColumn(
         "_toks", textstats.tokens_col(F.col("text"))
     ).select(
@@ -843,10 +852,9 @@ def unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM mean log-probability per doc + exact head/middle/tail terciles
     (the ntile oracle twin; production uses perplexity_buckets)."""
     # no _spread (measured worse at both scales: the vocab aggregation
-    # repartitions anyway); the pinned token table (materialize) is the
-    # win — 3.5 -> 2.6 s at sf1.0, 0.7 -> 0.5 s at sf0.1
+    # repartitions anyway)
     docs = _t(spark, sf_dir, "documents")
-    scored = lm_fn.unigram_logprob(docs, materialize=True)
+    scored = lm_fn.unigram_logprob(docs)
     return lm_fn.perplexity_buckets_exact(scored)
 
 
@@ -1471,9 +1479,7 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "knn_bruteforce",
-    """
+_KNN_SQL = """
 WITH _p AS (SELECT * FROM embeddings WHERE vec_id % 10 = 0),
 _s AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
@@ -1488,10 +1494,14 @@ _rk AS (
   FROM _s
 )
 SELECT probe_id, neighbor_id, cosine, rank FROM _rk WHERE rank <= 5
-""",
-)
+"""
+
+
+@register("knn_matmul", _KNN_SQL)
+@register("knn_bruteforce", _KNN_SQL)
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 per probe (every 10th vector)."""
+    """Brute-force cosine top-5 per probe (every 10th vector); also
+    registered as ``knn_matmul``, its throughput name."""
     emb = _t(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") % 10 == 0)
     return knn_op.brute_force_knn(probes, emb, k=5)
@@ -1513,35 +1523,6 @@ def embedding_near_dup_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``embedding_near_dup_pairs``."""
     emb = _t(spark, sf_dir, "embeddings")
     return knn_op.embedding_near_dup_pairs(emb, threshold=0.3)
-
-
-@register(
-    "knn_matmul",
-    """
-WITH _p AS (SELECT * FROM embeddings WHERE vec_id % 10 = 0),
-_s AS (
-  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         round(list_cosine_similarity(p.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cosine
-  FROM _p p CROSS JOIN embeddings c
-  WHERE p.vec_id != c.vec_id
-),
-_rk AS (
-  SELECT probe_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM _s
-)
-SELECT probe_id, neighbor_id, cosine, rank FROM _rk WHERE rank <= 5
-""",
-)
-def knn_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """knn_bruteforce over a spread corpus: the same
-    :func:`knn.brute_force_knn` call and oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") % 10 == 0)
-    # the corpus side does all the matmul work inside mapInPandas — the
-    # single-file scan is ONE task without the spread
-    return knn_op.brute_force_knn(probes, _spread(spark, emb, 1), k=5)
 
 
 @register(
@@ -1712,7 +1693,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, with token offsets in both — no candidate pairs in. Catches the
     20-50-token verbatim runs below the winnow channel's 52-token
     guarantee (see operators/suffix.py substring_spans_exact)."""
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return suffix_op.substring_spans_exact(
         docs, CFG, span_k=20, hash_strategy="md5", materialize=True
     )
@@ -1727,7 +1708,7 @@ def substring_cut_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated >= 20-token run removed from the higher-id doc — the
     downstream product of exact_substring_spans a training-data pipeline
     actually consumes."""
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     spans = suffix_op.substring_spans_exact(
         docs, CFG, span_k=20, hash_strategy="md5", materialize=True
     )
@@ -1744,7 +1725,7 @@ def substring_cut_docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation and whitespace outside the cut ranges are untouched, so the
     output can substitute for the corpus as training data. The normalized-
     token variant (`substring_cut_docs`) remains for diffing."""
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     spans = suffix_op.substring_spans_exact(
         docs, CFG, span_k=20, hash_strategy="md5", materialize=True
     )
@@ -1776,12 +1757,10 @@ def embedding_near_dup_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 planes × 16 tables the analytic miss probability per planted pair
     is ~1e-23, so set equality is deterministic in practice; the recall
     gate on clustered synthetic vectors lives in pytest."""
-    # mult=1: embedding tables are small rows-wise; finer splits only add
-    # task overhead (128-partition variant measured 8.9 s vs 5.8 s).
     # allv stays LAZY — its transform is cheap and the banding is pinned
     # inside candidate_pairs, so re-evaluating allv per verify join is
     # cheaper than an extra eager checkpoint job.
-    emb = _spread(spark, _t(spark, sf_dir, "embeddings"), 1)
+    emb = _t(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -2127,7 +2106,7 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/semdedup.py). τ=0.35 matches this synthetic corpus's
     cosine scale (near-dup channel uses 0.3); real encoder embeddings
     would run ~0.95."""
-    emb = _spread(spark, _t(spark, sf_dir, "embeddings"), 1)
+    emb = _t(spark, sf_dir, "embeddings")
     return semdedup_op.semantic_dedup(
         emb, dim=64, threshold=0.35, materialize=True
     )

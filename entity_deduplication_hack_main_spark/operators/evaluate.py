@@ -37,14 +37,20 @@ def pair_metrics(
     """
     m = _norm_pairs(matched, *matched_cols).cache()
     g = _norm_pairs(golden, *golden_cols).cache()
-    tp = m.join(g, ["p1", "p2"], "left_semi").count()
-    fp_df = m.join(g, ["p1", "p2"], "left_anti")
-    if exact_pairs is not None:
-        fp_df = fp_df.join(
-            _norm_pairs(exact_pairs, *matched_cols), ["p1", "p2"], "left_anti"
-        )
-    fp = fp_df.count()
-    fn = g.join(m, ["p1", "p2"], "left_anti").count()
+    try:
+        tp = m.join(g, ["p1", "p2"], "left_semi").count()
+        fp_df = m.join(g, ["p1", "p2"], "left_anti")
+        if exact_pairs is not None:
+            fp_df = fp_df.join(
+                _norm_pairs(exact_pairs, *matched_cols),
+                ["p1", "p2"],
+                "left_anti",
+            )
+        fp = fp_df.count()
+        fn = g.join(m, ["p1", "p2"], "left_anti").count()
+    finally:
+        m.unpersist()
+        g.unpersist()
     precision = tp / (tp + fp) if tp + fp else 0.0
     recall = tp / (tp + fn) if tp + fn else 0.0
     f1 = (

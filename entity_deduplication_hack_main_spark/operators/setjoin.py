@@ -113,25 +113,16 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     id_col: str = "id",
     set_col: str = "shingle_set",
-    materialize: bool = False,
 ) -> DataFrame:
     """All pairs with exact shingle-set Jaccard >= threshold.
 
     Output: (id1, id2, jaccard) with id1 < id2, jaccard rounded to 6
     decimals. Exact (modulo the documented max_df coverage cap): the
     prefix filter is lossless for Jaccard >= threshold.
-
-    materialize: pin (localCheckpoint) the df-capped prefix index — the
-    self-join references it twice, and each reference otherwise re-runs
-    the explode + df-count subtree (and whatever produced ``payload``).
-    Invocation-scoped; callers with committer-cached payloads can leave
-    it off.
     """
     t = config.jaccard_similar if threshold is None else threshold
     df_cap = config.winnow_max_df if max_df is None else max_df
     idx = prefix_index(payload, t, df_cap, id_col, set_col)
-    if materialize:
-        idx = idx.localCheckpoint()
 
     a = idx.alias("a")
     b = idx.alias("b")

@@ -10,7 +10,8 @@ Common-Crawl-style curation).
 Canonicalization (documented; pure JVM ``parse_url`` + regex/array
 expressions, no Python):
 - scheme and fragment dropped; host lowercased; leading ``www.`` and an
-  explicit default port (``:80``/``:443``) stripped;
+  explicit default port of the scheme (``:80`` for http, ``:443`` for
+  https) stripped;
 - trailing ``/`` of the path stripped (``/a/b/`` == ``/a/b``; the root
   path becomes the empty string);
 - query tracking parameters removed (``utm_*``, ``gclid``, ``fbclid``,
@@ -48,10 +49,11 @@ def canonical_url_key(url: Column) -> Column:
 
     The authority is taken by regex, NOT ``parse_url(HOST)``: Spark's
     HOST part strips EVERY port, which would merge distinct services on
-    the same host (``host:8080`` vs ``host:9090``) — only the scheme
-    default ports (:80/:443) are content-neutral, so only they are
-    stripped. Userinfo (``user@host``, up to the LAST ``@`` per RFC 3986)
-    is dropped like parse_url does.
+    the same host (``host:8080`` vs ``host:9090``) — only the scheme's
+    own default port (:80 for http, :443 for https) is content-neutral,
+    so only it is stripped (``https://host:80`` keeps its port).
+    Userinfo (``user@host``, up to the LAST ``@`` per RFC 3986) is
+    dropped like parse_url does.
 
     PATH/QUERY come from ``try_parse_url`` — the plain ``parse_url``
     RAISES under Spark 4's default ANSI mode on malformed scheme-bearing
@@ -61,10 +63,17 @@ def canonical_url_key(url: Column) -> Column:
     every malformed URL on a host. Instead, URL validity gates the whole
     key: unparseable → NULL → passthrough."""
     auth = F.regexp_extract(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)", 1)
+    scheme = F.lower(
+        F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)
+    )
     host = F.lower(auth)
     host = F.regexp_replace(host, r"^.*@", "")
     host = F.regexp_replace(host, r"^www\.", "")
-    host = F.regexp_replace(host, r":(80|443)$", "")
+    host = (
+        F.when(scheme == "http", F.regexp_replace(host, r":80$", ""))
+        .when(scheme == "https", F.regexp_replace(host, r":443$", ""))
+        .otherwise(host)
+    )
     path = F.coalesce(F.try_parse_url(url, F.lit("PATH")), F.lit(""))
     path = F.regexp_replace(path, r"/$", "")
     query = F.coalesce(F.try_parse_url(url, F.lit("QUERY")), F.lit(""))

@@ -94,13 +94,14 @@ WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
 """
 
 
-@pytest.mark.parametrize("chunk", [1, 3, 1024])
+@pytest.mark.parametrize("chunk", [3, 1024])
 def test_semdedup_matmul_pairs_equal_expression(
     spark, sf001, duck, monkeypatch, chunk
 ):
-    """SemDeDup's within-cell pairs: chunk sizes 1 and 3 force
-    multi-chunk cross groups and empty hash chunks; 1024 puts every cell
-    in one group."""
+    """SemDeDup's within-cell pairs: chunk size 3 (hash chunks of 2)
+    forces single-member diagonal groups, cross groups whose partner
+    chunk is empty and populated cross groups; 1024 puts every cell in
+    one group."""
     monkeypatch.setattr(knn, "CHUNK", chunk)
     emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
     cells = semdedup.assign_cells(emb, knn.ivf_anchors(64, 16, 69))
@@ -109,6 +110,20 @@ def test_semdedup_matmul_pairs_equal_expression(
     got = Counter(map(tuple, pairs.collect()))
     want = Counter(duck.sql(_sql_within_cell_pairs(0.35)).fetchall())
     assert got == want and len(want) > 0
+    if chunk == 3:
+        groups = (
+            knn._chunk_groups(cells, "cell", "id", "v")
+            .groupBy("block", "ci", "cj")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("side").cast("int")).alias("n_side"),
+            )
+            .collect()
+        )
+        assert any(g.ci == g.cj and g.n == 1 for g in groups)
+        cross = [g for g in groups if g.ci < g.cj]
+        assert any(g.n_side == 0 for g in cross)
+        assert any(0 < g.n_side < g.n for g in cross)
 
 
 def _sql_label_pairs(threshold: float) -> str:

@@ -111,6 +111,30 @@ def test_spread_skips_scans_that_arrive_spread(spark, sf001, tmp_path):
     assert "RoundRobinPartitioning" in _plan(single)
 
 
+def test_unpinned_query_and_pair_metrics_leave_no_storage(spark, sf001):
+    """``unigram_lm_scores`` (its token-table pin is gone) and
+    ``evaluate.pair_metrics`` persist nothing that outlives the call.
+    Ids, not counts: GC may free older blocks mid-run."""
+    from entity_deduplication_hack_main_spark.operators import evaluate
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def new_storage(run) -> set[int]:
+        before = {i.id() for i in jsc.getRDDStorageInfo()}
+        run()
+        return {i.id() for i in jsc.getRDDStorageInfo()} - before
+
+    q = entry_queries.queries()["unigram_lm_scores"]
+    assert new_storage(
+        lambda: q(spark, sf001).write.format("noop").mode("overwrite").save()
+    ) == set()
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id1 long, id2 long")
+    golden = spark.createDataFrame(
+        [(2, 1)], "original_id long, duplicate_id long"
+    )
+    assert new_storage(lambda: evaluate.pair_metrics(pairs, golden)) == set()
+
+
 def test_cut_spans_raw_plan_broadcasts_ranges_no_python(spark, sf001):
     """r03 verdict #9: the span-cut ranges join must broadcast the tiny
     grouped-ranges side (the docs side carries the corpus text/token

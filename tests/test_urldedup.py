@@ -22,6 +22,9 @@ def test_canonical_url_key_rules(spark):
         ("https://example.com/?q=spark", "example.com?q=spark"),
         # NON-default port kept (different service, not a recrawl)
         ("http://example.com:8080/a", "example.com:8080/a"),
+        # a default port is stripped only for its own scheme
+        ("http://example.com:443/a", "example.com:443/a"),
+        ("https://example.com:80/a", "example.com:80/a"),
         # userinfo dropped like parse_url does
         ("https://user:pw@www.example.com:443/a", "example.com/a"),
         # no scheme://authority -> NULL key (no canonical identity)
