@@ -144,9 +144,8 @@ def verify_pairs_full(
     heavy docs; this halved pipeline wall time).
 
     payload: (id, shingle_set, fp, simhash), semi-join reduced to the
-    candidate-pair members first (:func:`_paired_payloads`). Shared by the
-    batch pipeline and the streaming in-batch channel so both apply
-    IDENTICAL semantics (r03 verdict #3)."""
+    candidate-pair members first (:func:`_paired_payloads`). Batch and
+    streaming both run it in ``plans.pipeline.near_dup_stages``."""
     j = _paired_payloads(
         pairs, payload, {"shingle_set": "s", "fp": "fp", "simhash": "sh"}
     )

@@ -40,14 +40,15 @@ class Pins:
 
     def release(self, *frames: DataFrame) -> None:
         """Release the pins of ``frames`` (frames this object returned),
-        or every pin when none is given."""
+        or every pin when none is given, newest first: a pin released
+        under a still-cached dependent makes Spark re-plan the dependent."""
         kept = []
-        for out, release in self._pinned:
+        for out, release in reversed(self._pinned):
             if not frames or any(out is f for f in frames):
                 release()
             else:
                 kept.append((out, release))
-        self._pinned = kept
+        self._pinned = kept[::-1]
 
 
 def unsized(df: DataFrame) -> DataFrame:

@@ -19,7 +19,9 @@ bucket self-join; a ``groupBy(id1, id2)`` then derives each pair's
 ``channels`` (operators/candidates.py).
 
 Every stage goes through :class:`StageCommitter` → committed parquet +
-per-partition lineage rows + resume (plans/lineage.py).
+per-partition lineage rows + resume (plans/lineage.py): ``payload`` →
+``candidates`` → ``verified`` → ``assignments``, from :func:`near_dup_stages`,
+which the streaming in-batch channel shares. The edge set is not committed.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import represent
 from entity_deduplication_hack_main_spark.operators import candidates as cand
 from entity_deduplication_hack_main_spark.operators import cluster as cc
+from entity_deduplication_hack_main_spark.operators import learned
 from entity_deduplication_hack_main_spark.operators import suffix, verify
 from entity_deduplication_hack_main_spark.plans.lineage import StageCommitter
 
@@ -42,7 +45,7 @@ class PipelineResult:
     payload: DataFrame       # (id, shingle_set, fp, signature, simhash)
     candidates: DataFrame    # (id1, id2, channels)
     verified: DataFrame      # (id1, id2, jaccard, dup_type, status)
-    edges: DataFrame         # (id1, id2) duplicate edges
+    edges: DataFrame         # (id1, id2) duplicate edges, lazy
     assignments: DataFrame   # (id/node, cluster_id)
     committer: StageCommitter
     # maximal verbatim >= span_k-token runs for span CUTTING (Lee et al.
@@ -63,6 +66,35 @@ class PipelineResult:
     # 'exact'|'near'|'ngram') — only when run_pipeline(holdout=...); the
     # committed audit trail of what was removed and why.
     contaminated: DataFrame | None = None
+
+
+def near_dup_stages(
+    payload: DataFrame, config: DedupConfig, stage, nbits: int,
+    containment_threshold: float, model: dict | None = None,
+    model_min_score: float = 0.5,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The near-dup core over ``payload``: candidates → verified → edges →
+    assignments (id, cluster_id per payload id). ``stage(name, build)``
+    commits or pins each frame but ``edges``, the lazy filter of
+    ``verified`` only the union-find reads. A ``model`` (run_pipeline's
+    docstring) re-statuses the edge rule's input, not ``verified``."""
+    candidates = stage(
+        "candidates", lambda: cand.channel_candidates(payload, config, nbits)
+    )
+    verified = stage(
+        "verified", lambda: verify.verify_pairs_full(candidates, payload, config)
+    )
+    rule_input = verified if model is None else (
+        learned.verify_with_learned_threshold(verified, model, model_min_score)
+    )
+    edges = verify.duplicate_edges_full(rule_input, config, containment_threshold)
+    assignments = stage(
+        "assignments",
+        lambda: cc.connected_components(
+            edges, payload.select("id"), config
+        ).select(F.col("node").alias("id"), "cluster_id"),
+    )
+    return candidates, verified, edges, assignments
 
 
 def run_pipeline(
@@ -242,40 +274,10 @@ def run_pipeline(
             "left_anti",
         )
 
-    def build_candidates() -> DataFrame:
-        # all three channels from one posting table and one salted
-        # self-join over the committed payload; no pin (operators/candidates)
-        return cand.channel_candidates(payload, config, nbits)
-
-    candidates = com.stage("candidates", build_candidates)
-
-    def build_verified() -> DataFrame:
-        # full measure set from ONE payload projection joined twice —
-        # shared with the streaming in-batch channel (verify_pairs_full
-        # carries the shuffle-count rationale)
-        return verify.verify_pairs_full(candidates, payload, config)
-
-    verified = com.stage("verified", build_verified)
-
-    def build_edges() -> DataFrame:
-        v = verified
-        if model is not None:
-            from entity_deduplication_hack_main_spark.operators import learned
-
-            v = learned.verify_with_learned_threshold(
-                v, model, model_min_score
-            )
-        return verify.duplicate_edges_full(v, config, containment_threshold)
-
-    edges = com.stage("edges", build_edges)
-
-    def build_assignments() -> DataFrame:
-        vertices = payload.select("id")
-        return cc.connected_components(edges, vertices, config).select(
-            F.col("node").alias("id"), "cluster_id"
-        )
-
-    assignments = com.stage("assignments", build_assignments)
+    candidates, verified, edges, assignments = near_dup_stages(
+        payload, config, com.stage, nbits, containment_threshold, model,
+        model_min_score,
+    )
 
     spans = None
     cut_docs = None

@@ -27,15 +27,11 @@ Per micro-batch (`foreachBatch`), with `near_dup=True` (default):
    every batch uncounted and unindexed;
 1. exact channel — normalized-text fingerprint; first-per-fp within the
    batch, then anti-join against the committed fingerprint index;
-2. *within* the batch — ALL THREE batch recall channels (MinHash-LSH ∪
-   SimHash Hamming blocks ∪ winnow fingerprints) from the batch
-   pipeline's own candidate function (candidates.channel_candidates),
-   verified with the SAME full measure set and edge rule the batch
-   pipeline uses
-   (verify.verify_pairs_full / duplicate_edges_full — r03 verdict #3:
-   streaming used to run the MinHash channel only, so a containment-dup or
-   2-token-edit near-exact inside one batch survived streaming but not
-   batch), then connected components; only each component's min-id
+2. *within* the batch — the batch pipeline's near-dup core
+   (plans.pipeline.near_dup_stages: all three candidate channels, the full
+   measure set, the edge rule and connected components, each stage
+   checkpointed), so a pair gets the same verdict in a batch run and in one
+   micro-batch (r03 verdict #3); only each component's min-id
    representative survives;
 3. *against the corpus*, one posting probe — the batch's
    ``candidates.posting_table`` (band keys, SimHash blocks, winnow
@@ -162,7 +158,6 @@ from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.functions import represent, textstats
 from entity_deduplication_hack_main_spark.functions import simhash as shash
 from entity_deduplication_hack_main_spark.operators import candidates as cand_op
-from entity_deduplication_hack_main_spark.operators import cluster as cc_op
 from entity_deduplication_hack_main_spark.operators import (
     decontaminate as decon_op,
 )
@@ -176,6 +171,7 @@ from entity_deduplication_hack_main_spark.operators import (
 from entity_deduplication_hack_main_spark.operators import verify as verify_op
 from entity_deduplication_hack_main_spark.plans import fsutil
 from entity_deduplication_hack_main_spark.plans.pins import Pins
+from entity_deduplication_hack_main_spark.plans.pipeline import near_dup_stages
 
 
 #: key buckets for the prunable index layout — the batch's distinct kb set
@@ -595,19 +591,16 @@ class StreamingDedup:
         """Module docstring items 2 and 3: the surviving ``fresh`` rows,
         the rows they add to each state table, and the decision counts."""
         cfg = self.config
-        # near-dup WITHIN the batch: the batch pipeline's candidate stage,
-        # full measure set and edge rule (r03 verdict #3), then components;
-        # non-representative (non-min-id) members drop
-        in_cand = cand_op.channel_candidates(payload, cfg, NBITS)
-        verified = verify_op.verify_pairs_full(in_cand, payload, cfg)
-        edges = verify_op.duplicate_edges_full(
-            verified, cfg, self.containment_threshold
+        # near-dup WITHIN the batch: the batch pipeline's core, each stage
+        # checkpointed; every non-min-id component member drops
+        _, _, _, assignments = near_dup_stages(
+            payload, cfg, lambda _, build: pins.checkpoint(build()), NBITS,
+            self.containment_threshold,
         )
-        labels = cc_op.connected_components(edges, config=cfg)
-        in_batch_drop = labels.where(
-            F.col("node") != F.col("cluster_id")
-        ).select(F.col("node").alias("id"))
-        kept = pins.persist(payload.join(in_batch_drop, "id", "left_anti"))
+        in_batch_drop = F.col("id") != F.col("cluster_id")
+        kept = pins.persist(
+            payload.join(assignments.where(in_batch_drop), "id", "left_anti")
+        )
 
         # vs the committed corpus: one posting probe, then each channel's
         # decision rule
@@ -679,23 +672,26 @@ class StreamingDedup:
         # cached subtree entirely while materializing `survivors` (seen
         # when the committed corpus is empty: a post-write count then
         # re-listed the band index and collided with the batch's own fresh
-        # write). Counting here forces every frame onto its pre-write file
-        # listing.
-        counts = {
-            "n_inbatch_drop": in_batch_drop.count(),
-            "mh_candidates": scored.where(F.col("sig_id").isNotNull()).count(),
-            "mh_sure_drop": scored.where(sure).count(),
-            "mh_borderline": meas.where(borderline).count(),
-            "mh_borderline_drop": meas.where(bl_drop).count(),
-            "mh_borderline_flipped": meas.where(
-                borderline & ((est >= t) != exact)
-            ).count(),
-            "mh_below_band_kept": scored.where(est < t - m).count(),
-            "sh_drop": scored.where(sh).select("id").distinct().count(),
-            "wn_candidates": pairs.where(wn).count(),
-            "wn_drop": meas.where(wn_drop).select("id").distinct().count(),
-            "n_survivors": survivors.count(),
-        }
+        # write). One aggregate over each persisted candidate frame itself
+        # (pairs, scored, meas) forces it onto its pre-write file listing.
+        spec = [  # (name, frame, aggregate), in lineage column order
+            ("n_inbatch_drop", assignments, F.count_if(in_batch_drop)),
+            ("mh_candidates", scored, F.count_if(F.col("sig_id").isNotNull())),
+            ("mh_sure_drop", scored, F.count_if(sure)),
+            ("mh_borderline", meas, F.count_if(borderline)),
+            ("mh_borderline_drop", meas, F.count_if(bl_drop)),
+            ("mh_borderline_flipped", meas,
+             F.count_if(borderline & ((est >= t) != exact))),
+            ("mh_below_band_kept", scored, F.count_if(est < t - m)),
+            ("sh_drop", scored, F.count_distinct(F.when(sh, F.col("id")))),
+            ("wn_candidates", pairs, F.count_if(wn)),
+            ("wn_drop", meas, F.count_distinct(F.when(wn_drop, F.col("id")))),
+            ("n_survivors", survivors, F.count("*")),
+        ]
+        counts = dict.fromkeys(k for k, _, _ in spec)  # update keeps the order
+        for df in (assignments, scored, meas, pairs, survivors):
+            aggs = [c.alias(k) for k, d, c in spec if d is df]
+            counts.update(df.agg(*aggs).first().asDict())
 
         new_post = post.join(survivors, "id", "left_semi")
         chan, kid, key = F.col("chan"), F.col("kid"), F.col("key")

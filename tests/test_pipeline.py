@@ -8,6 +8,8 @@ dup-pair recall >= 0.99 and byte-identical extracted text per url.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from entity_deduplication_hack_main_spark.config import DedupConfig
 from entity_deduplication_hack_main_spark.operators import evaluate, extraction
 from entity_deduplication_hack_main_spark.plans.pipeline import run_pipeline
 from entity_deduplication_hack_main_spark.sources import corpus
+from entity_deduplication_hack_main_spark.streaming.ingest import StreamingDedup
 
 N_DOCS = 600
 DUP_FRACTION = 0.4
@@ -131,14 +134,15 @@ def test_resume_skips_committed_stages(spark, docs, tmp_path):
     assert n == r1.assignments.count()
     lineage = r2.committer.lineage()
     stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
-    assert stages == {"payload", "candidates", "verified", "edges", "assignments"}
+    assert stages == {"payload", "candidates", "verified", "assignments"}
     # `_total` rows carry the observed counts: each stage's input is the
-    # previous stage's output; a resumed stage observed nothing
+    # previous stage's output (the uncommitted edges filter sits between
+    # verified and assignments); a resumed stage observed nothing
     totals = {
         (r["run_id"], r["stage"]): (r["input_rows"], r["rows"])
         for r in lineage.where(F.col("file") == "_total").collect()
     }
-    assert len(totals) == 10
+    assert len(totals) == 8
     prev = None
     for e in r1.committer.events:
         assert totals[("a", e["stage"])] == (prev, e["rows"])
@@ -147,6 +151,19 @@ def test_resume_skips_committed_stages(spark, docs, tmp_path):
     assert all(
         totals[("b", e["stage"])] == (None, None) for e in r2.committer.events
     )
+
+
+def test_streaming_batch_keeps_one_doc_per_pipeline_cluster(
+    spark, docs, result, tmp_path
+):
+    """Batch/streaming drift guard at corpus scale: one micro-batch of the
+    whole corpus keeps exactly the batch pipeline's cluster
+    representatives (each cluster's min id)."""
+    sd = StreamingDedup(spark, str(tmp_path / "wd"), id_col="doc_id")
+    sd.process_batch(docs, 0)
+    kept = spark.read.parquet(sd.out_path).select("doc_id").collect()
+    reps = result.assignments.select("cluster_id").distinct().collect()
+    assert Counter(r[0] for r in kept) == Counter(r[0] for r in reps)
 
 
 def _lineage_rows(com):

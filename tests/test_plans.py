@@ -135,6 +135,36 @@ def test_unpinned_query_and_pair_metrics_leave_no_storage(spark, sf001):
     assert new_storage(lambda: evaluate.pair_metrics(pairs, golden)) == set()
 
 
+def test_pins_release_newest_first(spark):
+    """``Pins.release`` releases newest first, keeps the order of the pins
+    that stay, and frees every persisted RDD it pinned (ids, not counts,
+    as above)."""
+    from entity_deduplication_hack_main_spark.plans.pins import Pins
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    pins = Pins()
+    base = pins.persist(spark.range(10))
+    derived = pins.persist(base.where("id % 2 = 0"))
+    cp = pins.checkpoint(derived.select((F.col("id") * 3).alias("id")))
+    assert len(persisted() - before) == 3
+    order = []
+    pins._pinned = [  # record each release, in the order it runs
+        (out, lambda i=i, release=release: (order.append(i), release()))
+        for i, (out, release) in enumerate(pins._pinned)
+    ]
+    pins.release(derived)
+    assert order == [1]
+    assert [id(out) for out, _ in pins._pinned] == [id(base), id(cp)]
+    pins.release()
+    assert order == [1, 2, 0]
+    assert persisted() - before == set()
+
+
 def test_cut_spans_raw_plan_broadcasts_ranges_no_python(spark, sf001):
     """r03 verdict #9: the span-cut ranges join must broadcast the tiny
     grouped-ranges side (the docs side carries the corpus text/token
