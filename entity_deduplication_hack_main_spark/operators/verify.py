@@ -60,6 +60,19 @@ def emit_where(cond: Column, value: Column) -> Column:
     return F.explode(F.when(cond, F.array(value)))
 
 
+#: the payload columns :func:`full_measures` reads → their pair-side aliases
+FULL_COLS = {"shingle_set": "s", "fp": "fp", "simhash": "sh"}
+
+
+def pair_side(payload: DataFrame, cols: dict[str, str], k: int) -> DataFrame:
+    """``payload`` as side *k* of a pair: ``id<k>`` plus ``<alias><k>``
+    for each payload col → alias in ``cols``."""
+    return payload.select(
+        F.col("id").alias(f"id{k}"),
+        *(F.col(c).alias(f"{al}{k}") for c, al in cols.items()),
+    )
+
+
 def _paired_payloads(
     pairs: DataFrame, payload: DataFrame, cols: dict[str, str]
 ) -> DataFrame:
@@ -80,13 +93,7 @@ def _paired_payloads(
         .distinct()
     )
     p = payload.select("id", *cols).join(F.broadcast(ids), "id", "left_semi")
-    a, b = (
-        p.select(
-            F.col("id").alias(f"id{k}"),
-            *(F.col(c).alias(f"{al}{k}") for c, al in cols.items()),
-        )
-        for k in (1, 2)
-    )
+    a, b = (pair_side(p, cols, k) for k in (1, 2))
     return overlap_sizes(
         pairs.select("id1", "id2").join(a, "id1").join(b, "id2")
     )
@@ -131,34 +138,47 @@ def duplicate_edges(verified: DataFrame) -> DataFrame:
     return verified.where(F.col("status") == "pass").select("id1", "id2")
 
 
-def verify_pairs_full(
-    pairs: DataFrame,
-    payload: DataFrame,
-    config: DedupConfig,
-) -> DataFrame:
-    """(id1, id2, jaccard, dup_type, status, hamming, containment): the
-    full measure set for the three-channel edge rule — exact Jaccard +
-    taxonomy + SimHash Hamming distance + containment, all from ONE
-    payload projection joined twice (a previous pipeline version joined
-    the payload six times = four extra ~600 MB array shuffles at 100k
-    heavy docs; this halved pipeline wall time).
-
-    payload: (id, shingle_set, fp, simhash), semi-join reduced to the
-    candidate-pair members first (:func:`_paired_payloads`). Batch and
-    streaming both run it in ``plans.pipeline.near_dup_stages``."""
-    j = _paired_payloads(
-        pairs, payload, {"shingle_set": "s", "fp": "fp", "simhash": "sh"}
-    )
+def full_measures(config: DedupConfig) -> list[Column]:
+    """jaccard, dup_type, status (:func:`_jaccard_columns`), SimHash
+    ``hamming`` and ``containment`` = |S1 ∩ S2| / min(|S1|, |S2|): the
+    measures :func:`edge_rule` reads, over :func:`overlap_sizes` plus the
+    ``fp1/fp2`` fingerprints and ``sh1/sh2`` simhashes of both sides."""
     smaller = F.least("_n1", "_n2")
-    return j.select(
-        "id1",
-        "id2",
+    return [
         *_jaccard_columns(config),
         F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).alias("hamming"),
         F.round(
             F.when(smaller > 0, F.col("_inter") / smaller).otherwise(0.0), 9
         ).alias("containment"),
+    ]
+
+
+def edge_rule(config: DedupConfig, containment_threshold: float = 0.9) -> Column:
+    """The three-channel edge predicate over :func:`full_measures`:
+    Jaccard pass OR Hamming <= radius OR containment >= threshold."""
+    return (
+        (F.col("status") == "pass")
+        | (F.col("hamming") <= config.hamming_radius)
+        | (F.col("containment") >= containment_threshold)
     )
+
+
+def verify_pairs_full(
+    pairs: DataFrame,
+    payload: DataFrame,
+    config: DedupConfig,
+) -> DataFrame:
+    """(id1, id2, :func:`full_measures`): exact Jaccard + taxonomy +
+    SimHash Hamming distance + containment, all from ONE payload
+    projection joined twice (a previous pipeline version joined the
+    payload six times = four extra ~600 MB array shuffles at 100k heavy
+    docs; this halved pipeline wall time).
+
+    payload: (id, shingle_set, fp, simhash), semi-join reduced to the
+    candidate-pair members first (:func:`_paired_payloads`). Batch and
+    streaming both run it in ``plans.pipeline.near_dup_stages``."""
+    j = _paired_payloads(pairs, payload, FULL_COLS)
+    return j.select("id1", "id2", *full_measures(config))
 
 
 def duplicate_edges_full(
@@ -166,14 +186,10 @@ def duplicate_edges_full(
     config: DedupConfig,
     containment_threshold: float = 0.9,
 ) -> DataFrame:
-    """The three-channel edge rule over :func:`verify_pairs_full` output:
-    Jaccard pass OR Hamming <= radius OR containment >= threshold."""
+    """The pairs of :func:`verify_pairs_full` output that
+    :func:`edge_rule` accepts."""
     return (
-        verified.where(
-            (F.col("status") == "pass")
-            | (F.col("hamming") <= config.hamming_radius)
-            | (F.col("containment") >= containment_threshold)
-        )
+        verified.where(edge_rule(config, containment_threshold))
         .select("id1", "id2")
         .distinct()
     )

@@ -7,7 +7,7 @@ pages arrive as files in `warc_ts`-partitioned directories, are
 deduplicated within the micro-batch AND against the committed corpus, and
 append to the clustered table — how a production crawler feeds the pipeline.
 
-Per micro-batch (`foreachBatch`), with `near_dup=True` (default):
+Per micro-batch (`foreachBatch`):
 
 0. URL channel (opt-in via ``url_col=``) — the cheapest Common-Crawl
    dedup signal, run BEFORE any content hashing: URLs are canonicalized
@@ -39,39 +39,24 @@ Per micro-batch (`foreachBatch`), with `near_dup=True` (default):
    index, the ``_index`` simhash blocks and the winnow index; each
    channel keeps the batch pipeline's bucket cap
    (``candidates.channel_keep``) and pair flag
-   (``candidates.channel_flags``), derived in one ``groupBy(id, old_id)``.
-   Every channel's decision threshold is ``jaccard_candidate``, the SAME
-   value the in-batch / batch-pipeline edge rule passes at
-   (``verify_pairs_full`` status), so a pair reaches the identical verdict
-   whether it arrives in one batch or split across two (r04 advice #5 —
-   corpus channels previously decided at ``jaccard_similar``, so an
-   exact-J-0.6 pair deduped in-batch but survived cross-batch):
-   - MinHash: LSH pairs are scored by MinHash signature agreement (the
-     unbiased Jaccard estimate; the committed shingle sets are not
-     retained). Clear-cut candidates (|estimate − threshold| > the ±2.5σ
-     band of :func:`est_margin`) are decided by the estimate alone;
-     *borderline* candidates are re-verified exactly, so batch and
-     streaming agree on every pair except the (exponentially rare) ones
-     whose estimate errs by more than the margin;
-   - SimHash: a shared 16-bit block with Hamming <= radius drops the new
-     doc — exact from the index (one bigint per committed doc), no text
-     fetch;
-   - winnow: pairs sharing ``WINNOW_MIN_SHARED`` fingerprints (df-capped
-     on the committed side — same boilerplate cap as the batch channel)
-     drop on EXACT jaccard >= threshold OR containment >=
-     containment_threshold (the batch edge rule's containment leg);
-   - the exact re-verify runs ONCE per batch, for the borderline and
-     winnow pairs together: the few committed docs involved are fetched
-     from the deduped output table, re-shingled, and intersected once;
-4. one batch tail for both modes: survivors append to the output plus
-   the index tables — `_index` (id, fp, signature, simhash; id, fp only
-   with ``near_dup=False``), `_band_index` (id, band_id, band_hash),
+   (``candidates.channel_flags``), derived in one ``groupBy(id, old_id)``,
+   and a pair with no flag is no candidate, as in the batch channels.
+   Every candidate is then measured and decided as in the batch pipeline:
+   the committed partner docs are fetched from the deduped output table
+   and re-represented (no committed shingle set is retained), each pair
+   gets ``verify.full_measures``, and a batch doc drops when
+   ``verify.edge_rule`` holds for any of its pairs. A pair therefore
+   reaches the same verdict whether it arrives in one batch or split
+   across two (r04 advice #5);
+4. the batch tail: survivors append to the output plus the index tables
+   — `_index` (id, fp, simhash), `_band_index` (id, band_id, band_hash),
    `_winnow_index` (id, wfp) and, when the URL channel is on,
    `_url_index` (id, url_key) — and one `_streaming_lineage` row
-   records the batch's decision counts (input, fresh, per-channel
-   candidates/drops, borderline estimate outcomes incl. how many exact
-   re-verifies FLIPPED the estimate's call, and the below-band kept tail)
-   so estimate drift is observable (r03 verdict #7).
+   records the batch's decision counts (input, fresh, in-batch drops,
+   per-channel candidates and drops, survivors; r03 verdict #7). Rows
+   written before the per-channel drop counts replaced the MinHash
+   estimate band's counts carry the old columns: read that table with
+   ``mergeSchema``.
 
 Per-batch cost vs the committed corpus (r04 verdict #3): the index tables
 (:data:`STATE_TABLES`, one reader and one writer) are written with a
@@ -84,11 +69,11 @@ scan, the committed postings are LEFT-SEMI-reduced by a broadcast of the
 batch's distinct ``(chan, kid, key)`` BEFORE the partial-aggregate bucket
 sizing, so the per-bucket caps (winnow boilerplate, SimHash degenerate
 buckets) count the matched subset only — identical counts (key equality
-keeps whole buckets) without aggregating the whole index. The one
-remaining O(corpus) term is the `_index` SCAN (one narrow row per
-committed doc, for simhash blocks + signatures); it is never shuffled —
-signature lookups broadcast-semi-reduce by candidate ids. See SCALE.md
-for the cost model.
+keeps whole buckets) without aggregating the whole index. Two O(corpus)
+SCANS remain, neither shuffled: `_index` (one narrow row per committed
+doc, for its simhash blocks) and, when the batch has corpus pairs, the
+deduped output table, whose id and text columns are read whole before
+the partner ids filter them. See SCALE.md for the cost model.
 
 Span-cut compaction (batch recipe): the exact-substring span pass is
 corpus-GLOBAL (a gram index must see every committed doc), so streamed
@@ -141,10 +126,10 @@ and on failure — never earlier, since a released checkpoint fails any
 later read of a frame derived from it.
 
 State growth: the indexes carry O(1 row + bands rows) per committed doc —
-fingerprint + 8-byte signature entries, never full text — which is the
-bounded-memory alternative to `dropDuplicates` + watermark state (bounded
-horizon). Unbounded-horizon dedup needs an index; this one is a parquet
-table any batch job can also read.
+fingerprint, simhash and 8-byte key entries, never full text — which is
+the bounded-memory alternative to `dropDuplicates` + watermark state
+(bounded horizon). Unbounded-horizon dedup needs an index; this one is a
+parquet table any batch job can also read.
 """
 
 from __future__ import annotations
@@ -184,13 +169,14 @@ NBITS = 64
 
 #: the committed state tables, ``<workdir>/<name>``: each table's columns
 #: between ``id`` and ``kb``, and the join key its ``kb`` column buckets.
-#: Every table is partitioned by ``batch_id``. One row per committed doc in ``_index``
-#: and ``_url_index``; one per band, resp. winnow fingerprint, in
-#: ``_band_index`` and ``_winnow_index`` (bigint keys: the band index grows
-#: bands rows per doc forever, and an 8-byte key vs a 32-char md5 string is
-#: a 2.5x standing size difference).
+#: Every table is partitioned by ``batch_id``. One row per committed doc in
+#: ``_index`` (its simhash feeds the SimHash probe) and ``_url_index``; one
+#: per band, resp. winnow fingerprint, in ``_band_index`` and
+#: ``_winnow_index`` (bigint keys: the band index grows bands rows per doc
+#: forever, and an 8-byte key vs a 32-char md5 string is a 2.5x standing
+#: size difference).
 STATE_TABLES = {
-    "_index": ("fp string, signature array<bigint>, simhash bigint", "fp"),
+    "_index": ("fp string, simhash bigint", "fp"),
     "_band_index": ("band_id int, band_hash bigint", "band_hash"),
     "_winnow_index": ("wfp bigint", "wfp"),
     "_url_index": ("url_key string", "url_key"),
@@ -203,22 +189,6 @@ def _kb(col) -> "F.Column":
     return F.pmod(F.xxhash64(col), F.lit(N_KEY_BUCKETS)).cast("int")
 
 
-def est_margin(config: DedupConfig) -> float:
-    """Half-width of the estimate band that triggers exact re-verification:
-    ±2.5σ of the num_perms-sample agreement estimator at J = threshold,
-    2.5·sqrt(t(1−t)/num_perms). The threshold is ``jaccard_candidate`` —
-    the edge-rule pass mark shared with the batch pipeline (r04 advice
-    #5). At the production config (t=0.5, 128 perms) this is ≈ 0.11; at
-    the 32-perm test config σ more than doubles (±0.22), so a fixed 0.1
-    would have been under 1.25σ and batch/streaming borderline
-    disagreement far more likely than the documented <1% tail (r03
-    advice)."""
-    import math
-
-    t = float(config.jaccard_candidate)
-    return 2.5 * math.sqrt(t * (1.0 - t) / config.num_perms)
-
-
 class StreamingDedup:
     """Streaming ingest: exact + MinHash near-dup vs batch and corpus."""
 
@@ -229,7 +199,6 @@ class StreamingDedup:
         config: DedupConfig | None = None,
         text_col: str = "text",
         id_col: str = "url",
-        near_dup: bool = True,
         containment_threshold: float = 0.9,
         holdout: DataFrame | None = None,
         holdout_threshold: float | None = None,
@@ -245,9 +214,8 @@ class StreamingDedup:
         exact Jaccard ≥ holdout_threshold, default jaccard_similar) are
         dropped via operators/decontaminate.py with ``broadcast_ref``
         — the holdout is small by definition, the batch never shuffles
-        for it. With ``near_dup=False`` only the exact channel applies
-        (no batch representation exists to band-join). Drops are
-        counted in the lineage row (``n_contaminated``).
+        for it. Drops are counted in the lineage row
+        (``n_contaminated``).
 
         holdout_ngram_n: when set (e.g. 13, the GPT-3 recipe), a THIRD
         decontamination channel runs on every batch: docs whose fraction
@@ -257,21 +225,18 @@ class StreamingDedup:
         channel sees. The holdout's gram set is computed once per
         instance and cached; the per-batch cost is one gram-kernel pass
         over the batch plus a broadcast mark (operators/decontaminate.py
-        ngram_overlap_stats). Applies on the ``near_dup=False`` path too
-        (the gram pass is independent of the MinHash payload).
+        ngram_overlap_stats).
 
         url_col: when set, the URL channel runs FIRST on every batch
         (module docstring item 0): canonicalized recrawls collapse
         in-batch (earliest ``url_ts_col``, then lowest id) and against
         the committed ``_url_index`` ("first crawl wins"); drops are
-        counted in the lineage row as ``n_url_dup``. Applies on both
-        the near-dup and exact-only paths."""
+        counted in the lineage row as ``n_url_dup``."""
         self.spark = spark
         self.workdir = workdir
         self.config = config or DedupConfig()
         self.text_col = text_col
         self.id_col = id_col
-        self.near_dup = near_dup
         self.containment_threshold = containment_threshold
         self.holdout = holdout
         self.holdout_threshold = holdout_threshold
@@ -337,8 +302,7 @@ class StreamingDedup:
         not raise AnalysisException or depend on which parquet footer
         Spark samples for schema inference (r04 advice #1). Every null a
         legacy row surfaces is tolerated downstream: null simhash blocks
-        never join, null signatures never cross the estimate band, null kb
-        rows are exempt from pruning."""
+        never join, null kb rows are exempt from pruning."""
         if fsutil.exists(self.spark, path):
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.createDataFrame([], schema)
@@ -496,9 +460,9 @@ class StreamingDedup:
         # tail overwrites (module docstring)
         fresh = pins.checkpoint(first.join(prior_fps.distinct(), "fp", "left_anti"))
 
-        # holdout channels (docstring). The n-gram channel runs on BOTH
-        # paths, before any representation/state work — quoted-eval-span
-        # docs never get signatures computed, never reach an index.
+        # holdout channels (docstring). The n-gram channel runs first,
+        # before any representation/state work — quoted-eval-span docs
+        # never get signatures computed, never reach an index.
         contaminated: list[DataFrame] = []  # flagged ids, for _register_urls
         n_ngram = 0
         if self.holdout is not None and self.holdout_ngram_n is not None:
@@ -510,51 +474,33 @@ class StreamingDedup:
                     fresh.join(F.broadcast(flagged), self.id_col, "left_anti")
                 )
 
+        payload = pins.persist(
+            represent.with_representation(
+                fresh, self.config, self.id_col, self.text_col
+            )
+        )
         n_contaminated = 0
-        if self.near_dup:
-            payload = pins.persist(
-                represent.with_representation(
-                    fresh, self.config, self.id_col, self.text_col
-                )
+        if self.holdout is not None:
+            # both whole-doc channels (exact fp + band collision → exact
+            # Jaccard), holdout broadcast
+            flagged = pins.checkpoint(
+                decon_op.decontaminate(
+                    payload,
+                    self._holdout_rep(),
+                    self.config,
+                    threshold=self.holdout_threshold,
+                    broadcast_ref=True,
+                ).select(F.col("doc_id").alias("id"))
             )
-            if self.holdout is not None:
-                # both whole-doc channels (exact fp + band collision → exact
-                # Jaccard), holdout broadcast
-                flagged = pins.checkpoint(
-                    decon_op.decontaminate(
-                        payload,
-                        self._holdout_rep(),
-                        self.config,
-                        threshold=self.holdout_threshold,
-                        broadcast_ref=True,
-                    ).select(F.col("doc_id").alias("id"))
+            n_contaminated = flagged.count()
+            if n_contaminated:
+                contaminated.append(flagged)
+                payload = pins.persist(
+                    payload.join(F.broadcast(flagged), "id", "left_anti")
                 )
-                n_contaminated = flagged.count()
-                if n_contaminated:
-                    contaminated.append(flagged)
-                    payload = pins.persist(
-                        payload.join(F.broadcast(flagged), "id", "left_anti")
-                    )
-            out_rows, state, near_counts = self._near_dup(
-                fresh, payload, batch_id, id_type, pins
-            )
-        else:
-            if self.holdout is not None:
-                # the exact channel only: no batch representation exists
-                hold_fps = F.broadcast(
-                    self._holdout_rep().select("fp").distinct()
-                )
-                flagged = pins.checkpoint(
-                    fresh.join(hold_fps, "fp", "left_semi").select(self.id_col)
-                )
-                n_contaminated = flagged.count()
-                if n_contaminated:
-                    contaminated.append(flagged)
-                    fresh = pins.checkpoint(
-                        fresh.join(hold_fps, "fp", "left_anti")
-                    )
-            out_rows, near_counts = fresh, {}
-            state = {"_index": fresh.select(F.col(self.id_col).alias("id"), "fp")}
+        out_rows, state, near_counts = self._near_dup(
+            fresh, payload, batch_id, id_type, pins
+        )
 
         # the lineage row (r03 verdict #7), counted before any write
         counts = {
@@ -602,94 +548,40 @@ class StreamingDedup:
             payload.join(assignments.where(in_batch_drop), "id", "left_anti")
         )
 
-        # vs the committed corpus: one posting probe, then each channel's
-        # decision rule
+        # vs the committed corpus: one posting probe, then batch verify's
+        # measures and edge rule on every candidate pair
         post = cand_op.posting_table(kept, cfg, NBITS)
         pairs = pins.persist(self._corpus_pairs(post, batch_id, id_type))
-        lsh, sh, wn = (F.col(c) for c in cand_op.CHANNELS)
-        # signature lookup: the one-row-per-doc index is scanned and
-        # semi-reduced by the LSH pairs' committed ids, never shuffled
-        sigs = (
-            self._state("_index", batch_id, id_type)
-            .join(
-                F.broadcast(
-                    pairs.where(lsh).select(F.col("old_id").alias("id")).distinct()
-                ),
-                "id",
-                "left_semi",
-            )
-            .select(F.col("id").alias("sig_id"), F.col("signature").alias("old_sig"))
-        )
-        agree = F.size(
-            F.filter(
-                F.zip_with("signature", "old_sig", lambda a, b: a == b),
-                lambda x: x,
-            )
-        ) / F.lit(cfg.num_perms)
-        # _est: the MinHash estimate of an LSH pair with a committed
-        # signature row, NULL for every other pair
-        scored = pins.persist(
-            pairs.join(kept.select("id", "signature", "shingle_set"), "id")
-            .join(sigs, (F.col("old_id") == F.col("sig_id")) & lsh, "left")
-            .withColumn("_est", agree)
-        )
-        # decision threshold = the batch edge rule's pass mark (advice #5:
-        # cross-batch and in-batch verdicts must agree on the same pair)
-        t, m = float(cfg.jaccard_candidate), est_margin(cfg)
-        est = F.col("_est")
-        sure = est >= t + m
-        borderline = (est < t + m) & (est >= t - m)
-        # one exact re-verify for the borderline estimates and winnow pairs
         meas = pins.persist(
-            self._exact_pair_measures(
-                scored.where(borderline | wn).select(
-                    "id", "old_id", "shingle_set", "_est", wn
-                ),
-                batch_id,
-                id_type,
-            )
+            self._corpus_measures(kept, pairs, batch_id, id_type)
         )
-        exact = F.col("ex_jaccard") >= t
-        bl_drop = borderline & exact
-        wn_drop = wn & (
-            exact | (F.col("ex_containment") >= self.containment_threshold)
-        )
-        corpus_drop = (
-            scored.where(sure | sh)
-            .select("id")
-            .unionByName(meas.where(bl_drop | wn_drop).select("id"))
-            .distinct()
-        )
+        edge = verify_op.edge_rule(cfg, self.containment_threshold)
         # checkpointed: survivors' lineage reads every state table and the
-        # output table (exact text fetches), all overwritten by the tail
+        # output table (committed text fetches), all overwritten by the tail
         survivors = pins.checkpoint(
-            kept.join(corpus_drop, "id", "left_anti").select("id")
+            kept.join(meas.where(edge).select(F.col("id1").alias("id")),
+                      "id", "left_anti").select("id")
         )
 
-        # Counted BEFORE the tail's writes: the candidate frames read the
-        # committed paths this batch is about to overwrite, and persist()
-        # alone does not pin them — AQE empty-relation pruning can skip a
-        # cached subtree entirely while materializing `survivors` (seen
-        # when the committed corpus is empty: a post-write count then
-        # re-listed the band index and collided with the batch's own fresh
-        # write). One aggregate over each persisted candidate frame itself
-        # (pairs, scored, meas) forces it onto its pre-write file listing.
+        # Counted BEFORE the tail's writes: `meas` reads the committed
+        # paths this batch is about to overwrite, and persist() alone does
+        # not pin it — AQE empty-relation pruning can skip a cached subtree
+        # entirely while materializing `survivors` (seen when the committed
+        # corpus is empty: a post-write count then re-listed the band index
+        # and collided with the batch's own fresh write). One aggregate over
+        # `meas` itself forces it onto its pre-write file listing.
         spec = [  # (name, frame, aggregate), in lineage column order
             ("n_inbatch_drop", assignments, F.count_if(in_batch_drop)),
-            ("mh_candidates", scored, F.count_if(F.col("sig_id").isNotNull())),
-            ("mh_sure_drop", scored, F.count_if(sure)),
-            ("mh_borderline", meas, F.count_if(borderline)),
-            ("mh_borderline_drop", meas, F.count_if(bl_drop)),
-            ("mh_borderline_flipped", meas,
-             F.count_if(borderline & ((est >= t) != exact))),
-            ("mh_below_band_kept", scored, F.count_if(est < t - m)),
-            ("sh_drop", scored, F.count_distinct(F.when(sh, F.col("id")))),
-            ("wn_candidates", pairs, F.count_if(wn)),
-            ("wn_drop", meas, F.count_distinct(F.when(wn_drop, F.col("id")))),
-            ("n_survivors", survivors, F.count("*")),
         ]
+        for tag, c in zip(("mh", "sh", "wn"), cand_op.CHANNELS):
+            spec += [
+                (f"{tag}_candidates", meas, F.count_if(c)),
+                (f"{tag}_drop", meas,
+                 F.count_distinct(F.when(F.col(c) & edge, F.col("id1")))),
+            ]
+        spec.append(("n_survivors", survivors, F.count("*")))
         counts = dict.fromkeys(k for k, _, _ in spec)  # update keeps the order
-        for df in (assignments, scored, meas, pairs, survivors):
+        for df in (assignments, meas, survivors):
             aggs = [c.alias(k) for k, d, c in spec if d is df]
             counts.update(df.agg(*aggs).first().asDict())
 
@@ -697,7 +589,7 @@ class StreamingDedup:
         chan, kid, key = F.col("chan"), F.col("kid"), F.col("key")
         state = {
             "_index": kept.join(survivors, "id", "left_semi").select(
-                "id", "fp", "signature", "simhash"
+                "id", "fp", "simhash"
             ),
             "_band_index": new_post.where(chan == cand_op.LSH).select(
                 "id", kid.alias("band_id"), key.alias("band_hash")
@@ -714,9 +606,9 @@ class StreamingDedup:
     def _corpus_pairs(
         self, post: DataFrame, batch_id: int, id_type: str
     ) -> DataFrame:
-        """``(id, old_id, <CHANNELS flags>)``: the batch's postings *post*
-        probed against the committed postings in one join (module docstring
-        item 3)."""
+        """``(id, old_id, <CHANNELS flags>)``, at least one flag set: the
+        batch's postings *post* probed against the committed postings in
+        one join (module docstring item 3)."""
         cfg = self.config
         chan = F.col("chan")
         kbs = {cand_op.LSH: [], cand_op.WINNOW: []}
@@ -769,54 +661,45 @@ class StreamingDedup:
             .agg(F.count("*").alias("n"))
             .where(cand_op.channel_keep(cfg))
         )
+        lsh, sh, wn = (F.col(c) for c in cand_op.CHANNELS)
         return (
             post.join(committed.join(sizes, bucket, "left_semi"), bucket)
             .groupBy("id", "old_id")
             .agg(*cand_op.channel_flags(cfg, "simhash", "old_sh"))
+            .where(lsh | sh | wn)
         )
 
-    def _exact_pair_measures(
-        self, pairs: DataFrame, batch_id: int, id_type: str
+    def _corpus_measures(
+        self, kept: DataFrame, pairs: DataFrame, batch_id: int, id_type: str
     ) -> DataFrame:
-        """pairs (id, old_id, shingle_set, *extras) → the same rows with
-        EXACT ``ex_jaccard`` and ``ex_containment`` against the committed
-        partner doc: fetch the committed text from the deduped output
-        table, re-shingle it, intersect the shingle sets once
-        (:func:`operators.verify.overlap_sizes`). ``ex_jaccard`` is 1.0
-        when both sets are empty and ``ex_containment`` when either is
-        (batch verify says 0.0 there).
-
-        Called once per batch, on the union of the borderline MinHash
-        candidates (the ±2.5σ est_margin band — a few % of candidates) and
-        the winnow candidates, so a pair in both is measured once; only
-        distinct old_ids are fetched (left-semi on the committed table,
-        pushed down to the parquet scan).
-        """
+        """``(id1, id2, <CHANNELS flags>, verify.full_measures)`` for the
+        corpus *pairs* ``(id, old_id, <CHANNELS flags>)``: side 1 is the
+        batch doc's *kept* payload row, side 2 the committed doc, whose
+        text is fetched from the deduped output table (distinct old ids
+        only, left-semi) and re-represented. The two sides stay separate
+        payloads: a batch id can equal a committed id (a recrawl of one
+        URL with changed text)."""
         out = self._read_or_empty(
             self.out_path,
             f"{self.id_col} {id_type}, {self.text_col} string, batch_id bigint",
         ).where(F.col("batch_id") != F.lit(batch_id))
-        old_docs = out.select(
-            F.col(self.id_col).alias("old_id"), self.text_col
-        ).join(pairs.select("old_id").distinct(), "old_id", "left_semi")
-        old_repr = represent.with_representation(
-            old_docs, self.config, "old_id", self.text_col
-        ).select(  # with_representation renames the id col to "id"
-            F.col("id").alias("old_id"),
-            F.col("shingle_set").alias("old_shingles"),
+        old_ids = pairs.select(F.col("old_id").alias(self.id_col)).distinct()
+        old_docs = out.select(self.id_col, self.text_col).join(
+            old_ids, self.id_col, "left_semi"
         )
-        inter = F.col("_inter")
-        union_sz = F.col("_n1") + F.col("_n2") - inter
-        smaller = F.least("_n1", "_n2")
-        jaccard = F.when(union_sz == 0, F.lit(1.0)).otherwise(inter / union_sz)
-        containment = F.when(smaller == 0, F.lit(1.0)).otherwise(inter / smaller)
-        keep_cols = [c for c in pairs.columns if c != "shingle_set"]
-        return verify_op.overlap_sizes(
-            pairs.join(old_repr, "old_id"), "shingle_set", "old_shingles"
-        ).select(
-            *keep_cols,
-            jaccard.alias("ex_jaccard"),
-            containment.alias("ex_containment"),
+        old_repr = represent.with_representation(
+            old_docs, self.config, self.id_col, self.text_col
+        )
+        cols, flags = verify_op.FULL_COLS, cand_op.CHANNELS
+        j = (
+            pairs.select(
+                F.col("id").alias("id1"), F.col("old_id").alias("id2"), *flags
+            )
+            .join(verify_op.pair_side(kept, cols, 1), "id1")
+            .join(verify_op.pair_side(old_repr, cols, 2), "id2")
+        )
+        return verify_op.overlap_sizes(j).select(
+            "id1", "id2", *flags, *verify_op.full_measures(self.config)
         )
 
     def span_cut_compaction(

@@ -164,14 +164,14 @@ def test_streaming_exact_dedup_across_batches(spark, tmp_path):
 def test_streaming_borderline_estimate_reverified_exactly(spark, tmp_path):
     """r02 verdict #3: corpus-side near-dup used the raw MinHash estimate,
     so a pair whose estimate crosses the threshold while exact Jaccard
-    does not was wrongly dropped. The threshold is jaccard_candidate (the
-    batch edge rule's pass mark — r04 advice #5); with 32 perms the
-    ±2.5σ borderline band is [0.279, 0.721]. Both variants are planted to
-    genuinely BAND-COLLIDE with the committed base doc (probed: a variant
-    with no shared band never reaches the estimate at all). uKeep (18
-    replaced tokens at offset 9): estimate 0.594 (>= 0.5 says drop) but
-    exact J = 0.487 (< 0.5) — must SURVIVE. uDrop (17 replaced at offset
-    0): estimate 0.625 borderline, exact J = 0.547 — dropped."""
+    does not was wrongly dropped. Corpus pairs are decided on exact
+    measures by the batch edge rule (pass mark jaccard_candidate — r04
+    advice #5). Both variants are planted to genuinely BAND-COLLIDE with
+    the committed base doc (probed: a variant with no shared band is no
+    MinHash candidate at all). uKeep (18 replaced tokens at offset 9):
+    32-perm estimate 0.594 (>= 0.5 would say drop) but exact J = 0.487
+    (< 0.5) — must SURVIVE. uDrop (17 replaced at offset 0): estimate
+    0.625, exact J = 0.547 — dropped."""
     wd = str(tmp_path / "wd")
     schema = "url string, warc_ts timestamp, text string"
     base = [f"tok{i}" for i in range(60)]
@@ -183,7 +183,7 @@ def test_streaming_borderline_estimate_reverified_exactly(spark, tmp_path):
     )
     # estimate 0.594 says drop, exact 0.487 under threshold -> keep
     sd.process_batch(spark.createDataFrame([("uKeep", None, keep_txt)], schema), 1)
-    # estimate 0.625 borderline, exact 0.547 over threshold -> drop
+    # estimate 0.625, exact 0.547 over threshold -> drop
     sd.process_batch(spark.createDataFrame([("uDrop", None, drop_txt)], schema), 2)
     urls = {r["url"] for r in spark.read.parquet(sd.out_path).collect()}
     assert urls == {"uA", "uKeep"}, urls
@@ -265,10 +265,11 @@ def test_streaming_inbatch_containment_and_permutation_dedup(spark, tmp_path):
     assert urls == {"u1", "u3"}, urls
 
 
-def test_streaming_lineage_counts_borderline_flips(spark, tmp_path):
-    """r03 verdict #7: the lineage table records estimate-band decisions —
-    a borderline pair whose exact re-verify FLIPS the estimate's call
-    increments mh_borderline_flipped; one that agrees does not."""
+def test_streaming_lineage_counts_per_channel(spark, tmp_path):
+    """r03 verdict #7: the lineage table records each channel's corpus
+    candidates and the drops the edge rule makes on them — a MinHash pair
+    whose estimate says drop but whose exact Jaccard is under the pass
+    mark counts as a candidate, not a drop."""
     wd = str(tmp_path / "wd")
     schema = "url string, warc_ts timestamp, text string"
     base = [f"tok{i}" for i in range(60)]
@@ -278,21 +279,19 @@ def test_streaming_lineage_counts_borderline_flips(spark, tmp_path):
     sd.process_batch(
         spark.createDataFrame([("uA", None, " ".join(base))], schema), 0
     )
-    # estimate 0.594 >= t says drop, exact 0.487 < t says keep -> flipped
+    # estimate 0.594 >= t says drop, exact 0.487 < t keeps it
     sd.process_batch(spark.createDataFrame([("uKeep", None, keep_txt)], schema), 1)
-    # estimate 0.625 says drop, exact 0.547 >= t agrees -> not flipped
+    # estimate 0.625, exact 0.547 >= t drops it
     sd.process_batch(spark.createDataFrame([("uDrop", None, drop_txt)], schema), 2)
     lin = {
         r["batch_id"]: r
         for r in spark.read.parquet(sd.lineage_path).collect()
     }
-    assert lin[1]["mh_borderline"] == 1
-    assert lin[1]["mh_borderline_drop"] == 0
-    assert lin[1]["mh_borderline_flipped"] == 1
+    assert lin[1]["mh_candidates"] == 1
+    assert lin[1]["mh_drop"] == 0
     assert lin[1]["n_survivors"] == 1
-    assert lin[2]["mh_borderline"] == 1
-    assert lin[2]["mh_borderline_drop"] == 1
-    assert lin[2]["mh_borderline_flipped"] == 0
+    assert lin[2]["mh_candidates"] == 1
+    assert lin[2]["mh_drop"] == 1
     assert lin[2]["n_survivors"] == 0
 
 
@@ -300,10 +299,10 @@ def test_streaming_resume_after_schema_upgrade(spark, tmp_path):
     """r04 advice #1 (medium): a workdir committed by the pre-simhash /
     pre-kb code version must resume without AnalysisException — index
     reads enforce the EXPECTED schema, so legacy rows surface the missing
-    columns (signature, simhash, kb) as NULL. Legacy docs still dedup via
-    the channels their columns support (exact fp anti-join); their null
-    signatures/simhashes make them invisible to the estimate channels —
-    kept, never corrupted."""
+    columns (simhash, kb) as NULL. Legacy docs still dedup via the
+    channels their columns support (exact fp anti-join); a null simhash
+    and no band or winnow rows keep them out of the corpus probe — kept,
+    never corrupted."""
     from entity_deduplication_hack_main_spark.functions import textstats
 
     wd = str(tmp_path / "wd")
@@ -551,31 +550,6 @@ def test_streaming_holdout_ngram_channel(spark, tmp_path):
     assert sum(r["n_contaminated"] for r in lin) == 0  # whole-doc channels miss it
     idx = spark.read.parquet(sd.index_path)
     assert idx.where(idx.id == "uQuote").count() == 0
-
-
-def test_streaming_holdout_exact_only_path(spark, tmp_path):
-    """near_dup=False: the fingerprint channel still decontaminates, and
-    the drop is recorded in lineage (the audit promise holds on BOTH
-    paths)."""
-    wd = str(tmp_path / "wd")
-    schema = "url string, warc_ts timestamp, text string"
-    bench_doc = " ".join(f"eval{i}" for i in range(80))
-    holdout = spark.createDataFrame([("h1", None, bench_doc)], schema)
-    sd = StreamingDedup(
-        spark, wd, config=_sd_config(), near_dup=False, holdout=holdout
-    )
-    sd.process_batch(
-        spark.createDataFrame(
-            [("uExact", None, bench_doc), ("uClean", None, "fresh words here")],
-            schema,
-        ),
-        0,
-    )
-    urls = {r["url"] for r in spark.read.parquet(sd.out_path).collect()}
-    assert urls == {"uClean"}
-    lin = spark.read.parquet(sd.lineage_path).collect()
-    assert sum(r["n_contaminated"] for r in lin) == 1
-    assert sum(r["n_contaminated_ngram"] for r in lin) == 0
 
 
 def test_streaming_state_compaction(spark, tmp_path):
@@ -863,16 +837,16 @@ def test_streaming_simhash_cap_is_the_batch_constant(spark, tmp_path,
 
 def test_streaming_one_exact_reverify_per_batch(spark, tmp_path, monkeypatch,
                                                 two_batches):
-    """Borderline MinHash pairs and winnow pairs share one exact
-    re-verify per near-dup batch."""
+    """Every channel's corpus pairs share one exact measurement per
+    batch."""
     calls = []
-    measure = StreamingDedup._exact_pair_measures
+    measure = StreamingDedup._corpus_measures
 
     def spy(self, *args):
-        calls.append(args[1])  # the batch id
+        calls.append(args[2])  # the batch id
         return measure(self, *args)
 
-    monkeypatch.setattr(StreamingDedup, "_exact_pair_measures", spy)
+    monkeypatch.setattr(StreamingDedup, "_corpus_measures", spy)
     sd = StreamingDedup(spark, str(tmp_path / "wd"), config=_sd_config())
     lin = _run(spark, sd, two_batches)
     assert calls == [0, 1]

@@ -166,6 +166,30 @@ def test_streaming_batch_keeps_one_doc_per_pipeline_cluster(
     assert Counter(r[0] for r in kept) == Counter(r[0] for r in reps)
 
 
+def test_streaming_two_batches_agree_with_pipeline_edges(
+    spark, docs, result, tmp_path
+):
+    """Cross-batch drift guard: the corpus streamed as two micro-batches
+    (the lower and upper half of the ids) keeps no doc with a pipeline
+    edge to a kept doc of the other batch, and drops only docs with at
+    least one pipeline edge. A split by ``doc_id % 2`` would test nothing
+    here: a near-copy's original is ``(id * corpus._KNUTH) % n_orig``, an
+    even ``n_orig`` keeps the copy's parity, so both land in one batch."""
+    half = N_DOCS // 2
+    sd = StreamingDedup(spark, str(tmp_path / "wd"), id_col="doc_id")
+    sd.process_batch(docs.where(F.col("doc_id") < half), 0)
+    sd.process_batch(docs.where(F.col("doc_id") >= half), 1)
+    out = spark.read.parquet(sd.out_path)
+    kept = {r[0] for r in out.select("doc_id").collect()}
+    edges = [tuple(r) for r in result.edges.collect()]
+    split = [(a, b) for a, b in edges if (a < half) != (b < half)]
+    assert split  # the corpus decision has pairs to decide
+    assert [(a, b) for a, b in split if a in kept and b in kept] == []
+    linked = {i for e in edges for i in e}
+    all_ids = {r[0] for r in docs.select("doc_id").collect()}
+    assert all_ids - kept <= linked
+
+
 def _lineage_rows(com):
     return sorted(
         (tuple(r) for r in com.lineage().drop("committed_at").collect()),

@@ -123,9 +123,14 @@ def test_decontaminate_near_channel_plan_one_intersection(spark):
 
 
 def test_streaming_exact_measures_one_intersection(spark, tmp_path):
-    """The streaming exact re-verify keeps its own empty-set convention
-    (1.0 where batch verify says 0.0) on one intersection per pair."""
+    """The streaming corpus decision measures its pairs exactly as batch
+    ``verify_pairs_full`` does, on one intersection per pair — also the
+    pair whose batch and committed ids are equal (a recrawl of one url
+    with changed text), which one shared payload could not tell apart."""
     from entity_deduplication_hack_main_spark.functions import represent
+    from entity_deduplication_hack_main_spark.operators.candidates import (
+        CHANNELS,
+    )
     from entity_deduplication_hack_main_spark.streaming.ingest import (
         StreamingDedup,
     )
@@ -133,37 +138,50 @@ def test_streaming_exact_measures_one_intersection(spark, tmp_path):
     sd = StreamingDedup(spark, str(tmp_path), CFG, id_col="url")
     words = "one two three four five six seven eight nine ten".split()
     old = spark.createDataFrame(
-        [("o1", " ".join(words)), ("o2", "zz yy xx ww vv")],
+        [("o1", " ".join(words)), ("o2", "zz yy xx ww vv"),
+         ("r", " ".join(words[:8]))],
         "url string, text string",
     ).coalesce(1)
     old.withColumn("batch_id", F.lit(0).cast("bigint")).write.parquet(
         sd.out_path
     )
-    olds = {
-        r["id"]: r["shingle_set"]
-        for r in represent.with_representation(old, CFG, "url", "text")
-        .select("id", "shingle_set")
-        .collect()
-    }
-    news = {
-        "n1": olds["o1"][:-2] + [12345],  # unequal size, partial overlap
-        "n2": [],  # the empty-set convention: containment 1.0
-        "n3": olds["o2"],  # identical
-        "n4": [12345],  # disjoint
-    }
-    rows = [("n1", "o1"), ("n2", "o1"), ("n3", "o2"), ("n4", "o2")]
-    pairs = spark.createDataFrame(
-        [(n, o, news[n], n.upper()) for n, o in rows],
-        "id string, old_id string, shingle_set array<bigint>, tag string",
+    new = spark.createDataFrame(
+        [("n1", " ".join(words[:-1] + ["eleven"])),  # partial overlap
+         ("n3", "zz yy xx ww vv"),  # identical
+         ("n4", "alpha beta gamma delta"),  # disjoint, under k tokens
+         ("r", " ".join(words[2:]))],  # the committed id "r", new text
+        "url string, text string",
     )
-    df = sd._exact_pair_measures(pairs, batch_id=1, id_type="string")
-    assert df.columns == ["id", "old_id", "tag", "ex_jaccard", "ex_containment"]
-    assert _intersections_and_unions(df) == (1, 0)
-    want = Counter()
-    for n, o in rows:
-        a, b = set(news[n]), set(olds[o])
-        u, s = len(a | b), min(len(a), len(b))
-        want[(n, o, n.upper(), len(a & b) / u if u else 1.0,
-              len(a & b) / s if s else 1.0)] += 1
-    assert Counter(map(tuple, df.collect())) == want
-    assert ("n2", "o1", "N2", 0.0, 1.0) in want
+    kept = represent.with_representation(new, CFG, "url", "text")
+    rows = [("n1", "o1", True, False, False), ("n3", "o2", False, True, False),
+            ("n4", "o2", False, False, True), ("r", "r", True, False, True),
+            ("n1", "r", False, True, False)]
+    pairs = spark.createDataFrame(
+        rows,
+        "id string, old_id string, "
+        + ", ".join(f"{c} boolean" for c in CHANNELS),
+    )
+    got = sd._corpus_measures(kept, pairs, batch_id=1, id_type="string")
+    assert got.columns == [
+        "id1", "id2", *CHANNELS, "jaccard", "dup_type", "status", "hamming",
+        "containment",
+    ]
+    assert _intersections_and_unions(got) == (1, 0)
+    # batch verify over one payload: committed ids prefixed to stay apart
+    tag = F.concat(F.lit("old:"), F.col("id"))
+    olds = represent.with_representation(old, CFG, "url", "text")
+    ref = verify.verify_pairs_full(
+        pairs.select(
+            F.col("id").alias("id1"),
+            F.concat(F.lit("old:"), "old_id").alias("id2"),
+        ),
+        kept.unionByName(olds.withColumn("id", tag)),
+        CFG,
+    )
+    flags = {(r[0], r[1]): r[2:] for r in rows}
+    want = Counter(
+        (r[0], r[1][4:], *flags[(r[0], r[1][4:])], *r[2:])
+        for r in ref.collect()
+    )
+    assert len(want) == len(rows)
+    assert Counter(map(tuple, got.collect())) == want
